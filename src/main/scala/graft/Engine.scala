@@ -31,9 +31,9 @@ object Engine {
 
   /** Per-path schema memo (same discipline as SparkEntry.readTable): every
     * schemaless `spark.read.parquet` schedules a footer-inference job, and
-    * the index constructors re-read the same immutable corpus tables. The
-    * memo survives session restarts deliberately — a StructType is not bound
-    * to a session, and the driver contract fixes each path's schema.
+    * the index constructors re-read the same immutable corpus tables.
+    * [[clearCaches]] drops it, so a path rewritten with a new schema is
+    * re-inferred instead of silently read with the old columns.
     */
   private val schemaCache =
     scala.collection.concurrent.TrieMap[String, org.apache.spark.sql.types.StructType]()
@@ -43,10 +43,14 @@ object Engine {
       .parquet(path)
 
   /** Drop all cached indexes (required between SparkSession restarts —
-    * cached plans are bound to their session).
+    * cached plans are bound to their session) and every per-path schema
+    * memo.
     */
   def clearCaches(): Unit = {
     cache.clear()
+    schemaCache.clear()
+    SparkEntry.clearSchemaCache()
+    SegmentStore.clearSchemaCache()
     segCache.clear()
     segDirCache.clear()
     evCache.clear()
@@ -67,11 +71,12 @@ object Engine {
       k: Int = 10, skip: Int = 0, defaultAnd: Boolean = false): DataFrame = {
     val s = new Searcher(documentsIndex(spark, sfDir),
       SearchOptions(limit = k, skip = skip, defaultOperatorAnd = defaultAnd))
-    s.search(q).select(
-      col("docId").as("doc_id"),
-      round(col("score"), 4).as("score_r"),
-      col("rank").cast("long").as("rank"))
+    oracleShape(s.search(q))
   }
+
+  private def oracleShape(ranked: DataFrame): DataFrame =
+    ranked.select(col("docId").as("doc_id"), round(col("score"), 4).as("score_r"),
+      col("rank").cast("long").as("rank"))
 
   /** events.parquet index: event_type → STRING term field, plus a derived
     * `day` doc-value (date_trunc of ts) for typed date point/range queries —
@@ -91,11 +96,7 @@ object Engine {
 
   /** Top-k over the events index, same oracle-comparable shape as [[topk]]. */
   def topkEvents(spark: SparkSession, sfDir: String, q: String, k: Int = 10): DataFrame = {
-    val s = new Searcher(eventsIndex(spark, sfDir), SearchOptions(limit = k))
-    s.search(q).select(
-      col("docId").as("doc_id"),
-      round(col("score"), 4).as("score_r"),
-      col("rank").cast("long").as("rank"))
+    oracleShape(new Searcher(eventsIndex(spark, sfDir), SearchOptions(limit = k)).search(q))
   }
 
   // ---- compressed segment (WAND) path ---------------------------------
@@ -134,8 +135,6 @@ object Engine {
     val s = new SegmentSearcher(segmentIndex(spark, sfDir), SearchOptions(limit = k))
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("score").desc, col("docId").asc)
-    s.search(q)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .select(col("docId").as("doc_id"), round(col("score"), 4).as("score_r"), col("rank"))
+    oracleShape(s.search(q).withColumn("rank", row_number().over(w).cast("long")))
   }
 }

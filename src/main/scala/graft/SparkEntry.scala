@@ -22,6 +22,9 @@ object SparkEntry {
   private def searcher(s: SparkSession, dir: String, opts: SearchOptions = SearchOptions(limit = 10)): Searcher =
     new Searcher(Engine.documentsIndex(s, dir), opts)
 
+  private def segSearcher(s: SparkSession, dir: String, opts: SearchOptions): graft.index.SegmentSearcher =
+    new graft.index.SegmentSearcher(Engine.segmentIndex(s, dir), opts)
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // §2.6 term / boolean / phrase / field queries, BM25-scored top-k
@@ -208,15 +211,13 @@ object SparkEntry {
     // segment-path envelope parity (round 4): field sort + include_fields
     // over the stored sidecar (reference DatabaseIndexer.java:517-633)
     "seg_sort" -> ((s, d) =>
-      new graft.index.SegmentSearcher(Engine.segmentIndex(s, d),
-        SearchOptions(limit = 10, sort = QueryParser.parseSort("/source")))
+      segSearcher(s, d, SearchOptions(limit = 10, sort = QueryParser.parseSort("/source")))
         .searchEnvelope("dup")
         .select(col("docId").as("doc_id"), round(col("score"), 4).as("score_r"),
           col("sort_0").as("source"), col("rank").cast("long").as("rank"))),
     // typed sort + sort_order on the segment path (stored-sidecar join)
     "seg_sort_typed" -> ((s, d) =>
-      new graft.index.SegmentSearcher(Engine.segmentIndex(s, d),
-        SearchOptions(limit = 10, sort = QueryParser.parseSort("\\n_chars<int>")))
+      segSearcher(s, d, SearchOptions(limit = 10, sort = QueryParser.parseSort("\\n_chars<int>")))
         .searchEnvelope("dup")
         .select(col("docId").as("doc_id"), round(col("score"), 4).as("score_r"),
           concat_ws(",", col("sort_order")).as("sort_order"),
@@ -225,8 +226,7 @@ object SparkEntry {
     // each shard's by-score top-k (VERDICT r4 wrong #1 — this gate fails
     // against the pre-round-5 pruned base)
     "seg_sort_doc" -> ((s, d) =>
-      new graft.index.SegmentSearcher(Engine.segmentIndex(s, d),
-        SearchOptions(limit = 10, sort = QueryParser.parseSort("/_doc")))
+      segSearcher(s, d, SearchOptions(limit = 10, sort = QueryParser.parseSort("/_doc")))
         .searchEnvelope("dup")
         .select(col("docId").as("doc_id"), round(col("score"), 4).as("score_r"),
           col("rank").cast("long").as("rank"))),
@@ -234,26 +234,24 @@ object SparkEntry {
     // VERDICT r4 missing #3 — a serving tier on the 100 TB path can batch
     // comma-separated queries, reference DatabaseIndexer.java:476,689-691)
     "seg_multi" -> ((s, d) =>
-      new graft.index.SegmentSearcher(Engine.segmentIndex(s, d), SearchOptions(limit = 10))
+      segSearcher(s, d, SearchOptions(limit = 10))
         .multiSearch("dup,spark AND merge")
         .select(col("docId").as("doc_id"), round(col("score"), 4).as("score_r"),
           col("rank").cast("long").as("rank"), col("qid").cast("int").as("qid"))),
     "seg_df" -> ((s, d) => {
       import s.implicits._
-      new graft.index.SegmentSearcher(Engine.segmentIndex(s, d), SearchOptions(limit = 10))
+      segSearcher(s, d, SearchOptions(limit = 10))
         .rewriteDebug("spark merge").toSeq
         .map { case ((_, term), n) => (term, n) }
         .toDF("term", "df")
     }),
     "seg_include" -> ((s, d) =>
-      new graft.index.SegmentSearcher(Engine.segmentIndex(s, d),
-        SearchOptions(limit = 5, includeFields = Seq("text")))
+      segSearcher(s, d, SearchOptions(limit = 5, includeFields = Seq("text")))
         .searchEnvelope("dup")
         .select(col("docId").as("doc_id"), round(col("score"), 4).as("score_r"),
           col("rank").cast("long").as("rank"), col("text"))),
     "seg_highlight" -> ((s, d) =>
-      new graft.index.SegmentSearcher(Engine.segmentIndex(s, d),
-        SearchOptions(limit = 5, highlights = 2, highlightLength = 60))
+      segSearcher(s, d, SearchOptions(limit = 5, highlights = 2, highlightLength = 60))
         .searchEnvelope("spark merge")
         .select(col("docId").as("doc_id"), round(col("score"), 4).as("score_r"),
           concat_ws(" … ", col("highlights")).as("highlights"))),
@@ -473,6 +471,9 @@ object SparkEntry {
     */
   private val schemaCache =
     scala.collection.concurrent.TrieMap[String, org.apache.spark.sql.types.StructType]()
+
+  /** Forget every memoized schema (called by `Engine.clearCaches`). */
+  private[graft] def clearSchemaCache(): Unit = schemaCache.clear()
 
   private def readTable(s: SparkSession, path: String): DataFrame =
     s.read.schema(schemaCache.getOrElseUpdate(path, s.read.parquet(path).schema)).parquet(path)

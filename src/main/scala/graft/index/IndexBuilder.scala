@@ -17,7 +17,7 @@ final case class TextIndex(
     termStats: Dataset[TermStats],
     fieldStatsFn: () => Map[String, FieldStats],
     docIdCol: String,
-    fields: Seq[FieldDef]) {
+    fields: Seq[FieldDef]) extends SearchableIndex {
 
   /** Per-field corpus stats, computed on FIRST use (round 6): a doc-value
     * query (typed point/range over the stored table) touches neither
@@ -33,13 +33,6 @@ final case class TextIndex(
     */
   @transient lazy val statsCache: LruCache[(String, String), Option[TermStats]] =
     new LruCache(65536)
-
-  def analyzerFor(field: String): graft.analysis.Analyzer =
-    fields.collectFirst { case FieldDef(`field`, _, TextField(a), _) => a }
-      .getOrElse(graft.analysis.Analyzers.Keyword)
-
-  def isTextField(field: String): Boolean =
-    fields.exists(f => f.indexField == field && f.kind.isInstanceOf[TextField])
 
   /** Pin the hot tables in memory for repeated queries (search service mode).
     *

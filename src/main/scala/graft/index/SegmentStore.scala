@@ -1147,6 +1147,9 @@ object SegmentStore {
   private val inferredSchemaCache =
     scala.collection.concurrent.TrieMap[String, org.apache.spark.sql.types.StructType]()
 
+  /** Forget every inferred schema (called by `Engine.clearCaches`). */
+  private[graft] def clearSchemaCache(): Unit = inferredSchemaCache.clear()
+
   private def readInferred(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(
       inferredSchemaCache.getOrElseUpdate(path, spark.read.parquet(path).schema)).parquet(path)
@@ -1200,7 +1203,7 @@ final class SegmentIndex(
       * typed point/range predicates, field-sort keys, and include_fields
       * on the segment path. None when the build didn't request it.
       */
-    val stored: Option[DataFrame] = None) {
+    val stored: Option[DataFrame] = None) extends SearchableIndex {
 
   /** Driver-side term-stats memo (see TextIndex.statsCache); LRU-bounded —
     * an open-ended query vocabulary must not grow the driver map forever.

@@ -31,11 +31,10 @@ final case class Posting(
 final case class TermStats(field: String, term: String, df: Long, cf: Long)
 
 /** Driver-side lookup of a query's term stats against a termStats dataset,
-  * memoized through an [[LruCache]] — ONE definition shared by the
-  * DataFrame and segment paths so their cache semantics can't diverge
-  * (the same single-kernel rule as TermExpansion/PhraseMatch). Bounded by
-  * query size; the same shape as Lucene resolving TermStates before
-  * scoring.
+  * memoized through an [[LruCache]] — called only by the shared query
+  * planner ([[graft.query.QueryFrontEnd.plan]]), so both engines weight
+  * terms from the same cache. Bounded by query size; the same shape as
+  * Lucene resolving TermStates before scoring.
   */
 object StatsLookup {
   /** Snapshot the cache ONCE; answer each key from the snapshot or the
@@ -70,6 +69,17 @@ object StatsLookup {
       }
     }.toMap
   }
+}
+
+/** What the shared query front end ([[graft.query.QueryFrontEnd]]) reads
+  * from either engine's index: the field spec, the term dictionary with its
+  * driver-side memo, and the per-field BM25 stats.
+  */
+trait SearchableIndex {
+  def fields: Seq[FieldDef]
+  def termStats: org.apache.spark.sql.Dataset[TermStats]
+  def statsCache: LruCache[(String, String), Option[TermStats]]
+  def fieldStats: Map[String, FieldStats]
 }
 
 /** Per-field corpus statistics for BM25: number of docs with the field,

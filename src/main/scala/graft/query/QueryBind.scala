@@ -2,8 +2,8 @@ package graft.query
 
 import graft.analysis.Analyzer
 
-/** Query-time analysis binding, shared by the DataFrame and segment
-  * executors (and the test oracle): TEXT-field terms run through the field's
+/** Query-time analysis binding, run by the shared [[QueryFrontEnd]] for
+  * both executors: TEXT-field terms run through the field's
   * analyzer (stop words drop the clause — Lucene's parser returns null),
   * STRING fields match exactly, multi-term patterns lowercase on TEXT
   * fields (reference `lucene.lowercaseExpandedTerms`,

@@ -3,10 +3,11 @@ package graft.query
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.index.{IndexBuilder, TextIndex}
+import graft.index._
 
-/** Executes a parsed [[Query]] against a [[TextIndex]] as declarative
-  * Catalyst plans — the Spark-first replacement for the reference's
+/** Executes a query against a [[TextIndex]] as declarative Catalyst plans,
+  * lowered from the shared front end's [[SQ]] plan ([[QueryFrontEnd]]) —
+  * the Spark-first replacement for the reference's
   * `IndexSearcher.search(q, skip+limit)` call path
   * (/root/reference/src/main/java/com/github/rnewson/couchdb/lucene/DatabaseIndexer.java:531-535).
   *
@@ -15,9 +16,10 @@ import graft.index.{IndexBuilder, TextIndex}
   *                      as a codegen'd column expression with idf/avgdl inlined
   *                      as literals (query-term stats are driver-collected,
   *                      like Lucene's TermStates lookup — a handful of rows)
-  *  - boolean         → ONE shuffle: union of clause frames, groupBy(docId)
-  *                      summing scores and counting satisfied MUSTs; MUST_NOT
-  *                      via left_anti join
+  *  - boolean         → rarest-first broadcast join of the MUST clauses with
+  *                      SHOULDs left-joined (or ONE shuffle: union of clause
+  *                      frames, groupBy(docId) counting satisfied MUSTs);
+  *                      MUST_NOT via left_anti join
   *  - phrase          → n-way docId equi-join of the terms' postings + a
   *                      higher-order array expression counting consecutive
   *                      positions (positional join)
@@ -37,22 +39,20 @@ final class Searcher(index: TextIndex, opts: SearchOptions = SearchOptions()) {
 
   private val spark = index.docs.sparkSession
   private def docIdCol = index.docIdCol
+  private val frontEnd = new QueryFrontEnd(index, opts)
 
   // ---------------- public API ----------------------------------------
 
-  def parse(q: String): Query = {
-    val raw = new QueryParser(opts.defaultField, opts.defaultOperatorAnd, opts.allowLeadingWildcard).parse(q)
-    bind(raw)
-  }
+  def parse(q: String): Query = frontEnd.parse(q)
 
   /** (docId, score) frame for a query string. */
-  def scored(q: String): DataFrame = exec(parse(q))
+  def scored(q: String): DataFrame = lower(frontEnd.plan(parse(q)))
 
   /** Top-k envelope: rank (1-based, after skip), docId, score — ties broken
     * by docId asc (Lucene tie-break). Extra stored fields joined when
     * requested.
     */
-  def search(q: String): DataFrame = searchFrom(parse(q), None)
+  def search(q: String): DataFrame = searchFrom(q, None)
 
   /** Top-k envelope AND total_rows from ONE scoring pass — the reference
     * reads `totalHits` off the same collector that gathered the top docs
@@ -68,78 +68,19 @@ final class Searcher(index: TextIndex, opts: SearchOptions = SearchOptions()) {
     */
   def searchWithTotal(q: String): (DataFrame, org.apache.spark.sql.Observation) = {
     val obs = org.apache.spark.sql.Observation()
-    (searchFrom(parse(q), Some(obs)), obs)
+    (searchFrom(q, Some(obs)), obs)
   }
 
-  private def searchFrom(ast: Query, totalObs: Option[org.apache.spark.sql.Observation]): DataFrame = {
-    val hits0 = exec(ast)
-    val hits = totalObs match {
-      case Some(obs) => hits0.observe(obs, count(lit(1)).as("total_rows"))
-      case None => hits0
-    }
-    val k = opts.skip + opts.limit
-    // Field sort joins sort keys from the doc table (aliased sort_i to avoid
-    // collisions); scores still computed, un-normalized (reference
-    // DatabaseIndexer.java:594-608). Default sort: score desc, docId asc
-    // (Lucene tie-break).
-    val sortCols = Searcher.sortColumns(opts.sort)
-    val ext = Searcher.externalSorts(opts.sort)
-    val prepared =
-      if (ext.isEmpty) hits
-      else hits.join(
-        index.docs.select(col(docIdCol).cast("long").as("docId") +:
-          Searcher.sortSideCols(ext): _*),
-        Seq("docId"))
-    // skip/limit pagination (reference DatabaseIndexer.java:515-543):
-    // fetch skip+limit via TakeOrderedAndProject, then window the tiny
-    // (≤ skip+limit row) result locally to drop the first `skip`.
-    val ordered = prepared.orderBy(sortCols: _*).limit(k)
-    val w = org.apache.spark.sql.expressions.Window.orderBy(sortCols: _*)
-    val ranked0 = ordered.withColumn("rank", row_number().over(w)).filter(col("rank") > opts.skip)
-    // per-row sort_order — the reference returns each FieldDoc's sort key
-    // values when the search was field-sorted (DatabaseIndexer.java:597-608)
-    val ranked =
-      if (opts.sort.isEmpty) ranked0
-      else ranked0.withColumn("sort_order", Searcher.sortOrderCol(opts.sort))
-    val withDocs =
-      if (opts.includeDocs || opts.includeFields.nonEmpty) {
-        // include_docs fetch-back = broadcast equi-join of the ≤k hit ids
-        // against the stored table (reference DatabaseIndexer.java:609-633)
-        val cols: Seq[Column] =
-          if (opts.includeFields.nonEmpty) col(docIdCol) +: opts.includeFields.map(col)
-          else index.docs.columns.toSeq.map(col)
-        val docs = index.docs.select(cols: _*).withColumnRenamed(docIdCol, "docId")
-        docs.join(broadcast(ranked), Seq("docId"), "inner")
-      } else ranked
-    if (opts.highlights > 0) addHighlights(withDocs, ast) else withDocs
-  }
-
-  /** ?highlights=n: best fragments of the default text field per hit,
-    * computed over the ≤k result rows (reference DatabaseIndexer.java:512-513).
+  /** The shared envelope over this engine's match frame (every match is
+    * scored, so the exhaustive flag changes nothing) and the docs table.
     */
-  private def addHighlights(result: DataFrame, ast: Query): DataFrame = {
-    val srcColOpt = index.fields.collectFirst {
-      case graft.index.FieldDef(f, src, _: graft.index.TextField, _) if f == opts.defaultField => src
-    }
-    srcColOpt match {
-      case None => result
-      case Some(srcCol) =>
-        val terms = collectTerms(ast).filter(_._1 == opts.defaultField).map(_._2).distinct
-        val withText =
-          if (result.columns.contains(srcCol)) result
-          else result.join(
-            broadcast(index.docs.select(col(docIdCol).cast("long").as("docId"), col(srcCol))),
-            Seq("docId"))
-        val n = opts.highlights
-        val len = opts.highlightLength
-        val outSchema = withText.schema
-          .add("highlights", org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StringType))
-        val textIdx = withText.schema.fieldIndex(srcCol)
-        withText.map { row =>
-          val frags = Highlighter.fragments(row.getString(textIdx), terms, n, len)
-          org.apache.spark.sql.Row.fromSeq(row.toSeq :+ frags)
-        }(org.apache.spark.sql.Encoders.row(outSchema))
-    }
+  private def searchFrom(q: String, totalObs: Option[org.apache.spark.sql.Observation]): DataFrame = {
+    val p = frontEnd.plan(parse(q))
+    val hits = lower(p)
+    frontEnd.envelope(p,
+      _ => totalObs.fold(hits)(obs => hits.observe(obs, count(lit(1)).as("total_rows"))),
+      _ => index.docs.select(index.docs.columns.toSeq.map(c =>
+        if (c == docIdCol) col(c).cast("long").as("docId") else col(c)): _*))
   }
 
   /** Total matching docs — reference `total_rows` (DatabaseIndexer.java:638).
@@ -155,56 +96,14 @@ final class Searcher(index: TextIndex, opts: SearchOptions = SearchOptions()) {
   /** Multi-query batch: comma-separated q, one result frame with a `qid`
     * column (reference DatabaseIndexer.java:476,689-691).
     */
-  def multiSearch(qs: String): DataFrame =
-    {
-      val parts = QueryParser.splitOnCommas(qs)
-      require(parts.nonEmpty, s"multiSearch needs at least one query in '$qs'")
-      parts.zipWithIndex
-        .map { case (q, idx) => search(q).withColumn("qid", lit(idx)) }
-        .reduce(_ unionByName _)
-    }
+  def multiSearch(qs: String): DataFrame = frontEnd.multiSearch(qs, search)
 
   /** Per-term docFreq for a query — reference `?rewrite=true` debug
     * (DatabaseIndexer.java:489-504).
     */
-  def rewriteDebug(q: String): Map[(String, String), Long] = {
-    val terms = collectTerms(parse(q))
-    lookupStats(terms).map { case (k, v) => k -> v.df }
-  }
+  def rewriteDebug(q: String): Map[(String, String), Long] = frontEnd.rewriteDebug(q)
 
-  // ---------------- binding (query-time analysis) ----------------------
-
-  /** Analyze TEXT-field terms with the field's analyzer — or the per-query
-    * `?analyzer=` override (reference DatabaseIndexer.java:477); stop words
-    * drop the clause (Lucene parser returns null). STRING fields match
-    * exactly.
-    */
-  private def bind(q: Query): Query = {
-    val analyzerFor: String => graft.analysis.Analyzer = opts.analyzer match {
-      case Some(name) => _ => graft.analysis.Analyzers.byName(name)
-      case None => index.analyzerFor
-    }
-    QueryBind.bind(q, index.isTextField, analyzerFor)
-  }
-
-  // ---------------- statistics -----------------------------------------
-
-  private def collectTerms(q: Query): Seq[(String, String)] = q match {
-    case TermQ(f, t) => Seq((f, t))
-    case PhraseQ(f, ts, _) => ts.map((f, _))
-    case BoolQ(cs) => cs.flatMap(c => collectTerms(c.q))
-    case BoostQ(inner, _) => collectTerms(inner)
-    case _ => Nil
-  }
-
-  /** Memoized driver-side term-stats lookup — the shared
-    * [[graft.index.StatsLookup]] kernel (one definition with the segment
-    * path).
-    */
-  private def lookupStats(terms: Seq[(String, String)]): Map[(String, String), graft.index.TermStats] =
-    graft.index.StatsLookup.lookup(index.statsCache, index.termStats, terms)
-
-  // ---------------- execution ------------------------------------------
+  // ---------------- lowering -------------------------------------------
 
   /** Score expression with stats inlined as literals — stays inside
     * whole-stage codegen.
@@ -213,284 +112,138 @@ final class Searcher(index: TextIndex, opts: SearchOptions = SearchOptions()) {
     lit(idf) * tf * lit(K1 + 1.0) /
       (tf + lit(K1) * (lit(1.0 - B) + lit(B / avgdl) * dl))
 
-  /** Index-time per-field boost from the spec (FieldDef.boost) — folded
-    * into the term weight, exactly 1.0 when unset (IEEE x*1.0 == x).
-    */
-  private def fieldBoost(f: String): Double =
-    index.fields.find(_.indexField == f).map(_.boost).getOrElse(1.0)
-
   private def emptyHits: DataFrame = {
     import spark.implicits._
     spark.emptyDataset[(Long, Double)].toDF("docId", "score")
   }
 
-  private[query] def exec(q: Query): DataFrame = {
-    val stats = lookupStats(collectTerms(q))
-    execWith(q, stats)
-  }
+  /** Lower a planned query to a (docId, score) Catalyst plan. */
+  private def lower(p: PlannedQuery): DataFrame = {
+    def go(sq: SQ): DataFrame = sq match {
+      case SEmpty => emptyHits
 
-  private def execWith(q: Query, stats: Map[(String, String), graft.index.TermStats]): DataFrame = q match {
-    case EmptyQ => emptyHits
+      case STerm(f, t, w, avgdl) =>
+        index.postings
+          .filter(col("field") === f && col("term") === t)
+          .select(col("docId"), bm25Col(w, avgdl, col("tf").cast("double"), col("dl").cast("double")).as("score"))
 
-    case MatchAllQ =>
-      index.docs.select(col(docIdCol).cast("long").as("docId"), lit(1.0).as("score"))
-
-    case TermQ(f, t) =>
-      stats.get((f, t)) match {
-        case None => emptyHits
-        case Some(st) =>
-          val fs = index.fieldStats(f)
-          val theIdf = IndexBuilder.idf(st.df, fs.docCount) * fieldBoost(f)
-          index.postings
-            .filter(col("field") === f && col("term") === t)
-            .select(col("docId"), bm25Col(theIdf, fs.avgdl, col("tf").cast("double"), col("dl").cast("double")).as("score"))
-      }
-
-    case PhraseQ(f, terms, slop) =>
-      // positional join: intersect the terms' postings on docId, then count
-      // phrase occurrences. Exact phrases stay a codegen'd higher-order
-      // array expression; sloppy phrases evaluate the shared PhraseMatch
-      // kernel over the (few) candidate rows.
-      //
-      // Join order is RAREST-FIRST (df ascending, known on the driver like
-      // Lucene's TermStates) and the rare side is broadcast: every join
-      // streams a bigger posting list past a hash map of the accumulated
-      // (≤ rarest-df-row) result — common terms' postings are never
-      // shuffled. Round 2 joined in phrase order with no hint: two common
-      // terms ⇒ a full n-way shuffle (ft_phrase 10.4 s vs 0.27 s on the
-      // segment path; VERDICT r2).
-      if (terms.exists(t => !stats.contains((f, t)))) return emptyHits
-      val fs = index.fieldStats(f)
-      val sumIdf = terms.map(t => IndexBuilder.idf(stats((f, t)).df, fs.docCount) * fieldBoost(f)).sum
-      val orderIdx = terms.indices.sortBy(i => stats((f, terms(i))).df)
-      val frames = orderIdx.zipWithIndex.map { case (termIdx, joinPos) =>
-        val base = index.postings.filter(col("field") === f && col("term") === terms(termIdx))
-        if (joinPos == 0) base.select(col("docId"), col("positions").as(s"p$termIdx"), col("dl"))
-        else base.select(col("docId"), col("positions").as(s"p$termIdx"))
-      }
-      val rareDf = stats((f, terms(orderIdx.head))).df
-      val joined =
-        if (rareDf <= Searcher.BroadcastDfMax)
-          frames.tail.foldLeft(frames.head)((a, b) => broadcast(a).join(b, Seq("docId")))
-        else frames.reduce((a, b) => a.join(b, Seq("docId")))
-      val withFreq: DataFrame =
-        if (slop <= 0) {
-          // pf = #anchors p with p ∈ p0 and p+i ∈ p_i ∀i ⟺ |∩ (p_i − i)|:
-          // a fold of hash-based array_intersect over shifted positions —
-          // O(Σ|p_i|) per candidate row where the round-3 version probed
-          // array_contains per anchor (O(|p0|·Σ|p_i|), VERDICT r3 wrong#3);
-          // positions are distinct within a posting, so the set semantics
-          // of intersect count anchors exactly
-          val shifted = (1 until terms.length)
-            .map(idx => transform(col(s"p$idx"), p => p - lit(idx)))
-          val anchors = shifted.foldLeft(col("p0"))((acc, arr) => array_intersect(acc, arr))
-          joined.withColumn("pf", size(anchors).cast("double"))
-        } else {
-          val nTerms = terms.length
-          val theSlop = slop
-          val schema = joined.schema
-            .add("pf", org.apache.spark.sql.types.DoubleType, nullable = false)
-          val posIdx = (0 until nTerms).map(i => joined.schema.fieldIndex(s"p$i"))
-          joined.map { row =>
-            val positions = posIdx.map(ix => row.getSeq[Int](ix).toArray).toArray
-            org.apache.spark.sql.Row.fromSeq(
-              row.toSeq :+ PhraseMatch.weightedFreq(positions, theSlop))
-          }(org.apache.spark.sql.Encoders.row(schema))
+      case SPhrase(f, terms, slop, w, avgdl) =>
+        // positional join: intersect the terms' postings on docId, then count
+        // phrase occurrences. Exact phrases stay a codegen'd higher-order
+        // array expression; sloppy phrases evaluate the shared PhraseMatch
+        // kernel over the (few) candidate rows.
+        //
+        // Join order is RAREST-FIRST (df ascending, known on the driver like
+        // Lucene's TermStates) and the rare side is broadcast: every join
+        // streams a bigger posting list past a hash map of the accumulated
+        // (≤ rarest-df-row) result — common terms' postings are never
+        // shuffled. Round 2 joined in phrase order with no hint: two common
+        // terms ⇒ a full n-way shuffle (ft_phrase 10.4 s vs 0.27 s on the
+        // segment path; VERDICT r2).
+        val orderIdx = terms.indices.sortBy(i => p.stats((f, terms(i))).df)
+        val frames = orderIdx.zipWithIndex.map { case (termIdx, joinPos) =>
+          val base = index.postings.filter(col("field") === f && col("term") === terms(termIdx))
+          if (joinPos == 0) base.select(col("docId"), col("positions").as(s"p$termIdx"), col("dl"))
+          else base.select(col("docId"), col("positions").as(s"p$termIdx"))
         }
-      withFreq
-        .filter(col("pf") > 0)
-        .select(col("docId"), bm25Col(sumIdf, fs.avgdl, col("pf"), col("dl").cast("double")).as("score"))
+        val rareDf = p.stats((f, terms(orderIdx.head))).df
+        val joined =
+          if (rareDf <= Searcher.BroadcastDfMax)
+            frames.tail.foldLeft(frames.head)((a, b) => broadcast(a).join(b, Seq("docId")))
+          else frames.reduce((a, b) => a.join(b, Seq("docId")))
+        val withFreq: DataFrame =
+          if (slop <= 0) {
+            // pf = #anchors p with p ∈ p0 and p+i ∈ p_i ∀i ⟺ |∩ (p_i − i)|:
+            // a fold of hash-based array_intersect over shifted positions —
+            // O(Σ|p_i|) per candidate row where the round-3 version probed
+            // array_contains per anchor (O(|p0|·Σ|p_i|), VERDICT r3 wrong#3);
+            // positions are distinct within a posting, so the set semantics
+            // of intersect count anchors exactly
+            val shifted = (1 until terms.length)
+              .map(idx => transform(col(s"p$idx"), p => p - lit(idx)))
+            val anchors = shifted.foldLeft(col("p0"))((acc, arr) => array_intersect(acc, arr))
+            joined.withColumn("pf", size(anchors).cast("double"))
+          } else {
+            val nTerms = terms.length
+            val theSlop = slop
+            val schema = joined.schema
+              .add("pf", org.apache.spark.sql.types.DoubleType, nullable = false)
+            val posIdx = (0 until nTerms).map(i => joined.schema.fieldIndex(s"p$i"))
+            joined.map { row =>
+              val positions = posIdx.map(ix => row.getSeq[Int](ix).toArray).toArray
+              org.apache.spark.sql.Row.fromSeq(
+                row.toSeq :+ PhraseMatch.weightedFreq(positions, theSlop))
+            }(org.apache.spark.sql.Encoders.row(schema))
+          }
+        withFreq
+          .filter(col("pf") > 0)
+          .select(col("docId"), bm25Col(w, avgdl, col("pf"), col("dl").cast("double")).as("score"))
 
-    case BoolQ(clauses) =>
-      val pos = clauses.filter(_.occur != Occur.MustNot)
-      val neg = clauses.filter(_.occur == Occur.MustNot)
-      if (pos.isEmpty) return emptyHits // pure negation matches nothing (Lucene)
-      val musts = pos.zipWithIndex.filter(_._1.occur == Occur.Must)
-      val shoulds = pos.zipWithIndex.filter(_._1.occur == Occur.Should)
-      // MUST conjunctions over term clauses: rarest-first broadcast hash
-      // joins (match set ≤ the rarest term's df, known on the driver) —
-      // the union+groupBy shape shuffled both common terms' full posting
-      // frames (ft_and 5.5 s vs 0.53 s segment path; VERDICT r2). SHOULD
-      // clauses then left-join onto the (small) conjunction,
-      // score-if-present. Falls back to union+groupBy when any MUST isn't
-      // a stats-known term (doc-value predicates, expansions) or there are
-      // no MUSTs at all (a true disjunction needs the union).
-      def mustDf(q: Query): Option[Long] = q match {
-        case TermQ(f, t) => Some(stats.get((f, t)).map(_.df).getOrElse(0L))
-        case _ => None
-      }
-      val mustDfs = musts.map(m => mustDf(m._1.q))
-      val positive =
-        if (musts.nonEmpty && mustDfs.exists(_.isDefined)) {
-          // Round 6: ONE stats-known MUST term is enough to anchor the
-          // rarest-first join — clauses with unknown selectivity (doc-value
-          // predicates, multi-term expansions) join AFTER the known terms,
-          // where the accumulated left side is already ≤ the rarest df. The
-          // old `forall` guard sent every mixed conjunction (typed point/
-          // range AND term) to the union+groupBy fallback: both clause
-          // frames shuffled in full for a match set the rare term had
-          // already bounded.
-          val (known, unknown) = musts.zip(mustDfs).partition(_._2.isDefined)
-          val ordered = (known.sortBy(_._2.get) ++ unknown).map(_._1)
-          val frames = ordered.map { case (c, i) =>
-            execWith(c.q, stats).select(col("docId"), col("score").as(s"s_$i"))
-          }
-          val conj =
-            if (mustDfs.flatten.min <= Searcher.BroadcastDfMax)
-              frames.tail.foldLeft(frames.head)((a, b) => broadcast(a).join(b, Seq("docId")))
-            else frames.reduce((a, b) => a.join(b, Seq("docId")))
-          val withShoulds = shoulds.foldLeft(conj) { case (acc, (c, i)) =>
-            acc.join(execWith(c.q, stats).select(col("docId"), col("score").as(s"s_$i")),
-              Seq("docId"), "left")
-          }
-          // sum in clause order (float-determinism invariant of BoolScorer)
-          val sumExpr = pos.indices.map(i => coalesce(col(s"s_$i"), lit(0.0))).reduce(_ + _)
-          withShoulds.select(col("docId"), sumExpr.as("score"))
-        } else {
-          val numMust = musts.size
-          val frames = pos.zipWithIndex.map { case (c, idx) =>
-            execWith(c.q, stats).select(
-              col("docId"), col("score"),
-              lit(if (c.occur == Occur.Must) 1 else 0).as("isMust"),
-              lit(idx).as("cid"))
-          }
-          var combined = frames.reduce(_ unionByName _)
-            .groupBy(col("docId"))
-            .agg(sum(col("score")).as("score"), sum(col("isMust")).as("mustHits"))
-          if (numMust > 0) combined = combined.filter(col("mustHits") === numMust)
-          combined.select(col("docId"), col("score"))
+      case SBool(musts, shoulds, nots) =>
+        // MUSTs: rarest-first broadcast hash joins anchored by the term
+        // clauses (match set ≤ the rarest df, known on the driver; the
+        // union+groupBy shape shuffled both common terms' full postings,
+        // VERDICT r2), other MUSTs joined after them, SHOULDs left-joined
+        // score-if-present. Without a term MUST the union+groupBy stays (a
+        // true disjunction needs it). s_i is clause i of musts ++ shoulds.
+        val mustDfs = musts.map {
+          case STerm(f, t, _, _) => Some(p.stats((f, t)).df)
+          case _ => None
         }
-      if (neg.isEmpty) positive
-      else {
-        val negUnion = neg.map(c => execWith(c.q, stats).select(col("docId"))).reduce(_ union _)
-        positive.join(negUnion, Seq("docId"), "left_anti")
-      }
+        val positive =
+          if (mustDfs.exists(_.isDefined)) {
+            val (known, unknown) = musts.indices.partition(i => mustDfs(i).isDefined)
+            val frames = (known.sortBy(i => mustDfs(i).get) ++ unknown).map { i =>
+              go(musts(i)).select(col("docId"), col("score").as(s"s_$i"))
+            }
+            val conj =
+              if (mustDfs.flatten.min <= Searcher.BroadcastDfMax)
+                frames.tail.foldLeft(frames.head)((a, b) => broadcast(a).join(b, Seq("docId")))
+              else frames.reduce((a, b) => a.join(b, Seq("docId")))
+            val withShoulds = shoulds.zipWithIndex.foldLeft(conj) { case (acc, (c, j)) =>
+              acc.join(go(c).select(col("docId"), col("score").as(s"s_${musts.length + j}")),
+                Seq("docId"), "left")
+            }
+            // MUST scores, then SHOULD scores: BoolScorer's summation order
+            val sumExpr = (musts ++ shoulds).indices
+              .map(i => coalesce(col(s"s_$i"), lit(0.0))).reduce(_ + _)
+            withShoulds.select(col("docId"), sumExpr.as("score"))
+          } else {
+            val frames = (musts ++ shoulds).zipWithIndex.map { case (c, idx) =>
+              go(c).select(
+                col("docId"), col("score"),
+                lit(if (idx < musts.length) 1 else 0).as("isMust"),
+                lit(idx).as("cid"))
+            }
+            val combined = frames.reduce(_ unionByName _)
+              .groupBy(col("docId"))
+              .agg(sum(col("score")).as("score"), sum(col("isMust")).as("mustHits"))
+            (if (musts.isEmpty) combined else combined.filter(col("mustHits") === musts.length))
+              .select(col("docId"), col("score"))
+          }
+        if (nots.isEmpty) positive
+        else positive.join(nots.map(go(_).select(col("docId"))).reduce(_ union _), Seq("docId"), "left_anti")
 
-    case BoostQ(inner, boost) =>
-      execWith(inner, stats).withColumn("score", col("score") * lit(boost))
+      case SBoost(inner, boost) =>
+        go(inner).withColumn("score", col("score") * lit(boost))
 
-    case mq @ PrefixQ(f, _) => constantScore(f, TermExpansion.predFor(mq))
+      // multi-term expansion → OR of the expanded terms' postings at
+      // constant score 1.0 (Lucene CONSTANT_SCORE rewrite), one pruned scan
+      case SConst(f, terms) =>
+        index.postings
+          .filter(col("field") === f && col("term").isin(terms: _*))
+          .select(col("docId")).distinct()
+          .withColumn("score", lit(1.0))
 
-    case mq @ WildcardQ(f, _) => constantScore(f, TermExpansion.predFor(mq))
-
-    case mq @ FuzzyQ(f, _, _) => constantScore(f, TermExpansion.predFor(mq))
-
-    case mq @ TermRangeQ(f, _, _, _, _) => constantScore(f, TermExpansion.predFor(mq))
-
-    case dv @ (_: NumRangeQ | _: NumTermQ) =>
-      index.docs.filter(Searcher.docValuePred(dv))
-        .select(col(docIdCol).cast("long").as("docId"), lit(1.0).as("score"))
-  }
-
-  /** Multi-term queries: term-dictionary scan → OR of postings at constant
-    * score 1.0 (Lucene CONSTANT_SCORE rewrite). The expansion predicate is
-    * pushed into the distributed termStats scan and capped at
-    * MaxClauseCount (TermExpansion), then pushed back as an isin filter so
-    * the postings scan stays a single pruned pass.
-    */
-  private def constantScore(f: String, termPred: Column): DataFrame = {
-    val expanded = TermExpansion.expand(index.termStats.toDF(), f, termPred)
-    if (expanded.isEmpty) emptyHits
-    else index.postings
-      .filter(col("field") === f && col("term").isin(expanded.toIndexedSeq: _*))
-      .select(col("docId")).distinct()
-      .withColumn("score", lit(1.0))
+      case SDocSet(predId) =>
+        index.docs.filter(p.docPreds(predId))
+          .select(col(docIdCol).cast("long").as("docId"), lit(1.0).as("score"))
+    }
+    go(p.sq)
   }
 }
 
 object Searcher {
-  /** Typed doc-value column: dates compare as epoch millis
-    * (reference FieldType.java:32-53). Shared by the DataFrame path
-    * (over the docs table) and the segment path (over the stored sidecar).
-    */
-  def numCol(f: String, tpe: String): Column =
-    if (tpe == "date") unix_millis(col(f).cast("timestamp")).cast("double")
-    else col(f).cast("double")
-
-  /** Ordering column for a `?sort=/field<type>` key: the typed cast when a
-    * type is given (reference builds a typed SortField,
-    * CustomQueryParser.java:60-63, TypedField.toSortField), the column's
-    * native order otherwise — a string-encoded numeric column sorted
-    * without the cast would silently order lexicographically.
-    */
-  def sortKeyCol(f: String, tpe: Option[String]): Column = tpe match {
-    case None => col(f)
-    case Some(t) => numCol(f, t)
-  }
-
-  /** Per-row `sort_order` rendering of a sort key (reference emits each
-    * FieldDoc's field values, DatabaseIndexer.java:597-608). JSON arrays
-    * are untyped, so the envelope carries the values as strings; integral
-    * types render without a fraction (engine-stable long→string cast).
-    */
-  def sortDisplayCol(f: String, tpe: Option[String]): Column = tpe match {
-    case None => col(f).cast("string")
-    case Some("int") | Some("long") => col(f).cast("long").cast("string")
-    case Some("float") | Some("double") => col(f).cast("double").cast("string")
-    case Some("date") => unix_millis(col(f).cast("timestamp")).cast("string")
-    case Some(other) => throw new IllegalArgumentException(s"unknown sort type <$other>")
-  }
-
-  /** The requested sort's external (non-`_score`/`_doc`) fields with their
-    * positional index — these need sort keys joined from the doc table /
-    * stored sidecar. Shared by both executors.
-    */
-  def externalSorts(sort: Seq[SortField]): Seq[(String, Option[String], Int)] =
-    sort.zipWithIndex.collect {
-      case (SortField(f, tpe, _), i) if f != "_score" && f != "_doc" => (f, tpe, i)
-    }
-
-  /** Join-side columns carrying each external sort's typed ordering key
-    * (`sort_i`) and its envelope rendering (`sortv_i`).
-    */
-  def sortSideCols(ext: Seq[(String, Option[String], Int)]): Seq[Column] =
-    ext.flatMap { case (f, tpe, i) => Seq(
-      sortKeyCol(f, tpe).as(s"sort_$i"),
-      sortDisplayCol(f, tpe).as(s"sortv_$i")) }
-
-  /** Ordering columns for the requested sort, docId tie-break appended
-    * (Lucene's doc tie-break); default is relevance (score desc). ONE
-    * definition for both executors — the ranking contract must be
-    * identical on the DataFrame and segment paths (shared oracles).
-    */
-  def sortColumns(sort: Seq[SortField]): Seq[Column] =
-    if (sort.isEmpty) Seq(col("score").desc, col("docId").asc)
-    else sort.zipWithIndex.map { case (SortField(f, _, asc), i) =>
-      val c = f match {
-        case "_score" => col("score")
-        case "_doc" => col("docId")
-        case _ => col(s"sort_$i")
-      }
-      if (asc) c.asc else c.desc
-    } :+ col("docId").asc
-
-  /** Per-row `sort_order` array — the reference returns each FieldDoc's
-    * sort key values when the search was field-sorted
-    * (DatabaseIndexer.java:597-608). Rendering must match the shared
-    * oracles on both paths.
-    */
-  def sortOrderCol(sort: Seq[SortField]): Column =
-    array(sort.zipWithIndex.map { case (SortField(f, _, _), i) =>
-      f match {
-        case "_score" => col("score").cast("string")
-        case "_doc" => col("docId").cast("string")
-        case _ => col(s"sortv_$i")
-      }
-    }: _*)
-
-  /** Predicate Column for a typed point/range query over doc values. */
-  def docValuePred(q: Query): Column = q match {
-    case NumTermQ(f, tpe, v) => numCol(f, tpe) === v
-    case NumRangeQ(f, tpe, lo, hi, incLo, incHi) =>
-      val c = numCol(f, tpe)
-      Seq(
-        lo.map(v => if (incLo) c >= v else c > v),
-        hi.map(v => if (incHi) c <= v else c < v)).flatten
-        .reduceOption(_ && _).getOrElse(lit(true))
-    case MatchAllQ => lit(true)
-    case other => throw new IllegalArgumentException(s"not a doc-value query: $other")
-  }
-
   /** Largest df for which a posting frame (or the ≤-that-many-row result
     * accumulated from it) is broadcast into hash joins: ~100k rows of
     * (docId, positions[], dl) stays well under Spark's broadcast limits

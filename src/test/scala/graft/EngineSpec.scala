@@ -97,16 +97,37 @@ class EngineSpec extends SparkSpec {
   }
 
   test("highlights: fragments wrap query terms, min length 18, n respected") {
-    val idx = Engine.documentsIndex(spark, sfDir)
-    val s = new Searcher(idx, SearchOptions(limit = 3, highlights = 2, highlightLength = 40))
-    val rows = s.search("spark merge").select("docId", "highlights").collect()
-    assert(rows.nonEmpty)
-    rows.foreach { r =>
-      val frags = r.getSeq[String](1)
-      assert(frags.nonEmpty && frags.length <= 2)
-      assert(frags.exists(f => f.contains("<em>spark</em>") || f.contains("<em>merge</em>")))
-      frags.foreach(f => assert(f.replaceAll("</?em>", "").length >= 18))
+    // both engines take the terms from the shared plan: a multi-term query
+    // highlights its expansions (as Lucene's highlighters rewrite them)
+    val opts = SearchOptions(limit = 3, highlights = 2, highlightLength = 40)
+    val s = new Searcher(Engine.documentsIndex(spark, sfDir), opts)
+    val seg = new SegmentSearcher(Engine.segmentIndex(spark, sfDir), opts)
+    def frags(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[String]] =
+      df.select("docId", "highlights").collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
+    Seq("spark merge" -> Seq("<em>spark</em>", "<em>merge</em>"), "sp*" -> Seq("<em>sp")).foreach {
+      case (q, marks) =>
+        val rows = frags(s.search(q))
+        assert(rows.nonEmpty, s"q=$q")
+        rows.values.foreach { fr =>
+          assert(fr.nonEmpty && fr.length <= 2, s"q=$q")
+          assert(fr.exists(f => marks.exists(f.contains)), s"q=$q: $fr")
+          fr.foreach(f => assert(f.replaceAll("</?em>", "").length >= 18))
+        }
+        assert(frags(seg.searchEnvelope(q)) === rows, s"q=$q")
     }
+  }
+
+  test("clearCaches drops the schema memos: a rewritten table shows its new column") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-schema").toString
+    val path = s"$dir/documents.parquet"
+    val docs = Seq((1L, "alpha beta", "en", "src1")).toDF("doc_id", "text", "lang", "source")
+    docs.write.parquet(path)
+    assert(!Engine.documentsIndex(spark, dir).docs.columns.contains("n_chars"))
+    docs.withColumn("n_chars", lit(10L)).write.mode("overwrite").parquet(path)
+    Engine.clearCaches()
+    assert(Engine.documentsIndex(spark, dir).docs.columns.contains("n_chars"))
+    Engine.clearCaches()
   }
 
   test("highlighter unit behavior") {

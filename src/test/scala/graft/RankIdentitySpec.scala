@@ -20,9 +20,10 @@ class RankIdentitySpec extends SparkSpec {
     FieldDef("role", "role", StringField),
     FieldDef("tool", "tool", StringField))
 
+  lazy val withIds =
+    DocIds.assign(TranscriptGen.transcripts(spark, NumConvs).toDF(), Seq("conv_id", "turn_idx"), "docId", 8)
+
   lazy val (engineIndex, oracle) = {
-    val turns = TranscriptGen.transcripts(spark, NumConvs)
-    val withIds = DocIds.assign(turns.toDF(), Seq("conv_id", "turn_idx"), "docId", 8)
     val idx = IndexBuilder.build(withIds, "docId", Seq(
       FieldDef("default", "text", TextField(Analyzers.Standard)),
       FieldDef("role", "role", StringField),
@@ -61,20 +62,60 @@ class RankIdentitySpec extends SparkSpec {
     "\"hello world\"~2", // ordered sloppy phrase
     "\"paxos simple\"~1") // slop bridges the dropped middle word
 
+  /** Interleaved MUST / SHOULD / MUST_NOT clauses, run over the documents
+    * corpus where all their terms occur: every engine sums MUST scores
+    * before SHOULD scores (BoolScorer's order).
+    */
+  val InterleavedSet: Seq[String] = Seq(
+    "spark +merge dup",
+    "dup -spark merge",
+    "+\"merge batch\" sp*")
+
   private def engineTopK(q: String, k: Int = 10, defaultAnd: Boolean = false): Seq[(Long, Double)] = {
     val s = new Searcher(engineIndex, SearchOptions(limit = k, defaultOperatorAnd = defaultAnd))
     s.search(q).select("docId", "score").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
   }
 
+  /** One corpus under the three scorers: DataFrame path, segment path, oracle. */
+  private final case class Corpus(df: TextIndex, seg: SegmentIndex, oracle: OracleScorer)
+
+  private lazy val transcripts = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-rank-seg").toString
+    SegmentStore.build(withIds, "docId", fields, dir, docsPerShard = 257)
+    Corpus(engineIndex, SegmentStore.open(spark, dir).cached(), oracle)
+  }
+
+  private lazy val documents = {
+    val sfDir = "/root/testdata/sf0.001"
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      .select(col("doc_id"), col("text"), col("lang"), col("source")).collect()
+      .map(r => r.getLong(0) -> Map("default" -> r.getString(1), "lang" -> r.getString(2),
+        "source" -> r.getString(3)).filter(_._2 != null))
+      .toSeq
+    Corpus(Engine.documentsIndex(spark, sfDir), Engine.segmentIndex(spark, sfDir),
+      new OracleScorer(docs, Engine.DocFields))
+  }
+
   test("rank identity: engine == oracle on the reference query set") {
-    QuerySet.foreach { q =>
-      val got = engineTopK(q)
-      val want = oracle.topK(q, 10)
-      assert(got.map(_._1) === want.map(_._1), s"docID mismatch for q=$q\n got=$got\nwant=$want")
-      got.zip(want).foreach { case ((_, gs), (_, ws)) =>
-        assert(math.abs(gs - ws) <= 1e-9 * math.max(1.0, math.abs(ws)), s"score mismatch for q=$q: $gs vs $ws")
+    def round4(hits: Seq[(Long, Double)]): Seq[(Long, Double)] = hits.map { case (d, sc) =>
+      (d, BigDecimal(sc).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
+    }
+    Seq(transcripts -> QuerySet, documents -> InterleavedSet).foreach { case (e, qs) =>
+      qs.foreach { q =>
+        val opts = SearchOptions(limit = 10)
+        val got = new Searcher(e.df, opts).search(q).select("docId", "score").collect()
+          .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+        val want = e.oracle.topK(q, 10)
+        assert(got.map(_._1) === want.map(_._1), s"docID mismatch for q=$q\n got=$got\nwant=$want")
+        got.zip(want).foreach { case ((_, gs), (_, ws)) =>
+          assert(math.abs(gs - ws) <= 1e-9 * math.max(1.0, math.abs(ws)), s"score mismatch for q=$q: $gs vs $ws")
+        }
+        assert(want.nonEmpty, s"query set fixture q=$q matched nothing — fixture broken")
+        // both engines score the one shared plan with one association order
+        val seg = new SegmentSearcher(e.seg, opts).topK(q)
+        assert(seg === got, s"segment path vs DataFrame path for q=$q")
+        assert(round4(seg) === round4(want), s"segment path vs oracle for q=$q")
       }
-      assert(want.nonEmpty, s"query set fixture q=$q matched nothing — fixture broken")
     }
   }
 

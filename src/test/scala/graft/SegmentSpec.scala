@@ -138,6 +138,21 @@ class SegmentSpec extends SparkSpec {
     assert(dvOnly === dfOnly)
   }
 
+  test("doc-value query without the stored sidecar: segment path raises, DataFrame path answers") {
+    val sfDir = "/root/testdata/sf0.001"
+    val q = "n_chars<long>:132 AND dup"
+    val dir = Files.createTempDirectory("graft-seg-nostored").toString
+    SegmentStore.build(spark.read.parquet(s"$sfDir/documents.parquet"), "doc_id",
+      Engine.DocFields, dir, docsPerShard = 128)
+    val e = intercept[UnsupportedOperationException](
+      new SegmentSearcher(SegmentStore.open(spark, dir), SearchOptions(limit = 10)).topK(q))
+    assert(e.getMessage.contains("stored sidecar"), e.getMessage)
+    val want = new SegmentSearcher(Engine.segmentIndex(spark, sfDir), SearchOptions(limit = 10)).topK(q)
+    val got = new Searcher(Engine.documentsIndex(spark, sfDir), SearchOptions(limit = 10)).search(q)
+      .select("docId", "score").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    assert(want.nonEmpty && got === want)
+  }
+
   test("segment envelope: /_doc and ascending _score rank the FULL match set (round 5)") {
     import graft.query.QueryParser
     // VERDICT r4 wrong #1: the pruned per-shard score-top-k base is only
