@@ -16,6 +16,10 @@ import org.apache.spark.sql.SparkSession
   *     `name=secs jobs=J stages=S tasks=T` per rep.
   *   explain <sfDir> <cpus> <outDir> [nameRegex]
   *     write each query's .explain("formatted") to <outDir>/<name>.txt.
+  *
+  * `nameRegex` must match a WHOLE gate name (`String.matches`): `ft_.*`
+  * selects the ft_ gates, `^ft_` selects none. A regex that selects no gate
+  * exits with status 1 before any work.
   */
 object BenchExtra {
 
@@ -73,6 +77,19 @@ object BenchExtra {
     def snapshot: (Int, Int, Long) = (jobs.get(), stages.get(), tasks.get())
   }
 
+  /** The SparkEntry gates whose whole name matches `nameRe`, sorted by name;
+    * exits with status 1 when there are none.
+    */
+  private def selectGates(nameRe: String) = {
+    val names = SparkEntry.queries.toSeq.sortBy(_._1).filter(_._1.matches(nameRe))
+    if (names.isEmpty) {
+      System.err.println(s"[extra] no gate name matches '$nameRe' (the regex must match the " +
+        "whole name, e.g. 'ft_.*')")
+      sys.exit(1)
+    }
+    names
+  }
+
   def main(args: Array[String]): Unit = args.headOption match {
     case Some("build") =>
       // Scaling-gate diagnosis: replicate Bench.buildBench at `cpus` with a
@@ -104,11 +121,11 @@ object BenchExtra {
       val (sfDir, cpus) = (args(1), args(2).toInt)
       val nameRe = if (args.length > 3) args(3) else ".*"
       val reps = if (args.length > 4) args(4).toInt else 1
+      val names = selectGates(nameRe)
       val spark = session(cpus)
       val benchData = relayout(spark, sfDir, cpus)
       val counters = new Counters(verbose = sys.env.get("GRAFT_PROF_JOBS").contains("1"))
       spark.sparkContext.addSparkListener(counters)
-      val names = SparkEntry.queries.toSeq.sortBy(_._1).filter(_._1.matches(nameRe))
       (1 to reps).foreach { rep =>
         names.foreach { case (name, fn) =>
           val (j0, s0, t0) = counters.snapshot
@@ -127,11 +144,11 @@ object BenchExtra {
       spark.stop()
     case Some("explain") =>
       val (sfDir, cpus, outDir) = (args(1), args(2).toInt, args(3))
-      val nameRe = if (args.length > 4) args(4) else ".*"
+      val names = selectGates(if (args.length > 4) args(4) else ".*")
       val spark = session(cpus)
       val benchData = relayout(spark, sfDir, cpus)
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-      SparkEntry.queries.toSeq.sortBy(_._1).filter(_._1.matches(nameRe)).foreach { case (name, fn) =>
+      names.foreach { case (name, fn) =>
         try {
           val df = fn(spark, benchData)
           val plan = df.queryExecution.explainString(

@@ -93,7 +93,9 @@ object IndexBuilder {
     */
   val DlMarker = ""
 
-  /** One corpus scan emitting real postings AND dl marker rows.
+  /** The tokenize input shared by both tokenize passes: the doc id as a
+    * long, then one column per field, plus the indices of multi-valued
+    * STRING fields.
     *
     * Multi-valued sources (ArrayType columns): the reference folds repeated
     * `add()`s of one field into a single multi-valued Lucene field whose
@@ -104,9 +106,8 @@ object IndexBuilder {
     * untouched); STRING fields index each element as an exact term with
     * tf = equal-element count and dl = element count.
     */
-  def tokenizePostingsWithMarkers(docs: DataFrame, docIdCol: String, fields: Seq[FieldDef]): Dataset[Posting] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
+  private def tokenizeInput(
+      docs: DataFrame, docIdCol: String, fields: Seq[FieldDef]): (DataFrame, Set[Int]) = {
     val schema = docs.schema
     def isArraySource(f: FieldDef): Boolean =
       schema.fields.find(_.name == f.source).exists(_.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType])
@@ -123,62 +124,102 @@ object IndexBuilder {
         else array_join(arr, " ") // null elements skipped, like null scalars
       } else col(f.source).cast(StringType)
     }
-    val emptyPos = Array.empty[Int]
-    docs.select(cols: _*).mapPartitions { rows =>
-      // one reusable (term, pos) buffer per partition: no Token objects, no
-      // ArrayBuffer growth, no TimSort scratch in the build's hottest loop
-      // (per-doc allocation was the 4-core scaling limiter — see
-      // analysis.TokenBuffer)
-      val buf = new graft.analysis.TokenBuffer(256)
-      rows.flatMap { row =>
-        val docId = row.getLong(0)
-        fields.iterator.zipWithIndex.flatMap { case (f, i) =>
-          if (row.isNullAt(i + 1)) Iterator.empty
-          else if (arrayString(i)) {
+    (docs.select(cols: _*), arrayString)
+  }
+
+  /** Receives one document's term runs from [[DocTokenizer.addDoc]]. */
+  private[index] trait RunSink {
+    def run(field: Int, term: String, docId: Long, tf: Int, dl: Int, positions: Array[Int]): Unit
+
+    /** Called once per (doc, field) that emitted ≥ 1 run; `dl` is the field length. */
+    def fieldEnd(field: Int, docId: Long, dl: Int): Unit = ()
+  }
+
+  /** The per-document field loop shared by both tokenize passes: each
+    * field's term runs in ascending term order, then `fieldEnd`. One per
+    * task — the reusable (term, pos) buffer means no Token objects, no
+    * ArrayBuffer growth and no TimSort scratch in the build's hottest loop
+    * (per-doc allocation was the 4-core scaling limiter — see
+    * analysis.TokenBuffer).
+    */
+  private final class DocTokenizer(fields: Seq[FieldDef], arrayString: Set[Int]) {
+    private val nFields = fields.length
+    private val isArrayString = Array.tabulate(nFields)(arrayString)
+    private val analyzers: Array[graft.analysis.Analyzer] = fields.map {
+      case FieldDef(_, _, TextField(a), _) => a
+      case _ => null
+    }.toArray
+    private val buf = new graft.analysis.TokenBuffer(256)
+
+    def addDoc(row: org.apache.spark.sql.Row, sink: RunSink): Unit = {
+      val docId = row.getLong(0)
+      var i = 0
+      while (i < nFields) {
+        if (!row.isNullAt(i + 1)) {
+          if (isArrayString(i)) {
             val elems = row.getSeq[String](i + 1)
             val m = elems.length
-            if (m == 0) Iterator.empty
-            else {
-              val byTerm = elems.zipWithIndex.groupBy(_._1).toSeq.sortBy(_._1)
-              byTerm.iterator.map { case (term, occ) =>
-                Posting(f.indexField, term, docId, occ.length, occ.map(_._2).toArray, m)
-              } ++ Iterator(Posting(f.indexField, DlMarker, docId, m, emptyPos, m))
+            if (m > 0) {
+              elems.zipWithIndex.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (term, occ) =>
+                sink.run(i, term, docId, occ.length, m, occ.map(_._2).toArray)
+              }
+              sink.fieldEnd(i, docId, m)
+            }
+          } else if (analyzers(i) == null) {
+            // scalar STRING; empty string ≡ absent (it IS the DlMarker
+            // sentinel — see the array note in tokenizeInput)
+            val v = row.getString(i + 1)
+            if (!v.isEmpty) {
+              sink.run(i, v, docId, 1, 1, Array(0))
+              sink.fieldEnd(i, docId, 1)
+            }
+          } else {
+            buf.clear()
+            analyzers(i).tokensInto(row.getString(i + 1), buf)
+            val dl = buf.len
+            if (dl > 0) {
+              // sort-based run grouping (no per-doc HashMap churn)
+              buf.sort()
+              val terms = buf.terms
+              val poss = buf.poss
+              var s = 0
+              while (s < dl) {
+                var e = s + 1
+                while (e < dl && terms(e) == terms(s)) e += 1
+                sink.run(i, terms(s), docId, e - s, dl, java.util.Arrays.copyOfRange(poss, s, e))
+                s = e
+              }
+              sink.fieldEnd(i, docId, dl)
             }
           }
-          else f.kind match {
-            case TextField(analyzer) =>
-              buf.clear()
-              analyzer.tokensInto(row.getString(i + 1), buf)
-              val dl = buf.len
-              if (dl == 0) Iterator.empty
-              else {
-                // sort-based run grouping (no per-doc HashMap churn)
-                buf.sort()
-                val terms = buf.terms
-                val poss = buf.poss
-                val out = new ArrayBuffer[Posting](16)
-                var s = 0
-                while (s < dl) {
-                  var e = s + 1
-                  while (e < dl && terms(e) == terms(s)) e += 1
-                  val positions = java.util.Arrays.copyOfRange(poss, s, e)
-                  out += Posting(f.indexField, terms(s), docId, e - s, positions, dl)
-                  s = e
-                }
-                out += Posting(f.indexField, DlMarker, docId, dl, emptyPos, dl)
-                out.iterator
-              }
-            case StringField =>
-              val v = row.getString(i + 1)
-              // empty string ≡ absent (it IS the DlMarker sentinel — see the
-              // array branch note); a doc with an empty STRING value simply
-              // has no term in this field
-              if (v.isEmpty) Iterator.empty
-              else Iterator(
-                Posting(f.indexField, v, docId, 1, Array(0), 1),
-                Posting(f.indexField, DlMarker, docId, 1, emptyPos, 1))
-          }
         }
+        i += 1
+      }
+    }
+  }
+
+  /** One corpus scan emitting real postings AND dl marker rows — the
+    * DataFrame engine's input ([[build]]); the segment build never ships
+    * markers (see [[SegmentStore.encodeRuns]]).
+    */
+  def tokenizePostingsWithMarkers(docs: DataFrame, docIdCol: String, fields: Seq[FieldDef]): Dataset[Posting] = {
+    import docs.sparkSession.implicits._
+    val (input, arrayString) = tokenizeInput(docs, docIdCol, fields)
+    val names = fields.map(_.indexField).toArray
+    val emptyPos = Array.empty[Int]
+    input.mapPartitions { rows =>
+      val tok = new DocTokenizer(fields, arrayString)
+      var out: ArrayBuffer[Posting] = null
+      val sink = new RunSink {
+        def run(i: Int, term: String, docId: Long, tf: Int, dl: Int, p: Array[Int]): Unit =
+          out += Posting(names(i), term, docId, tf, p, dl)
+        override def fieldEnd(i: Int, docId: Long, dl: Int): Unit =
+          out += Posting(names(i), DlMarker, docId, dl, emptyPos, dl)
+      }
+      rows.flatMap { row =>
+        out = new ArrayBuffer[Posting](16)
+        tok.addDoc(row, sink)
+        out.iterator
       }
     }
   }
@@ -192,7 +233,7 @@ object IndexBuilder {
     * partition that tokenizes each document and appends its term runs
     * straight into per-term [[SegmentStore.RunBuf]]s, emitting
     * [[SegmentStore.MiniRun]] rows per shard — the input to
-    * [[SegmentStore.encodeRuns]].
+    * [[SegmentStore.encodeRuns]], for any docsPerShard.
     *
     * Semantically identical to `tokenizePostings |> encodeSegments`'s
     * internal combine (same runs, same docId order — property-pinned by
@@ -201,8 +242,7 @@ object IndexBuilder {
     * and the per-document output buffer are all gone: at bench scale that
     * was ~36M short-lived objects per build riding the allocation/memory
     * bandwidth the wide (4-core) scaling child is bounded by. Emits NO
-    * dl-marker rows — callers use `reconstructMarkers` (both current
-    * callers are the `docsPerShard <= Int.MaxValue` paths).
+    * dl-marker rows: the encode tasks reconstruct them.
     *
     * Flush granularity: a mini-run window closes at a shard boundary (docs
     * arrive docId-ascending from [[DocIds.assign]], so shards are monotonic
@@ -216,88 +256,26 @@ object IndexBuilder {
       docIdCol: String,
       fields: Seq[FieldDef],
       docsPerShard: Long): Dataset[SegmentStore.MiniRun] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val schema = docs.schema
-    def isArraySource(f: FieldDef): Boolean =
-      schema.fields.find(_.name == f.source).exists(_.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType])
-    val arrayString: Set[Int] = fields.zipWithIndex.collect {
-      case (f, i) if f.kind == StringField && isArraySource(f) => i
-    }.toSet
-    val cols = col(docIdCol).cast(LongType) +: fields.zipWithIndex.map { case (f, i) =>
-      if (isArraySource(f)) {
-        val arr = col(f.source).cast(org.apache.spark.sql.types.ArrayType(StringType))
-        if (arrayString(i)) filter(arr, x => x.isNotNull && x =!= lit(""))
-        else array_join(arr, " ")
-      } else col(f.source).cast(StringType)
-    }
+    import docs.sparkSession.implicits._
+    val (input, arrayString) = tokenizeInput(docs, docIdCol, fields)
     val nFields = fields.length
     val fieldNames = fields.map(_.indexField).toArray
-    val analyzers: Array[graft.analysis.Analyzer] = fields.map {
-      case FieldDef(_, _, TextField(a), _) => a
-      case _ => null
-    }.toArray
-    docs.select(cols: _*).mapPartitions { rows =>
+    input.mapPartitions { rows =>
       val src = rows.buffered
-      new Iterator[SegmentStore.MiniRun] {
-        private val buf = new graft.analysis.TokenBuffer(256)
+      new Iterator[SegmentStore.MiniRun] with RunSink {
+        private val tok = new DocTokenizer(fields, arrayString)
         private val bufs: Array[java.util.HashMap[String, SegmentStore.RunBuf]] =
           Array.fill(nFields)(new java.util.HashMap[String, SegmentStore.RunBuf]())
         private var curShard = -1
         private var nBuffered = 0
         private var out: Iterator[SegmentStore.MiniRun] = Iterator.empty
 
-        private def bufOf(i: Int, term: String): SegmentStore.RunBuf = {
+        def run(i: Int, term: String, docId: Long, tf: Int, dl: Int, p: Array[Int]): Unit = {
           val m = bufs(i)
           var b = m.get(term)
           if (b == null) { b = new SegmentStore.RunBuf(); m.put(term, b) }
-          b
-        }
-
-        private def addDoc(row: org.apache.spark.sql.Row): Unit = {
-          val docId = row.getLong(0)
-          var i = 0
-          while (i < nFields) {
-            if (!row.isNullAt(i + 1)) {
-              if (arrayString(i)) {
-                val elems = row.getSeq[String](i + 1)
-                val m = elems.length
-                if (m > 0) {
-                  val byTerm = elems.zipWithIndex.groupBy(_._1).toSeq.sortBy(_._1)
-                  byTerm.foreach { case (term, occ) =>
-                    bufOf(i, term).add(docId, occ.length, m, occ.map(_._2).toArray)
-                    nBuffered += 1
-                  }
-                }
-              } else analyzers(i) match {
-                case null => // StringField scalar
-                  val v = row.getString(i + 1)
-                  if (!v.isEmpty) {
-                    bufOf(i, v).add(docId, 1, 1, Array(0))
-                    nBuffered += 1
-                  }
-                case analyzer =>
-                  buf.clear()
-                  analyzer.tokensInto(row.getString(i + 1), buf)
-                  val dl = buf.len
-                  if (dl > 0) {
-                    buf.sort()
-                    val terms = buf.terms
-                    val poss = buf.poss
-                    var s = 0
-                    while (s < dl) {
-                      var e = s + 1
-                      while (e < dl && terms(e) == terms(s)) e += 1
-                      bufOf(i, terms(s)).add(docId, e - s, dl,
-                        java.util.Arrays.copyOfRange(poss, s, e))
-                      nBuffered += 1
-                      s = e
-                    }
-                  }
-              }
-            }
-            i += 1
-          }
+          b.add(docId, tf, dl, p)
+          nBuffered += 1
         }
 
         private def drain(): Iterator[SegmentStore.MiniRun] = {
@@ -321,7 +299,7 @@ object IndexBuilder {
           curShard = (src.head.getLong(0) / docsPerShard).toInt
           while (src.hasNext && nBuffered < SegmentStore.FlushPostings &&
             (src.head.getLong(0) / docsPerShard).toInt == curShard) {
-            addDoc(src.next())
+            tok.addDoc(src.next(), this)
           }
           out = drain()
         }

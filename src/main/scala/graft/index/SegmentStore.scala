@@ -240,20 +240,26 @@ object SegmentStore {
       if (isSorted)
         (java.util.Arrays.copyOf(docIds, n), java.util.Arrays.copyOf(tfs, n),
           java.util.Arrays.copyOf(dls, n), java.util.Arrays.copyOf(poss, n))
-      else {
-        val idx = Array.range(0, n).sortBy(docIds(_))
-        val d2 = new Array[Long](n)
-        val t2 = new Array[Int](n)
-        val l2 = new Array[Int](n)
-        val p2 = new Array[Array[Int]](n)
-        var i = 0
-        while (i < n) {
-          val j = idx(i)
-          d2(i) = docIds(j); t2(i) = tfs(j); l2(i) = dls(j); p2(i) = poss(j)
-          i += 1
-        }
-        (d2, t2, l2, p2)
-      }
+      else sortedByDoc(docIds, tfs, dls, poss, n)
+  }
+
+  /** The first `n` entries of parallel posting buffers as new arrays,
+    * stably index-sorted by docId.
+    */
+  private def sortedByDoc(docIds: Array[Long], tfs: Array[Int], dls: Array[Int],
+      poss: Array[Array[Int]], n: Int): (Array[Long], Array[Int], Array[Int], Array[Array[Int]]) = {
+    val idx = Array.range(0, n).sortBy(docIds(_))
+    val d2 = new Array[Long](n)
+    val t2 = new Array[Int](n)
+    val l2 = new Array[Int](n)
+    val p2 = new Array[Array[Int]](n)
+    var i = 0
+    while (i < n) {
+      val j = idx(i)
+      d2(i) = docIds(j); t2(i) = tfs(j); l2(i) = dls(j); p2(i) = poss(j)
+      i += 1
+    }
+    (d2, t2, l2, p2)
   }
 
   private def commitStage(dir: String, stage: String, metrics: Map[String, Long]): Unit = {
@@ -357,35 +363,24 @@ object SegmentStore {
         // encode tasks reconstruct each (shard, field)'s marker from the
         // postings they already stream — exact, because a marker exists iff
         // the (field, doc) has ≥1 posting — which drops one shuffle row per
-        // (doc, field) from the build's widest stage. Falls back to shipped
-        // markers only for docsPerShard beyond the BitSet range.
-        val recon = docsPerShard <= Int.MaxValue
+        // (doc, field) from the build's widest stage.
         // per-partition lineage rides back on an accumulator — the round-2
         // build re-read the committed segments for a metadata agg (a pure
         // driver-synchronized second job)
         val linAcc = spark.sparkContext.collectionAccumulator[LineageRow]("graft.lineage")
         val mkAcc = spark.sparkContext.collectionAccumulator[MarkerStat]("graft.markerstats")
-        // recon path: the FUSED tokenize→mini-run pass (no per-posting
-        // object stream — see IndexBuilder.tokenizeMiniRuns); the wide-shard
-        // fallback keeps the posting stream since it must ship markers
-        val encoded =
-          if (recon)
-            encodeRuns(IndexBuilder.tokenizeMiniRuns(docs, docIdCol, fields, docsPerShard),
-              Some(linAcc), reconstructMarkers = true, Some(mkAcc), docsPerShard)
-          else
-            encodeSegments(IndexBuilder.tokenizePostingsWithMarkers(docs, docIdCol, fields),
-              docsPerShard, Some(linAcc), reconstructMarkers = false, markerAcc = Some(mkAcc))
-        encoded.write.mode(SaveMode.Overwrite).parquet(s"$dir/segments")
+        // the FUSED tokenize→mini-run pass (no per-posting object stream —
+        // see IndexBuilder.tokenizeMiniRuns)
+        encodeRuns(IndexBuilder.tokenizeMiniRuns(docs, docIdCol, fields, docsPerShard),
+          Some(linAcc), Some(mkAcc), docsPerShard)
+          .write.mode(SaveMode.Overwrite).parquet(s"$dir/segments")
         // dedupe by pid: a speculative/retried task may report twice; the
         // rows are deterministic per partition so first-wins is exact
         val rows = {
           import scala.jdk.CollectionConverters._
           linAcc.value.asScala.groupBy(_.pid).map(_._2.head).toIndexedSeq.sortBy(_.pid)
         }
-        markerStatsMem = {
-          import scala.jdk.CollectionConverters._
-          Some(foldMarkerStats(mkAcc.value.asScala.toSeq))
-        }
+        markerStatsMem = Some(foldMarkerStats(mkAcc))
         writeLineage(dir, rows) // accumulator output — driver write, no job
         commitStage(dir, "segments",
           Map("segmentRows" -> rows.map(_.rowsOut).sum, "postingBytes" -> rows.map(_.bytesOut).sum,
@@ -405,22 +400,13 @@ object SegmentStore {
     var fieldStatsMem: Option[Seq[FieldStats]] = None
     if (needStats) {
       Timing.timed("build.stats") {
-        // per-segment stats fold: vocab×shards METADATA rows, column-pruned
-        // off the just-written parquet (blocks never read) — sums of longs,
-        // so the totals are bit-identical to a direct postings aggregation
-        val seg = readSegments(spark, s"$dir/segments")
-          .select(col("field"), col("term"), col("df"), col("cf"))
-        seg.filter(col("term") =!= IndexBuilder.DlMarker)
-          .groupBy(col("field"), col("term"))
-          .agg(sum(col("df")).as("df"), sum(col("cf")).as("cf"))
-          .as[TermStats]
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/termstats")
+        writeTermStats(spark, s"$dir/segments", s"$dir/termstats")
         // field stats: folded from the encode job's marker accumulator when
         // the encode ran in THIS call (zero extra jobs); the read-back agg
         // over the marker segment rows is the resume path (segments stage
         // committed by an earlier, crashed run)
         val fsRows = markerStatsMem.getOrElse {
-          seg.filter(col("term") === IndexBuilder.DlMarker)
+          readSegments(spark, s"$dir/segments").filter(col("term") === IndexBuilder.DlMarker)
             .groupBy(col("field"))
             .agg(sum(col("df")).as("docCount"), (sum(col("cf")) / sum(col("df"))).as("avgdl"),
               sum(col("cf")).as("sumDl"))
@@ -528,26 +514,16 @@ object SegmentStore {
     commitStage(dir, "spec", Map("fields" -> fields.size.toLong))
   }
 
-  /** The encode pipeline: explicit range-partitioned shuffle of the term
-    * space within doc shards; the sort brings each (shard, field, term) run
-    * contiguous and docId-ordered for the block encoder (SURVEY.md §2.5).
-    * Shared by the batch build and the incremental (streaming) appender.
-    */
-  /** `reconstructMarkers`: for inputs WITHOUT dl-marker rows (the optimize
-    * path decodes postings only — stats-only rows have no blocks to
-    * decode), re-derive each (shard, field)'s marker row inside the encode
-    * task: partitions hold whole shards and runs arrive sorted by
-    * (shard, field, term, docId), so a per-(shard, field) BitSet over
-    * LOCAL docIds (≤ docsPerShard bits, reused across groups) counts each
-    * doc once and sums its dl — field stats then fold from segment
-    * metadata with NO extra pass over the postings. Never set this when
-    * the input already carries marker rows (they would double-count).
+  /** The encode pipeline over a posting stream: map-side run combine, then
+    * [[encodeRuns]] (shard shuffle, run merge, marker reconstruction, block
+    * encode). The build and the appender feed [[encodeRuns]] from the fused
+    * tokenize pass instead; this posting-level entry serves [[optimize]],
+    * whose decoded postings pass a tombstone anti-join first. `postings`
+    * must not carry dl-marker rows.
     */
   def encodeSegments(
       postings: Dataset[Posting],
       docsPerShard: Long,
-      lineageAcc: Option[org.apache.spark.util.CollectionAccumulator[LineageRow]] = None,
-      reconstructMarkers: Boolean = false,
       markerAcc: Option[org.apache.spark.util.CollectionAccumulator[MarkerStat]] = None): Dataset[SegmentRow] = {
     val spark = postings.sparkSession
     import spark.implicits._
@@ -604,7 +580,7 @@ object SegmentStore {
         def next(): SegmentStore.MiniRun = out.next()
       }
     }
-    encodeRuns(mini, lineageAcc, reconstructMarkers, markerAcc, docsPerShard)
+    encodeRuns(mini, None, markerAcc, docsPerShard)
   }
 
   /** The post-combine half of [[encodeSegments]]: shard-shuffle the
@@ -612,11 +588,22 @@ object SegmentStore {
     * block-encode. Callable directly with mini-runs built by the FUSED
     * tokenize pass ([[IndexBuilder.tokenizeMiniRuns]]), which skips the
     * per-posting object stream entirely.
+    *
+    * dl markers are always reconstructed here, never read from the input
+    * (a run with the [[IndexBuilder.DlMarker]] term is rejected — it would
+    * double-count): partitions hold whole shards and runs arrive sorted by
+    * (shard, field, term, docId), so a per-(shard, field) BitSet over
+    * shard-local offsets (docId − shard·docsPerShard) counts each doc once
+    * and sums its dl, and each (shard, field) gets one stats-only marker
+    * row. Field stats then fold from segment metadata with NO extra pass
+    * over the postings. This works for any docsPerShard as long as every
+    * offset fits an Int — the bound Lucene's int docIDs put on one index
+    * (IndexWriter.MAX_DOCS); dense ids ([[DocIds.assign]], the appender)
+    * always do, and a sparser offset raises an IllegalArgumentException.
     */
   private[graft] def encodeRuns(
       mini: Dataset[SegmentStore.MiniRun],
       lineageAcc: Option[org.apache.spark.util.CollectionAccumulator[LineageRow]],
-      reconstructMarkers: Boolean,
       markerAcc: Option[org.apache.spark.util.CollectionAccumulator[MarkerStat]],
       docsPerShard: Long): Dataset[SegmentRow] = {
     val spark = mini.sparkSession
@@ -651,27 +638,19 @@ object SegmentStore {
           * overlapping-mini-run fallback — see the merge note above).
           */
         private def sortRun(n: Int): Unit = {
-          val idx = Array.range(0, n).sortBy(docIds(_))
-          val d2 = new Array[Long](n)
-          val t2 = new Array[Int](n)
-          val l2 = new Array[Int](n)
-          val p2 = new Array[Array[Int]](n)
-          var i = 0
-          while (i < n) {
-            val j = idx(i)
-            d2(i) = docIds(j); t2(i) = tfs(j); l2(i) = dls(j); p2(i) = poss(j)
-            i += 1
-          }
+          val (d2, t2, l2, p2) = sortedByDoc(docIds, tfs, dls, poss, n)
           System.arraycopy(d2, 0, docIds, 0, n)
           System.arraycopy(t2, 0, tfs, 0, n)
           System.arraycopy(l2, 0, dls, 0, n)
           System.arraycopy(p2, 0, poss, 0, n)
         }
-        // marker-reconstruction state (reconstructMarkers only): the
-        // current (shard, field) group's distinct-doc bitset + stats
+        // marker-reconstruction state: the current (shard, field) group's
+        // distinct-doc bitset + stats. The bitset grows on demand: docIds
+        // are dense (DocIds.assign), so it tops out at the shard's ACTUAL
+        // population — never the nominal docsPerShard
         private var mShard = -1
         private var mField: String = null
-        private var mBits: java.util.BitSet = null
+        private val mBits = new java.util.BitSet()
         private var mCount = 0L
         private var mSum = 0L
         private var mMin = Long.MaxValue
@@ -681,7 +660,7 @@ object SegmentStore {
             mCount, mSum, mMin, mMax, 0L, pid, Vector.empty)
           mField = null; mCount = 0L; mSum = 0L
           mMin = Long.MaxValue; mMax = Long.MinValue
-          if (mBits != null) mBits.clear()
+          mBits.clear()
           r
         }
         def hasNext: Boolean = src.hasNext || mField != null
@@ -690,25 +669,15 @@ object SegmentStore {
           val shard = src.head._1
           val field = src.head._2
           val term = src.head._3
-          if (reconstructMarkers && mField != null &&
-            (shard != mShard || field != mField)) {
+          require(term != IndexBuilder.DlMarker,
+            s"encode input carries a dl-marker run for ($shard, $field); markers are " +
+              "reconstructed by the encode, never shipped")
+          if (mField != null && (shard != mShard || field != mField)) {
             return flushMarker() // group changed: emit previous marker first
           }
-          if (reconstructMarkers && mField == null) {
-            mShard = shard; mField = field
-            if (mBits == null) {
-              require(docsPerShard <= Int.MaxValue,
-                s"reconstructMarkers needs docsPerShard <= Int.MaxValue, got $docsPerShard")
-              // grow-on-demand: docIds are dense (DocIds.assign), so the
-              // bitset tops out at the shard's ACTUAL population — never the
-              // nominal docsPerShard (which may be 2^31: a 256 MB/task
-              // preallocation for a shard holding a few million docs)
-              mBits = new java.util.BitSet()
-            }
-          }
+          if (mField == null) { mShard = shard; mField = field }
           // merge the key's mini-runs into the reusable buffers; min/max and
-          // cf accumulate during the append (order-insensitive), the bitset
-          // marker fold likewise counts each (field, doc) once in any order
+          // cf accumulate during the append (order-insensitive)
           var n = 0
           var cf = 0L
           var minDoc = Long.MaxValue
@@ -724,39 +693,39 @@ object SegmentStore {
             var i = 0
             while (i < rd.length) {
               if (n == cap) grow()
-              val docId = rd(i)
-              docIds(n) = docId; tfs(n) = rt(i); dls(n) = rl(i); poss(n) = rp(i)
+              docIds(n) = rd(i); tfs(n) = rt(i); dls(n) = rl(i); poss(n) = rp(i)
               n += 1
               cf += rt(i)
-              if (reconstructMarkers) {
-                // count each (field, doc) once across all its term runs
-                val local = (docId - shard.toLong * docsPerShard).toInt
-                if (!mBits.get(local)) {
-                  mBits.set(local)
-                  mCount += 1
-                  mSum += rl(i)
-                  if (docId < mMin) mMin = docId
-                  if (docId > mMax) mMax = docId
-                }
-              }
               i += 1
             }
           }
-          if (term == IndexBuilder.DlMarker) {
-            // dl-marker run → STATS-ONLY segment row, no blocks: markers
-            // carry tf = dl per (doc, field), so this run's (df, cf) IS the
-            // shard's (docCount, Σdl) for the field. The stats stage folds
-            // these rows into fieldstats — field stats ride the encode
-            // shuffle for free instead of paying their own corpus pass.
-            SegmentRow(shard, field, term, n.toLong, cf, minDoc, maxDoc, 0L, pid, Vector.empty)
-          } else {
-            if (!runSorted) sortRun(n)
-            val blocks = enc.encodeLocal(docIds, tfs, dls, poss, n)
-            var bytes = 0L
-            blocks.foreach(b => bytes +=
-              b.docBytes.length + b.tfBytes.length + b.dlBytes.length + b.posBytes.length)
-            SegmentRow(shard, field, term, n.toLong, cf, minDoc, maxDoc, bytes, pid, blocks)
+          // marker fold: count each (field, doc) once across all its term
+          // runs, in any order, by its offset inside the shard
+          val base = shard.toLong * docsPerShard
+          require(maxDoc - base <= Int.MaxValue,
+            s"docId $maxDoc lies ${maxDoc - base} past the start of shard $shard " +
+              s"(docsPerShard = $docsPerShard); a docId's offset inside its shard must be " +
+              s"<= Int.MaxValue (${Int.MaxValue}) — assign dense docIds (DocIds.assign) " +
+              "or use a smaller docsPerShard")
+          var i = 0
+          while (i < n) {
+            val docId = docIds(i)
+            val local = (docId - base).toInt
+            if (!mBits.get(local)) {
+              mBits.set(local)
+              mCount += 1
+              mSum += dls(i)
+              if (docId < mMin) mMin = docId
+              if (docId > mMax) mMax = docId
+            }
+            i += 1
           }
+          if (!runSorted) sortRun(n)
+          val blocks = enc.encodeLocal(docIds, tfs, dls, poss, n)
+          var bytes = 0L
+          blocks.foreach(b => bytes +=
+            b.docBytes.length + b.tfBytes.length + b.dlBytes.length + b.posBytes.length)
+          SegmentRow(shard, field, term, n.toLong, cf, minDoc, maxDoc, bytes, pid, blocks)
         }
       }
     }
@@ -808,22 +777,32 @@ object SegmentStore {
     * division is the same long→double cast as the read-back agg's
     * `sum(cf)/sum(df)`, so the stats are bit-identical.
     */
-  /** [[foldMarkerStats]] straight off an accumulator — for the incremental
-    * appender (same dedupe + fold, one definition).
-    */
-  private[graft] def foldMarkerStatsPublic(
+  private[graft] def foldMarkerStats(
       acc: org.apache.spark.util.CollectionAccumulator[MarkerStat]): IndexedSeq[FieldStats] = {
     import scala.jdk.CollectionConverters._
-    foldMarkerStats(acc.value.asScala.toSeq)
-  }
-
-  private def foldMarkerStats(rows: Seq[MarkerStat]): IndexedSeq[FieldStats] =
-    rows.groupBy(m => (m.pid, m.field)).map(_._2.head).toSeq
+    acc.value.asScala.toSeq.groupBy(m => (m.pid, m.field)).map(_._2.head).toSeq
       .groupBy(_.field).map { case (f, ms) =>
         val dc = ms.map(_.docCount).sum
         val sd = ms.map(_.sumDl).sum
         FieldStats(f, dc, sd.toDouble / dc.toDouble, sd)
       }.toIndexedSeq.sortBy(_.field)
+  }
+
+  /** Term stats (field, term, df, cf) of a segments dir, written to `out`:
+    * a vocab×shards METADATA fold, column-pruned off the parquet (blocks
+    * never read) — sums of longs, so the totals are bit-identical to a
+    * direct postings aggregation.
+    */
+  private[graft] def writeTermStats(spark: SparkSession, segmentsDir: String, out: String): Unit = {
+    import spark.implicits._
+    readSegments(spark, segmentsDir)
+      .select(col("field"), col("term"), col("df"), col("cf"))
+      .filter(col("term") =!= IndexBuilder.DlMarker)
+      .groupBy(col("field"), col("term"))
+      .agg(sum(col("df")).as("df"), sum(col("cf")).as("cf"))
+      .as[TermStats]
+      .write.mode(SaveMode.Overwrite).parquet(out)
+  }
 
   /** Open an index whose `termstats`/`fieldstats`/`segments` hold several
     * appended generations (incremental maintenance): stats are folded at
@@ -863,10 +842,10 @@ object SegmentStore {
     * Single-pass like the build (round 5): decode → anti-join → ONE
     * shuffle+encode job; the encode tasks reconstruct each
     * (shard, field)'s marker row from the postings they already see
-    * (`reconstructMarkers` — a per-group distinct-doc BitSet), and
-    * term/field stats fold from the new segments' metadata. No persist of
-    * the decoded postings, no separate stats aggregations — the old shape
-    * ran three corpus-scale passes over a MEMORY_AND_DISK cache.
+    * (see [[encodeRuns]]), and term/field stats fold from the new
+    * segments' metadata. No persist of the decoded postings, no separate
+    * stats aggregations — the old shape ran three corpus-scale passes over
+    * a MEMORY_AND_DISK cache.
     */
   def optimize(spark: SparkSession, dir: String, outDir: String, docsPerShard: Long = -1L): Unit = {
     import spark.implicits._
@@ -922,41 +901,17 @@ object SegmentStore {
         .write.mode(SaveMode.Overwrite).parquet(s"$outDir/stored")
       commitStage(outDir, "stored", Map.empty)
     }
-    // marker strategy mirrors build's, keyed on the SAME pinned shard spec.
     // Marker segment rows are stats-only (no blocks) in EVERY index, so the
-    // decode above never recovers marker postings; for dps <= Int.MaxValue
-    // the encode tasks reconstruct them (bitset path), and for a wider
-    // shard spec — where reconstruction's local-offset bitset can't exist
-    // and hardcoding reconstructMarkers = true crashed every optimize on
-    // encodeSegments' require — the (field, doc, dl) markers are
-    // re-synthesized from the decoded postings (dl rides every posting;
-    // distinct is the same shape tokenizePostingsWithMarkers ships at build)
-    val recon = dps <= Int.MaxValue
-    val encodable =
-      if (recon) postings
-      else postings.unionByName(
-        postings.select(col("field"), col("docId"), col("dl")).distinct()
-          .select(col("field"), lit(IndexBuilder.DlMarker).as("term"), col("docId"),
-            col("dl").as("tf"), lit(Array.empty[Int]).as("positions"), col("dl"))
-          .as[Posting])
+    // decode above never recovers marker postings: the encode tasks
+    // reconstruct them, keyed on the SAME pinned shard spec as the build
     val mkAcc = spark.sparkContext.collectionAccumulator[MarkerStat]("graft.markerstats")
-    encodeSegments(encodable, dps, reconstructMarkers = recon, markerAcc = Some(mkAcc))
+    encodeSegments(postings, dps, Some(mkAcc))
       .write.mode(SaveMode.Overwrite).parquet(s"$outDir/segments")
     commitStage(outDir, "segments", Map.empty)
-    val seg = readSegments(spark, s"$outDir/segments")
-      .select(col("field"), col("term"), col("df"), col("cf"))
-    seg.filter(col("term") =!= IndexBuilder.DlMarker)
-      .groupBy(col("field"), col("term"))
-      .agg(sum(col("df")).as("df"), sum(col("cf")).as("cf"))
-      .as[TermStats]
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/termstats")
+    writeTermStats(spark, s"$outDir/segments", s"$outDir/termstats")
     // field stats fold from the encode job's marker accumulator — the
     // optimize runs its encode unconditionally, so no read-back fallback
-    val fsRows = {
-      import scala.jdk.CollectionConverters._
-      foldMarkerStats(mkAcc.value.asScala.toSeq)
-    }
-    writeFieldStatsGens(outDir, Map("base" -> fsRows)) // driver write, no job
+    writeFieldStatsGens(outDir, Map("base" -> foldMarkerStats(mkAcc))) // driver write, no job
     commitStage(outDir, "stats", Map.empty)
   }
 

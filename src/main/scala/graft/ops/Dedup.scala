@@ -60,6 +60,12 @@ object Dedup {
     * the same way but paid two exchanges (guide §2.4: share the exchange) —
     * the unbounded-frame window min is the identical per-row canonical id
     * off the single digest shuffle.
+    *
+    * Null and empty text: `md5(null)` is null, and the window puts every
+    * null digest in ONE partition, so null-text rows are kept (never
+    * dropped) and dedup against each other — the lowest null-text doc id is
+    * their canonical id. Empty text has its own digest (md5 of ""), so it
+    * forms a separate group from null.
     */
   def exact(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val hashed = docs.select(col(idCol).cast("long").as("doc_id"), md5(col(textCol)).as("content_md5"))

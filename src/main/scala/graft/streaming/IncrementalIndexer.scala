@@ -77,7 +77,6 @@ object IncrementalIndexer {
     val meta = readMeta(dir)
     if (batchId <= meta.lastBatch) return // replayed batch — already committed
     val spark = batch.sparkSession
-    import spark.implicits._
     if (!SegmentStore.stageDone(dir, "spec")) {
       SegmentStore.writeSpec(spark, dir, fields)
     }
@@ -114,43 +113,31 @@ object IncrementalIndexer {
       // use block-local encAvgdl — the scorers' max(1, q/encAvgdl)
       // inflation (Codec.Block.encAvgdl) is what keeps WAND sound when the
       // merged multi-generation avgdl differs from any encode-time value.
-      val recon = dps <= Int.MaxValue
       // field stats fold from the encode job's marker accumulator (round 6)
       // — the old shape re-read the staged segments for a second metadata
       // aggregation + collect per micro-batch
       val mkAcc = spark.sparkContext.collectionAccumulator[graft.index.MarkerStat]("graft.markerstats")
-      // recon path: fused tokenize→mini-run pass (IndexBuilder.tokenizeMiniRuns)
-      val encoded =
-        if (recon)
-          SegmentStore.encodeRuns(
-            IndexBuilder.tokenizeMiniRuns(withIds, "docId", fields, dps),
-            None, reconstructMarkers = true, Some(mkAcc), dps)
-        else
-          SegmentStore.encodeSegments(
-            IndexBuilder.tokenizePostingsWithMarkers(withIds, "docId", fields),
-            dps, reconstructMarkers = false, markerAcc = Some(mkAcc))
-      encoded.write.mode(SaveMode.Overwrite).parquet(s"$staging/segments")
-      val fsRows = SegmentStore.foldMarkerStatsPublic(mkAcc)
+      // the fused tokenize→mini-run pass (IndexBuilder.tokenizeMiniRuns)
+      SegmentStore.encodeRuns(IndexBuilder.tokenizeMiniRuns(withIds, "docId", fields, dps),
+        None, Some(mkAcc), dps)
+        .write.mode(SaveMode.Overwrite).parquet(s"$staging/segments")
+      val fsRows = SegmentStore.foldMarkerStats(mkAcc)
       // The three remaining staged writes are INDEPENDENT of each other
       // (termstats reads the just-encoded segments; keys/stored read the
       // persisted batch), so they run as concurrent jobs from a small driver
       // pool (guide §2.6 "overlap independent jobs") — each is tiny next to
       // the encode, and serially their per-job scheduling latency was the
       // bulk of a micro-batch's tail. Promotion below still happens only
-      // after ALL of them complete.
+      // after ALL of them complete — and a failure is rethrown only once
+      // every write has settled, so no sibling keeps writing into staging
+      // after appendBatch returns (a replay overwrites the same dirs).
       val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutor(pool)
       try {
         val writes = Seq(
           scala.concurrent.Future {
-            val seg = SegmentStore.readSegments(spark, s"$staging/segments")
-              .select(col("field"), col("term"), col("df"), col("cf"))
-            seg.filter(col("term") =!= IndexBuilder.DlMarker)
-              .groupBy(col("field"), col("term"))
-              .agg(sum(col("df")).as("df"), sum(col("cf")).as("cf"))
-              .as[TermStats]
-              .write.mode(SaveMode.Overwrite).parquet(s"$staging/termstats")
+            SegmentStore.writeTermStats(spark, s"$staging/segments", s"$staging/termstats")
           },
           // key→docId map rides along as its own generation: the MERGE/upsert
           // path joins incoming keys against it to find superseded docIds
@@ -166,8 +153,10 @@ object IncrementalIndexer {
               .withColumn("shard", (col("docId") / lit(dps)).cast("int"))
               .write.mode(SaveMode.Overwrite).parquet(s"$staging/stored")
           }))
-        scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(writes), scala.concurrent.duration.Duration.Inf)
+        val settled = scala.concurrent.Await.result(
+          scala.concurrent.Future.sequence(writes.map(_.transform(scala.util.Success(_)))),
+          scala.concurrent.duration.Duration.Inf)
+        settled.collectFirst { case scala.util.Failure(e) => throw e }
       } finally pool.shutdown()
       // promote: idempotent move under stable names, then delete staging
       val subs = Seq("termstats", "segments", "keys") ++

@@ -7,7 +7,8 @@ import graft.ops.Dedup
 /** Scale-shape proofs for the dedup candidate generation (VERDICT round-1
   * item 2): LSH-band blocking with the per-bucket neighbor cap must produce
   * sub-quadratically growing candidate counts when the corpus doubles, even
-  * in the worst case (every document identical → one band bucket).
+  * in the worst case (every document identical → one band bucket). Also
+  * pins exact dedup's grouping of null and empty text.
   */
 class DedupScaleSpec extends SparkSpec {
 
@@ -18,6 +19,16 @@ class DedupScaleSpec extends SparkSpec {
 
   private def candCount(df: org.apache.spark.sql.DataFrame): Long =
     Dedup.lshCandidates(df, "doc_id", "text").count()
+
+  test("exact dedup: null-text rows form their own digest group, apart from empty text, and are kept") {
+    import spark.implicits._
+    val docs = Seq((1L, None), (2L, Some("")), (3L, None), (4L, Some("")), (5L, Some("x")))
+      .toDF("doc_id", "text")
+    val got = Dedup.exact(docs, "doc_id", "text").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).sortBy(_._1).toSeq
+    assert(got === Seq(
+      (1L, 1L, false), (2L, 2L, false), (3L, 1L, true), (4L, 2L, true), (5L, 5L, false)))
+  }
 
   test("degenerate bucket: all-identical corpus stays linear under the cap") {
     val text = "the quick brown fox jumps over the lazy dog again and again"

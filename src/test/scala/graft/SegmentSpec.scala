@@ -248,26 +248,42 @@ class SegmentSpec extends SparkSpec {
   }
 
   test("fused tokenize→mini-run path ≡ posting-stream combine, row for row (round 6)") {
-    import spark.implicits._
     // exercise TEXT, scalar STRING, and multi-valued STRING sources
     val aug = docs
       .withColumn("words", split(col("text"), " "))
       .persist()
     val f2 = fields :+ FieldDef("word", "words", StringField)
-    val dps = 257L
     def key(r: SegmentRow) = (r.shard, r.field, r.term, r.minDoc)
     def canon(rows: Seq[SegmentRow]) = rows.sortBy(key).map(r =>
       (r.shard, r.field, r.term, r.df, r.cf, r.minDoc, r.maxDoc, r.bytes,
         r.blocks.map(b => (b.firstDoc, b.lastDoc, b.count, b.maxTf, b.maxTfNorm, b.encAvgdl,
           b.minPos, b.maxPos,
           b.docBytes.toSeq, b.tfBytes.toSeq, b.dlBytes.toSeq, b.posBytes.toSeq))))
-    val fused = SegmentStore.encodeRuns(
-      IndexBuilder.tokenizeMiniRuns(aug, "docId", f2, dps),
-      None, reconstructMarkers = true, None, dps).collect().toSeq
-    val streamed = SegmentStore.encodeSegments(
-      IndexBuilder.tokenizePostings(aug, "docId", f2), dps,
-      reconstructMarkers = true).collect().toSeq
-    assert(canon(fused) === canon(streamed))
+    // a narrow shard spec, and one wider than Int.MaxValue (every doc in
+    // shard 0, offsets still Int-sized)
+    Seq(257L, 5000000000L).foreach { dps =>
+      val fused = SegmentStore.encodeRuns(
+        IndexBuilder.tokenizeMiniRuns(aug, "docId", f2, dps), None, None, dps).collect().toSeq
+      val streamed = SegmentStore.encodeSegments(
+        IndexBuilder.tokenizePostings(aug, "docId", f2), dps).collect().toSeq
+      assert(canon(fused) === canon(streamed), s"docsPerShard = $dps")
+      assert(fused.exists(_.term == IndexBuilder.DlMarker), s"no marker rows at docsPerShard = $dps")
+    }
     aug.unpersist()
+  }
+
+  test("wide shard spec with a docId offset past Int.MaxValue inside its shard is rejected") {
+    import spark.implicits._
+    // sparse ids under a 5e9-doc shard: doc 3e9 lies 3e9 into shard 0, past
+    // the Int offsets the marker fold indexes by
+    val sparse = Seq((0L, "alpha beta"), (1L, "beta gamma"), (3000000000L, "alpha gamma"))
+      .toDF("docId", "text")
+    val dir = Files.createTempDirectory("graft-seg-sparse").toString
+    val e = intercept[Exception](SegmentStore.build(sparse, "docId",
+      Seq(FieldDef("default", "text", TextField(Analyzers.Standard))), dir, docsPerShard = 5000000000L))
+    def causes(t: Throwable): Seq[Throwable] = if (t == null) Nil else t +: causes(t.getCause)
+    val iae = causes(e).collectFirst { case x: IllegalArgumentException => x }
+    assert(iae.exists(_.getMessage.contains(s"<= Int.MaxValue (${Int.MaxValue})")), e.toString)
+    assert(!SegmentStore.stageDone(dir, "segments"))
   }
 }

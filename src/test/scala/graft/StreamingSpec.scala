@@ -76,6 +76,33 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("a failed staged write is rethrown only after its siblings finish; the replay commits one generation") {
+    val dir = Files.createTempDirectory("graft-inc-fail").toString
+    val staging = s"$dir/staging/gen-0"
+    // the stored write fails at once (no such column); termstats and keys
+    // are still running when it does
+    intercept[org.apache.spark.sql.AnalysisException] {
+      IncrementalIndexer.appendBatch(turnsDF(0, 40), 0L, dir, Seq("conv_id", "turn_idx"),
+        fields, 257, storedColumns = Seq("no_such_column"))
+    }
+    Seq("termstats", "keys").foreach { sub =>
+      assert(Files.exists(java.nio.file.Paths.get(s"$staging/$sub/_SUCCESS")),
+        s"staged $sub write had not finished when appendBatch threw")
+    }
+    assert(IncrementalIndexer.readMeta(dir).lastBatch === -1L)
+    IncrementalIndexer.appendBatch(turnsDF(0, 40), 0L, dir, Seq("conv_id", "turn_idx"),
+      fields, 257, storedColumns = Seq("text"))
+    assert(IncrementalIndexer.readMeta(dir) === IncrementalIndexer.Meta(turnsDF(0, 40).count(), 0L))
+    Seq("segments", "termstats", "keys", "stored").foreach { sub =>
+      val gens = scala.util.Using.resource(Files.list(java.nio.file.Paths.get(s"$dir/$sub")))(
+        _.toArray.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString))
+        .filter(_.endsWith(".parquet")).map(_.takeWhile(_ != '-')).toSet
+      assert(gens === Set("gen0"), s"$sub holds generations $gens")
+    }
+    assert(SegmentStore.readFieldStatsGens(dir).map(_.keySet) === Some(Set("gen0")))
+    assert(!Files.exists(java.nio.file.Paths.get(staging)))
+  }
+
   test("pre-sumDl fieldstats generations still open and fold exactly (round-5 schema compat)") {
     val dir = Files.createTempDirectory("graft-legacy-fs").toString
     IncrementalIndexer.appendBatch(turnsDF(0, 40), 0L, dir, Seq("conv_id", "turn_idx"), fields, 257)
