@@ -43,14 +43,15 @@ object Engine {
       .parquet(path)
 
   /** Drop all cached indexes (required between SparkSession restarts —
-    * cached plans are bound to their session) and every per-path schema
-    * memo.
+    * cached plans are bound to their session), releasing the storage of
+    * every segment index, and every per-path schema memo.
     */
   def clearCaches(): Unit = {
     cache.clear()
     schemaCache.clear()
     SparkEntry.clearSchemaCache()
     SegmentStore.clearSchemaCache()
+    segCache.values.foreach(_.unpersist(blocking = false))
     segCache.clear()
     segDirCache.clear()
     evCache.clear()

@@ -42,21 +42,18 @@ object ReaderManager {
 
 /** One serving reader over an index dir: `acquire()` returns the current
   * cached snapshot with no IO; `maybeRefresh()` re-opens (merged
-  * generations + serving repartition) ONLY when [[ReaderManager.version]]
+  * generations + serving placement) ONLY when [[ReaderManager.version]]
   * moved, unpersisting the superseded snapshot. The `etag` is stable
   * across acquires of the same snapshot — a caching HTTP façade would
   * serve 304s off it exactly like the reference.
   */
-final class IndexReaderManager(
-    spark: SparkSession,
-    dir: String,
-    servingPartitions: Int = 16) {
+final class IndexReaderManager(spark: SparkSession, dir: String) {
 
   @volatile private var snapshot: (String, SegmentIndex) = open()
 
   private def open(): (String, SegmentIndex) = {
     val v = ReaderManager.version(dir)
-    (v, SegmentStore.openMerged(spark, dir).cached(servingPartitions))
+    (v, SegmentStore.openMerged(spark, dir).cached())
   }
 
   /** Current snapshot — no freshness check, no IO (the `stale=ok` path). */
@@ -74,10 +71,8 @@ final class IndexReaderManager(
     if (v == snapshot._1) false
     else {
       val old = snapshot._2
-      snapshot = (v, SegmentStore.openMerged(spark, dir).cached(servingPartitions))
-      old.segments.unpersist(blocking = false)
-      old.termStats.unpersist(blocking = false)
-      old.stored.foreach(_.unpersist(blocking = false))
+      snapshot = open()
+      old.unpersist(blocking = false)
       true
     }
   }

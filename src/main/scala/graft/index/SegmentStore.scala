@@ -2,8 +2,12 @@ package graft.index
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.{Partitioner, TaskContext}
+import org.apache.spark.rdd.ShuffledRDD
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, GraftColumn, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.execution.UnsafeRowSerializer
 import org.apache.spark.sql.functions._
 
 import graft.analysis.Analyzers
@@ -1166,34 +1170,94 @@ final class SegmentIndex(
   @transient lazy val statsCache: LruCache[(String, String), Option[TermStats]] =
     new LruCache(65536)
 
-  /** Serving mode: repartition ONCE by shard and pin in memory. Every
-    * subsequent query runs as a single narrow stage (filter → per-partition
-    * shard top-k → TakeOrdered) instead of paying a groupByKey shuffle per
-    * query — the per-query exchange amortizes into index open, exactly
-    * like Lucene opening per-segment readers up front.
+  /** Serving mode: place every shard whole in one partition and pin the
+    * segments in memory. A query then runs as ONE narrow stage (filter →
+    * per-partition shard top-k → TakeOrdered) with no per-query shuffle —
+    * the exchange is paid once here, like Lucene opening its per-segment
+    * readers up front and searching them per request
+    * (reference DatabaseIndexer.java:531-535).
+    *
+    * Shard `s` goes to partition `s % P`, `P = min(shards, defaultParallelism)`,
+    * through an exact partitioner: hashing `shard` into P buckets collides
+    * (4 shards hashed into 4 partitions filled only 2), and every empty
+    * partition is still one scheduled task per query. So each of the P
+    * serving partitions holds whole shards, and with contiguous shard ids
+    * none is empty. The shard count is the span of the `shard` column's
+    * parquet footer statistics, read on the driver with no Spark job; an
+    * index whose footers carry none falls back to `P = defaultParallelism`.
     */
-  /** Serving partition count defaults to the INDEX's shape (one partition
-    * per ~4 shards, capped), not the querying session's shuffle conf: a
-    * query job must cost the same task count regardless of how many cores
-    * the session happens to have — per-query work scales with data, task
-    * overhead does not (at 4×cpus partitions a 4-core tier paid 4× the
-    * per-query scheduling of a 1-core tier for identical work).
-    */
-  def cached(servingPartitions: Int = 16): SegmentIndex = {
-    val parts = servingPartitions
+  def cached(): SegmentIndex = {
+    val spark = segments.sparkSession
+    val par = spark.sparkContext.defaultParallelism
+    val p = SegmentIndex.shardSpan(segments).fold(par)(math.min(_, par))
+    val rows = segments.toDF()
+    val schema = rows.schema
+    val shardAt = schema.fieldIndex("shard")
+    // InternalRow-level hop (the same one DocIds.assign takes): no
+    // external-Row decode/encode per segment row, and the shuffle moves the
+    // rows' UnsafeRow bytes with the SQL exchange's serializer
+    val keyed = rows.queryExecution.toRdd.mapPartitions { it =>
+      val toUnsafe = UnsafeProjection.create(schema)
+      it.map(r => (r.getInt(shardAt), toUnsafe(r): InternalRow))
+    }
+    val placed = new ShuffledRDD[Int, InternalRow, InternalRow](keyed, new SegmentIndex.ShardPartitioner(p))
+      .setSerializer(new UnsafeRowSerializer(schema.length))
+      .map(_._2)
     // sortWithinPartitions by (field, term): the columnar cache's per-batch
     // min/max stats then give every query batch-level term pruning — a term
     // query decompresses only the few batches whose [min,max] term range
     // covers it, instead of scanning the whole cached index (the per-query
     // bandwidth that capped query core-scaling). Keep batches small enough
     // to prune (see Bench session conf inMemoryColumnarStorage.batchSize).
-    val aligned = segments
-      .repartition(parts, org.apache.spark.sql.functions.col("shard"))
+    val aligned = GraftColumn.internalCreateDataFrame(spark, placed, schema)
       .sortWithinPartitions("field", "term", "minDoc")
+      .as(Encoders.product[SegmentRow])
     val idx = new SegmentIndex(aligned, termStats, fieldStats, fields, docsPerShard,
       shardAligned = true, stored = stored.map(_.persist()))
     idx.segments.persist()
     idx.termStats.persist()
     idx
+  }
+
+  /** Release what [[cached]] pinned: segments, termStats and the stored
+    * sidecar. A no-op once the session's SparkContext has stopped — its
+    * storage went with it.
+    */
+  def unpersist(blocking: Boolean): Unit =
+    if (!segments.sparkSession.sparkContext.isStopped) {
+      segments.unpersist(blocking)
+      termStats.unpersist(blocking)
+      stored.foreach(_.unpersist(blocking))
+    }
+}
+
+object SegmentIndex {
+
+  /** Shard `s` → partition `s % numPartitions`: exact serving placement. */
+  private final class ShardPartitioner(val numPartitions: Int) extends Partitioner {
+    def getPartition(key: Any): Int = Math.floorMod(key.asInstanceOf[Int], numPartitions)
+  }
+
+  /** Number of shard ids the segment files span (max − min + 1 of the
+    * `shard` column), from the parquet footers' column statistics: a
+    * driver-side footer read per file, no Spark job. None when some row
+    * group carries no statistics or there is no row group at all.
+    */
+  private def shardSpan(segments: Dataset[SegmentRow]): Option[Int] = {
+    import scala.jdk.CollectionConverters._
+    val conf = segments.sparkSession.sparkContext.hadoopConfiguration
+    val stats = segments.inputFiles.toSeq.flatMap { f =>
+      scala.util.Using.resource(org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f), conf))) {
+        _.getFooter.getBlocks.asScala.toSeq.map(_.getColumns.asScala
+          .find(_.getPath.toDotString == "shard").map(_.getStatistics).filter(_.hasNonNullValue))
+      }
+    }
+    if (stats.isEmpty || stats.exists(_.isEmpty)) None
+    else {
+      val lo = stats.map(_.get.genericGetMin.asInstanceOf[Integer].intValue).min
+      val hi = stats.map(_.get.genericGetMax.asInstanceOf[Integer].intValue).max
+      Some(hi - lo + 1)
+    }
   }
 }

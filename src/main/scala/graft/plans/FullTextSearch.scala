@@ -71,5 +71,10 @@ object FullTextSearchExec {
   /** Per-JVM open-index memo (Lucene's reader cache analog). */
   private[plans] val indexCache =
     scala.collection.concurrent.TrieMap.empty[String, SegmentIndex]
-  def clearCache(): Unit = indexCache.clear()
+
+  /** Forget every memoized index and release its pinned storage. */
+  def clearCache(): Unit = {
+    indexCache.values.foreach(_.unpersist(blocking = false))
+    indexCache.clear()
+  }
 }

@@ -28,6 +28,19 @@ class PlansSpec extends SparkSpec {
     assert(sql === api)
   }
 
+  test("clearCaches releases the storage a graft_search query pinned") {
+    graft.functions.GraftExtensions.register(spark)
+    val dir = Engine.segmentIndexDir(spark, sfDir)
+    graft.plans.FullTextSearchExec.clearCache() // the query below opens its index afresh
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    spark.sql(s"SELECT docId, score FROM graft_search('$dir', 'dup', 10)").collect()
+    val pinned = sc.getPersistentRDDs.keySet -- before
+    assert(pinned.nonEmpty)
+    Engine.clearCaches()
+    assert(sc.getPersistentRDDs.keySet.intersect(pinned).isEmpty)
+  }
+
   test("top-k is TakeOrderedAndProject (bounded heaps, no global sort)") {
     val plan = planOf(Engine.topk(spark, sfDir, "dup"))
     assert(plan.contains("TakeOrderedAndProject"), plan.take(2000))

@@ -286,4 +286,63 @@ class SegmentSpec extends SparkSpec {
     assert(iae.exists(_.getMessage.contains(s"<= Int.MaxValue (${Int.MaxValue})")), e.toString)
     assert(!SegmentStore.stageDone(dir, "segments"))
   }
+
+  /** Tasks run by the jobs `f` starts (listener bus drained both sides). */
+  private def tasksOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.GraftListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try { f; org.apache.spark.GraftListenerBus.drain(sc) }
+    finally sc.removeSparkListener(listener)
+    n.get
+  }
+
+  // docsPerShard 257 gives at least defaultParallelism (4) shards over the
+  // fixture; docsPerShard = half the corpus gives two
+  Seq("shards >= defaultParallelism" -> (() => 257L),
+      "fewer shards than defaultParallelism" -> (() => docs.count() / 2 + 1)).foreach {
+    case (shape, dpsOf) =>
+      test(s"serving cache places shard s in partition s % P, one task per partition ($shape)") {
+        val dps = dpsOf()
+        val dir = Files.createTempDirectory("graft-seg-place").toString
+        SegmentStore.build(docs, "docId", fields, dir, docsPerShard = dps)
+        val raw = SegmentStore.open(spark, dir)
+        val shards = raw.segments.select("shard").distinct().count().toInt
+        val par = spark.sparkContext.defaultParallelism
+        assert(if (dps == 257L) shards >= par else shards < par, s"$shards shards")
+        val p = math.min(shards, par)
+        val idx = raw.cached()
+        try {
+          val placed = idx.segments.rdd
+            .mapPartitionsWithIndex((pid, it) => Iterator.single(pid -> it.map(_.shard).toSet))
+            .collect().toMap
+          assert(placed.size === p)
+          assert(placed.forall(_._2.nonEmpty), s"empty serving partition: $placed")
+          placed.foreach { case (pid, ss) => assert(ss.forall(_ % p == pid), s"partition $pid holds $ss") }
+          assert(placed.values.flatten.size === shards)
+
+          val cachedS = new SegmentSearcher(idx, SearchOptions(limit = 10))
+          val rawS = new SegmentSearcher(raw, SearchOptions(limit = 10))
+          cachedS.search("hello world").collect() // warm: plan memo + stats
+          assert(tasksOf(cachedS.search("hello world").collect()) === p)
+          queries.foreach { q =>
+            assert(cachedS.topK(q) === rawS.topK(q), s"top-k differs for q=$q")
+            assert(cachedS.topKWithTotal(q) === rawS.topKWithTotal(q), s"totals differ for q=$q")
+          }
+          // tombstones route the cached index through the co-group branch
+          SegmentStore.deleteDocs(spark, dir, rawS.topK("hello").take(3).map(_._1))
+          val tomb = Some(SegmentStore.deletedDocsDF(spark, dir))
+          Seq("hello", "hello world", "hello AND world").foreach { q =>
+            val a = new SegmentSearcher(idx, SearchOptions(limit = 10), tomb).topK(q)
+            val b = new SegmentSearcher(raw, SearchOptions(limit = 10), tomb).topK(q)
+            assert(a === b, s"tombstoned top-k differs for q=$q")
+          }
+        } finally idx.unpersist(blocking = true)
+      }
+  }
 }

@@ -103,6 +103,17 @@ class StreamingSpec extends SparkSpec {
     assert(!Files.exists(java.nio.file.Paths.get(staging)))
   }
 
+  test("a failed appendBatch releases its cached batch") {
+    val dir = Files.createTempDirectory("graft-inc-fail-cache").toString
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // the encode job materializes the cached batch before the stored write fails
+    intercept[org.apache.spark.sql.AnalysisException] {
+      IncrementalIndexer.appendBatch(turnsDF(0, 20), 0L, dir, Seq("conv_id", "turn_idx"),
+        fields, 257, storedColumns = Seq("no_such_column"))
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet === before)
+  }
+
   test("pre-sumDl fieldstats generations still open and fold exactly (round-5 schema compat)") {
     val dir = Files.createTempDirectory("graft-legacy-fs").toString
     IncrementalIndexer.appendBatch(turnsDF(0, 40), 0L, dir, Seq("conv_id", "turn_idx"), fields, 257)
@@ -279,7 +290,7 @@ class StreamingSpec extends SparkSpec {
   test("IndexReaderManager: ETag stable until a commit advances; maybeRefresh swaps the snapshot (round 4)") {
     val dir = Files.createTempDirectory("graft-nrt").toString
     IncrementalIndexer.appendBatch(turnsDF(0, 30), 0L, dir, Seq("conv_id", "turn_idx"), fields, 257)
-    val mgr = new IndexReaderManager(spark, dir, servingPartitions = 4)
+    val mgr = new IndexReaderManager(spark, dir)
     val e0 = mgr.etag
     val docs0 = mgr.acquire().fieldStats("default").docCount
     // nothing changed: no refresh, same token, same snapshot instance
