@@ -44,18 +44,19 @@ object Engine {
 
   /** Drop all cached indexes (required between SparkSession restarts —
     * cached plans are bound to their session), releasing the storage of
-    * every segment index, and every per-path schema memo.
+    * every text index and of every reader in the [[IndexReaderManager]]
+    * registry, and every per-path schema memo.
     */
   def clearCaches(): Unit = {
+    cache.values.foreach(_.unpersist(blocking = false))
     cache.clear()
+    evCache.values.foreach(_.unpersist(blocking = false))
+    evCache.clear()
     schemaCache.clear()
     SparkEntry.clearSchemaCache()
     SegmentStore.clearSchemaCache()
-    segCache.values.foreach(_.unpersist(blocking = false))
-    segCache.clear()
     segDirCache.clear()
-    evCache.clear()
-    graft.plans.FullTextSearchExec.clearCache()
+    IndexReaderManager.releaseAll()
   }
 
   def documentsIndex(spark: SparkSession, sfDir: String): TextIndex =
@@ -102,18 +103,17 @@ object Engine {
 
   // ---- compressed segment (WAND) path ---------------------------------
 
-  private val segCache = scala.collection.concurrent.TrieMap[String, SegmentIndex]()
   private val segDirCache = scala.collection.concurrent.TrieMap[String, String]()
 
-  /** On-disk segment index dir for a corpus (built once, memoized) — the
-    * path handed to the `graft_search` SQL table function.
-    */
   /** Stored/doc-value sidecar columns for the documents segment index:
     * n_chars serves typed point/range queries; text/lang/source serve
     * field sort + include_fields on the segment path.
     */
   val DocStoredColumns: Seq[String] = Seq("text", "lang", "source", "n_chars")
 
+  /** On-disk segment index dir for a corpus (built once, memoized) — the
+    * path handed to the `graft_search` SQL table function.
+    */
   def segmentIndexDir(spark: SparkSession, sfDir: String): String =
     segDirCache.getOrElseUpdate(sfDir, {
       val dir = java.nio.file.Files.createTempDirectory("graft-segidx").toString
@@ -125,11 +125,11 @@ object Engine {
 
   /** Segment index over the same documents corpus: compressed delta+VByte
     * postings, doc-sharded, queried via block-max WAND — the 100 TB path,
-    * wired through the driver gate so DuckDB checks it too.
+    * wired through the driver gate so DuckDB checks it too. The snapshot is
+    * the dir's registry reader, the one `graft_search` serves from.
     */
   def segmentIndex(spark: SparkSession, sfDir: String): SegmentIndex =
-    segCache.getOrElseUpdate(sfDir,
-      SegmentStore.open(spark, segmentIndexDir(spark, sfDir)).cached())
+    IndexReaderManager.of(spark, segmentIndexDir(spark, sfDir)).acquire()
 
   /** Segment-path top-k, same output shape as [[topk]]. */
   def topkSeg(spark: SparkSession, sfDir: String, q: String, k: Int = 10): DataFrame = {

@@ -614,8 +614,9 @@ object OpsOracle {
       |       0::BIGINT AS deleted_after
       |FROM documents WHERE doc_id < 200""".stripMargin
 
-  /** op_incremental: two appended generations fold (openMerged) to the same
-    * doc_count / df as a batch build over the whole corpus.
+  /** op_incremental: two appended generations, folded by
+    * `SegmentStore.open`, give the same doc_count / df as a batch build over
+    * the whole corpus.
     */
   val incremental: String =
     s"""WITH tok AS (

@@ -327,7 +327,7 @@ object SparkEntry {
         docs.filter(col("doc_id") % 2 === 0), 0L, dir, Seq("doc_id"), Engine.DocFields, 128)
       graft.streaming.IncrementalIndexer.appendBatch(
         docs.filter(col("doc_id") % 2 =!= 0), 1L, dir, Seq("doc_id"), Engine.DocFields, 128)
-      val idx = SegmentStore.openMerged(s, dir)
+      val idx = SegmentStore.open(s, dir)
       val dfSpark = idx.termStats
         .filter(col("field") === "default" && col("term") === "spark")
         .select(col("df")).as[Long].collect().headOption.getOrElse(0L)

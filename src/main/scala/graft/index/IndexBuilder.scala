@@ -17,7 +17,11 @@ final case class TextIndex(
     termStats: Dataset[TermStats],
     fieldStatsFn: () => Map[String, FieldStats],
     docIdCol: String,
-    fields: Seq[FieldDef]) extends SearchableIndex {
+    fields: Seq[FieldDef],
+    /** The persisted tokenize output (postings + dl markers) that
+      * `postings`, `termStats` and the field stats derive from.
+      */
+    tokenized: Dataset[Posting]) extends SearchableIndex {
 
   /** Per-field corpus stats, computed on FIRST use (round 6): a doc-value
     * query (typed point/range over the stored table) touches neither
@@ -49,6 +53,18 @@ final case class TextIndex(
     copy(postings = postings.sortWithinPartitions("field", "term").persist(),
       docs = docs.persist(), termStats = termStats.persist())
   }
+
+  /** Release what [[IndexBuilder.build]] and [[cached]] pinned, dependents
+    * before the tokenize output they read. A no-op once the session's
+    * SparkContext has stopped — its storage went with it.
+    */
+  def unpersist(blocking: Boolean): Unit =
+    if (!docs.sparkSession.sparkContext.isStopped) {
+      postings.unpersist(blocking)
+      termStats.unpersist(blocking)
+      tokenized.unpersist(blocking)
+      docs.unpersist(blocking)
+    }
 }
 
 /** Builds the inverted index from a document table — the Spark-first
@@ -353,6 +369,6 @@ object IndexBuilder {
     TextIndex(postings, docs, termStats(postings),
       () => fieldStatsFromMarkers(withMarkers).as[FieldStats]
         .collect().map(f => f.field -> f).toMap,
-      docIdCol, fields)
+      docIdCol, fields, withMarkers)
   }
 }

@@ -41,11 +41,11 @@ object ReaderManager {
 }
 
 /** One serving reader over an index dir: `acquire()` returns the current
-  * cached snapshot with no IO; `maybeRefresh()` re-opens (merged
-  * generations + serving placement) ONLY when [[ReaderManager.version]]
-  * moved, unpersisting the superseded snapshot. The `etag` is stable
-  * across acquires of the same snapshot — a caching HTTP façade would
-  * serve 304s off it exactly like the reference.
+  * cached snapshot with no IO; `maybeRefresh()` re-opens (folded
+  * generations, tombstones, serving placement) ONLY when
+  * [[ReaderManager.version]] moved, unpersisting the superseded snapshot.
+  * The `etag` is stable across acquires of the same snapshot — a caching
+  * HTTP façade would serve 304s off it exactly like the reference.
   */
 final class IndexReaderManager(spark: SparkSession, dir: String) {
 
@@ -53,7 +53,7 @@ final class IndexReaderManager(spark: SparkSession, dir: String) {
 
   private def open(): (String, SegmentIndex) = {
     val v = ReaderManager.version(dir)
-    (v, SegmentStore.openMerged(spark, dir).cached())
+    (v, SegmentStore.open(spark, dir).cached())
   }
 
   /** Current snapshot — no freshness check, no IO (the `stale=ok` path). */
@@ -75,5 +75,25 @@ final class IndexReaderManager(spark: SparkSession, dir: String) {
       old.unpersist(blocking = false)
       true
     }
+  }
+}
+
+/** The process's one reader per index dir — Lucene's one searcher per
+  * index: `graft_search` and `Engine.segmentIndex` serve from the same
+  * cached snapshot instead of each pinning its own copy.
+  */
+object IndexReaderManager {
+
+  private val managers = scala.collection.mutable.HashMap.empty[String, IndexReaderManager]
+
+  /** The dir's manager, opened (and its snapshot cached) on first use. */
+  def of(spark: SparkSession, dir: String): IndexReaderManager = synchronized {
+    managers.getOrElseUpdate(dir, new IndexReaderManager(spark, dir))
+  }
+
+  /** Release every manager's snapshot storage and forget the managers. */
+  def releaseAll(): Unit = synchronized {
+    managers.values.foreach(_.acquire().unpersist(blocking = false))
+    managers.clear()
   }
 }

@@ -33,6 +33,8 @@ case object SEmpty extends SQ
   * them by shard, per-shard block-max WAND / doc-at-a-time scoring in
   * `flatMapGroups`, then a global TakeOrdered merge of ≤ shards×k rows.
   * The corpus-sized data never moves: only the query's posting lists do.
+  * Deleted docs are the snapshot's own [[SegmentIndex.tombstones]] unless a
+  * `tombstones` frame is given.
   */
 final class SegmentSearcher(
     si: SegmentIndex,
@@ -138,7 +140,7 @@ final class SegmentSearcher(
     // deleted ids, so delete volume scales with the cluster, and WAND
     // pruning stays active (exclusion happens at heap-offer time, which
     // keeps the threshold a valid lower bound of the kth kept score)
-    val tombRows: Option[Dataset[(Int, Long, Int)]] = tombstones.map { df =>
+    val tombRows: Option[Dataset[(Int, Long, Int)]] = tombstones.orElse(si.tombstones).map { df =>
       df.select(
         (col("docId").cast("long") / lit(dps)).cast("int").as("shard"),
         col("docId").cast("long").as("docId"),

@@ -58,8 +58,7 @@ final case class MarkerStat(pid: Int, field: String, docCount: Long, sumDl: Long
   *                plus the driver-side metadata sidecars (round 6):
   *                spec.tsv (indexField, source, kind, analyzer, boost),
   *                fieldstats.tsv (gen, field, docCount, avgdl, sumDl).
-  *                Pre-round-6 dirs carry spec/ + fieldstats/ parquet
-  *                instead; readers fall back to those when no sidecar exists
+  *   tombstones/  deleted docIds (parquet, appended per delete)
   *
   * Production note: each stage's write maps 1:1 onto an Iceberg table commit
   * (snapshot id = the checkpoint); this sandbox has no Iceberg jars, so the
@@ -78,8 +77,7 @@ object SegmentStore {
   // job (plus a full plan/optimize cycle) per tiny table per build/open —
   // pure serial tax on the build path and a fixed per-open cost on every
   // maintenance op (guide §1.2: remove driver-synchronized passes first).
-  // They are now TSV sidecars written/read driver-side with zero jobs; the
-  // parquet read paths remain as fallbacks so pre-round-6 dirs still open.
+  // They are now TSV sidecars written/read driver-side with zero jobs.
 
   private def escTsv(s: String): String = {
     val sb = new StringBuilder(s.length)
@@ -141,22 +139,11 @@ object SegmentStore {
       .map(c => (c(0), FieldStats(c(1), c(2).toLong, java.lang.Double.parseDouble(c(3)), c(4).toLong)))
       .groupBy(_._1).view.mapValues(_.map(_._2)).toMap)
 
-  /** Upsert one generation's rows into the sidecar. A pre-round-6 dir
-    * (parquet generations, no sidecar) is seeded first by folding the
-    * parquet ONCE under a `legacy` key — including the pre-sumDl per-row
-    * reconstruction [[readFieldStats]] performs — so mixed stores keep the
-    * exact openMerged fold. Idempotent per gen key (a replayed batch
-    * overwrites its own rows with identical values).
+  /** Upsert one generation's rows into the sidecar. Idempotent per gen key
+    * (a replayed batch overwrites its own rows with identical values).
     */
-  private[graft] def updateFieldStatsGen(
-      spark: SparkSession, dir: String, gen: String, rows: Seq[FieldStats]): Unit = {
-    val existing = readFieldStatsGens(dir).orElse {
-      if (!Files.exists(Paths.get(s"$dir/fieldstats"))) None
-      else Some(Map("legacy" -> readFieldStats(spark, s"$dir/fieldstats").collect().toSeq
-        .map(r => FieldStats(r.getString(0), r.getLong(1), r.getDouble(2), r.getLong(3)))))
-    }.getOrElse(Map.empty)
-    writeFieldStatsGens(dir, existing + (gen -> rows))
-  }
+  private[graft] def updateFieldStatsGen(dir: String, gen: String, rows: Seq[FieldStats]): Unit =
+    writeFieldStatsGens(dir, readFieldStatsGens(dir).getOrElse(Map.empty) + (gen -> rows))
 
   /** Lineage rows as a TSV sidecar (accumulator output — driver data). */
   private def lineageTsvPath(dir: String) = Paths.get(s"$dir/lineage/lineage.tsv")
@@ -457,44 +444,32 @@ object SegmentStore {
     * ends its changes loop on a design-doc change and starts a fresh
     * digest-named dir).
     */
-  def specChanged(spark: SparkSession, dir: String, fields: Seq[FieldDef]): Boolean =
-    stageDone(dir, "spec") && persistedSpecDigest(spark, dir).exists(_ != specDigest(fields))
+  def specChanged(dir: String, fields: Seq[FieldDef]): Boolean =
+    stageDone(dir, "spec") && persistedSpecDigest(dir).exists(_ != specDigest(fields))
 
   private def specDigestPath(dir: String) = Paths.get(s"$dir/checkpoints/spec.digest")
 
-  /** The committed spec's digest. Served from the tiny digest file when
-    * present (written by [[writeSpec]] since round 4 — cheap enough to poll
-    * every micro-batch); falls back to re-digesting the spec parquet for
-    * dirs written by earlier rounds.
+  /** The committed spec's digest, from the tiny digest file [[writeSpec]]
+    * writes — cheap enough to poll every micro-batch.
     */
-  def persistedSpecDigest(spark: SparkSession, dir: String): Option[String] =
+  def persistedSpecDigest(dir: String): Option[String] =
     if (Files.exists(specDigestPath(dir))) Some(Files.readString(specDigestPath(dir)).trim)
-    else if (stageDone(dir, "spec")) Some(specDigest(open0Fields(spark, dir)))
     else None
 
-  /** Spec schema pinned at read (round 6): schema inference over the spec
-    * parquet was a per-open job; `boost` entered the schema in round 2, so a
-    * round-1 dir reads it as null → 1.0.
+  /** A sidecar [[open]] cannot do without is missing: an error naming the
+    * file, never a default.
     */
-  private val SpecSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "indexField STRING, source STRING, kind STRING, analyzer STRING, boost DOUBLE")
+  private def missingSidecar(path: java.nio.file.Path): Nothing =
+    throw new IllegalStateException(s"$path is missing: not a committed index dir")
 
-  private def open0Fields(spark: SparkSession, dir: String): Seq[FieldDef] = {
-    import spark.implicits._
-    def mk(idxF: String, src: String, kind: String, an: String, boost: Double): FieldDef =
-      FieldDef(idxF, src, kind match {
-        case "text" => TextField(Analyzers.byName(an))
+  private def readSpec(dir: String): Seq[FieldDef] = {
+    if (!Files.exists(specTsvPath(dir))) missingSidecar(specTsvPath(dir))
+    readTsv(specTsvPath(dir)).map { c =>
+      FieldDef(c(0), c(1), c(2) match {
+        case "text" => TextField(Analyzers.byName(c(3)))
         case "string" => StringField
-      }, boost)
-    // sidecar first (driver read, no job); parquet fallback for old dirs
-    if (Files.exists(specTsvPath(dir)))
-      readTsv(specTsvPath(dir)).map(c => mk(c(0), c(1), c(2), c(3), c(4).toDouble))
-    else
-      spark.read.schema(SpecSchema).parquet(s"$dir/spec")
-        .select(col("indexField"), col("source"), col("kind"), col("analyzer"),
-          coalesce(col("boost"), lit(1.0)).as("boost"))
-        .as[(String, String, String, String, Double)].collect()
-        .map { case (idxF, src, kind, an, boost) => mk(idxF, src, kind, an, boost) }.toSeq
+      }, c(4).toDouble)
+    }
   }
 
   /** Commit the index field spec (queryable name, source column, kind,
@@ -808,36 +783,6 @@ object SegmentStore {
       .write.mode(SaveMode.Overwrite).parquet(out)
   }
 
-  /** Open an index whose `termstats`/`fieldstats`/`segments` hold several
-    * appended generations (incremental maintenance): stats are folded at
-    * read — Lucene's multi-segment reader, expressed as aggregations.
-    * NOTE: assumes a doc appears in at most one generation (append-only
-    * corpus; updates go through tombstones + optimize).
-    */
-  def openMerged(spark: SparkSession, dir: String): SegmentIndex = {
-    import spark.implicits._
-    val (base, fsRows) = openRaw(spark, dir)
-    val mergedTerm = base.termStats
-      .groupBy($"field", $"term")
-      .agg(sum($"df").as("df"), sum($"cf").as("cf"))
-      .as[TermStats]
-    // exact fold: Σdl travels as a long per generation, so the merged avgdl
-    // is one division over exact integer sums — no docCount·avgdl FP
-    // round-trip that could drift after many appended generations. The
-    // per-generation rows are tiny (#generations × #fields), so the fold
-    // runs on the driver over the SAME collect open() already did (round 6:
-    // the old shape read the fieldstats dir twice per openMerged and paid a
-    // groupBy exchange job for the fold).
-    val mergedField = fsRows
-      .groupBy(_.field).map { case (f, gens) =>
-        val dc = gens.map(_.docCount).sum
-        val sd = gens.map(_.sumDl).sum
-        f -> FieldStats(f, dc, sd.toDouble / dc.toDouble, sd)
-      }
-    new SegmentIndex(base.segments, mergedTerm, mergedField, base.fields, base.docsPerShard,
-      stored = base.stored)
-  }
-
   /** `_optimize` analog (reference DatabaseIndexer.java:274-279,
     * forceMerge(1)): decode every run, drop tombstoned docs, and re-encode
     * each (shard, field, term) as a single fresh run with tight blocks.
@@ -873,21 +818,11 @@ object SegmentStore {
     writeShardSpec(outDir, dps)
     // spec carries over VERBATIM — byte-level file copies (round 6): the
     // old read→rewrite through Spark was a whole job to reproduce a
-    // kilobyte file the source dir already holds. The sidecar TSV is the
-    // primary form; a pre-round-6 source additionally carries the spec
-    // parquet, copied as-is so the optimized dir opens under either path.
+    // kilobyte file the source dir already holds
     if (Files.exists(specTsvPath(dir))) {
       Files.createDirectories(specTsvPath(outDir).getParent)
       Files.copy(specTsvPath(dir), specTsvPath(outDir),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-    deleteRecursively(s"$outDir/spec")
-    if (Files.exists(Paths.get(s"$dir/spec"))) {
-      Files.createDirectories(Paths.get(s"$outDir/spec"))
-      scala.util.Using.resource(Files.list(Paths.get(s"$dir/spec")))(_.forEach { p =>
-        if (p.getFileName.toString.endsWith(".parquet"))
-          Files.copy(p, Paths.get(s"$outDir/spec").resolve(p.getFileName))
-      })
     }
     if (Files.exists(specDigestPath(dir))) {
       Files.createDirectories(specDigestPath(outDir).getParent)
@@ -934,26 +869,20 @@ object SegmentStore {
     val staging = s"$dir/staging-optimize"
     deleteRecursively(staging)
     optimize(spark, dir, staging, dps)
-    val subs = Seq("spec", "termstats", "fieldstats", "segments") ++
+    val subs = Seq("termstats", "segments") ++
       (if (Files.exists(Paths.get(s"$staging/stored"))) Seq("stored") else Nil)
     subs.foreach { sub =>
-      // spec/fieldstats live in the checkpoint sidecars since round 6, so
-      // their staged parquet dirs exist only when the SOURCE was an old
-      // store; the stale live dir is dropped either way (the swapped-in
-      // sidecar is authoritative)
       deleteRecursively(s"$dir/$sub")
-      if (Files.exists(Paths.get(s"$staging/$sub"))) {
-        Files.move(Paths.get(s"$staging/$sub"), Paths.get(s"$dir/$sub"))
-        // `_cleanup` hygiene: drop the Hadoop commit side-files (`_SUCCESS`,
-        // `.crc`) from the swapped-in dirs — generation promotion only ever
-        // moves `*.parquet`, and these markers are per-write artifacts, not
-        // index data; leaving them made the "cleanup shrinks the dir"
-        // observable depend on how many part files the writes happened to emit
-        scala.util.Using.resource(Files.list(Paths.get(s"$dir/$sub")))(_.forEach { p =>
-          val n = p.getFileName.toString
-          if (!n.endsWith(".parquet")) Files.delete(p)
-        })
-      }
+      Files.move(Paths.get(s"$staging/$sub"), Paths.get(s"$dir/$sub"))
+      // `_cleanup` hygiene: drop the Hadoop commit side-files (`_SUCCESS`,
+      // `.crc`) from the swapped-in dirs — generation promotion only ever
+      // moves `*.parquet`, and these markers are per-write artifacts, not
+      // index data; leaving them made the "cleanup shrinks the dir"
+      // observable depend on how many part files the writes happened to emit
+      scala.util.Using.resource(Files.list(Paths.get(s"$dir/$sub")))(_.forEach { p =>
+        val n = p.getFileName.toString
+        if (!n.endsWith(".parquet")) Files.delete(p)
+      })
     }
     // promote the staged metadata sidecars over the live ones
     Seq(specTsvPath _, specDigestPath _, fieldStatsTsvPath _).foreach { pathOf =>
@@ -999,7 +928,8 @@ object SegmentStore {
     else scala.util.Using.resource(Files.walk(path))(_.filter(Files.isRegularFile(_)).count())
   }
 
-  /** Delete-by-docId: tombstone file, honored by [[SegmentSearcher]] and
+  /** Delete-by-docId: tombstone file, attached by [[open]] to every later
+    * snapshot (so honored by [[SegmentSearcher]]) and
     * dropped for real by [[optimize]] — the reference's `deleteDocuments` +
     * `_expunge` pair (DatabaseIndexer.java:350-355,266-271).
     */
@@ -1024,6 +954,7 @@ object SegmentStore {
   /** Tombstoned docIds as a (distinct) DataFrame — the scale-safe shape:
     * the query path co-groups these with segment rows per shard, and
     * [[optimize]] anti-joins them; nothing is collected to the driver.
+    * Empty when the dir has no tombstone log.
     */
   def deletedDocsDF(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -1041,12 +972,14 @@ object SegmentStore {
     * (DatabaseIndexer.java:386-430): doc/term/byte counts and field list.
     */
   def info(spark: SparkSession, dir: String): Map[String, Any] = {
-    val idx = openMerged(spark, dir)
+    import spark.implicits._
+    val idx = open(spark, dir)
     val seg = idx.segments
     // ONE action for all the distributed counts: the segment-metadata agg
     // and the tombstone count cross-joined into a single row (each side is a
     // 1-row aggregate), instead of two separately-scheduled jobs per call
-    val tomb = deletedDocsDF(spark, dir).agg(count(lit(1)).as("del"))
+    val tomb = idx.tombstones.getOrElse(spark.emptyDataset[Long].toDF("docId"))
+      .agg(count(lit(1)).as("del"))
     val m = seg.agg(count(lit(1)), sum(col("bytes")), countDistinct(col("shard")))
       .crossJoin(tomb).head()
     Map(
@@ -1075,17 +1008,6 @@ object SegmentStore {
       s"analyzer $other has no persistable name — add it to SegmentStore.analyzerName/Analyzers.byName")
   }
 
-  /** Read a fieldstats dir tolerantly: generations written before `sumDl`
-    * entered the schema (round 5) lack the column — reconstruct their Σdl
-    * per ROW as round(docCount·avgdl), the exact inverse of how that
-    * generation's avgdl was computed. Without this, open() crashes on a
-    * pre-upgrade store, and worse, openMerged on a MIXED store (old + new
-    * generations under mergeSchema) would sum nulls as zero and fold a
-    * silently deflated avgdl into BM25.
-    */
-  private val FieldStatsSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "field STRING, docCount BIGINT, avgdl DOUBLE, sumDl BIGINT")
-
   // schemas pinned from the writer-side encoders (round 6): every
   // `spark.read.parquet` without a schema runs a footer-inference job —
   // opens and maintenance ops paid one per table read
@@ -1113,39 +1035,46 @@ object SegmentStore {
     spark.read.schema(
       inferredSchemaCache.getOrElseUpdate(path, spark.read.parquet(path).schema)).parquet(path)
 
-  private def readFieldStats(spark: SparkSession, path: String): org.apache.spark.sql.DataFrame = {
-    // explicit schema (round 6): the old mergeSchema read ran a distributed
-    // footer-merge job per open; pinning the schema reads pre-sumDl
-    // generation files as null sumDl, which the same coalesce reconstructs
-    val raw = spark.read.schema(FieldStatsSchema).parquet(path)
-    raw.select(col("field"), col("docCount"), col("avgdl"),
-      coalesce(col("sumDl"), round(col("docCount") * col("avgdl")).cast("long")).as("sumDl"))
-  }
-
-  def open(spark: SparkSession, dir: String): SegmentIndex = openRaw(spark, dir)._1
-
-  /** [[open]] plus the raw per-generation fieldstats rows — so
-    * [[openMerged]] can fold them without a second read of the dir.
+  /** Open an index dir as ONE snapshot — Lucene's multi-segment reader,
+    * expressed as aggregations: the spec, the segments, the stored sidecar
+    * and the tombstone log ([[SegmentIndex.tombstones]]) as they are now.
+    * When the fieldstats sidecar lists more than one appended generation,
+    * term stats are folded by (field, term) and field stats by field; the
+    * generation count comes from the driver-side sidecar, so deciding runs
+    * no job, and a single-generation dir reads its stats as written.
+    * NOTE: assumes a doc appears in at most one generation (append-only
+    * corpus; updates go through tombstones + optimize).
     */
-  private def openRaw(spark: SparkSession, dir: String): (SegmentIndex, Seq[FieldStats]) = {
+  def open(spark: SparkSession, dir: String): SegmentIndex = {
     import spark.implicits._
-    // boost entered the spec in round 2 — a round-1 (4-column) dir still
-    // opens, defaulting boost to 1.0 (ADVICE r2: no opaque encoder error)
-    val fields = open0Fields(spark, dir)
-    // sidecar first (driver read, no job); parquet fallback for old dirs
-    val fsRows = readFieldStatsGens(dir) match {
-      case Some(gens) => gens.toSeq.sortBy(_._1).flatMap(_._2)
-      case None => readFieldStats(spark, s"$dir/fieldstats").as[FieldStats].collect().toSeq
-    }
+    val fields = readSpec(dir)
+    val gens = readFieldStatsGens(dir).getOrElse(missingSidecar(fieldStatsTsvPath(dir)))
+    val terms = spark.read.schema(TermStatsSchema).parquet(s"$dir/termstats").as[TermStats]
+    // exact fold: Σdl travels as a long per generation, so the merged avgdl
+    // is one division over exact integer sums — no docCount·avgdl FP
+    // round-trip that could drift after many appended generations
+    val (termStats, fieldStats) =
+      if (gens.size <= 1) (terms, gens.values.flatten.map(fs => fs.field -> fs).toMap)
+      else (
+        terms.groupBy($"field", $"term").agg(sum($"df").as("df"), sum($"cf").as("cf")).as[TermStats],
+        gens.values.flatten.groupBy(_.field).map { case (f, rows) =>
+          val dc = rows.map(_.docCount).sum
+          val sd = rows.map(_.sumDl).sum
+          f -> FieldStats(f, dc, sd.toDouble / dc.toDouble, sd)
+        })
     val stored =
       if (Files.exists(Paths.get(s"$dir/stored"))) Some(readInferred(spark, s"$dir/stored"))
       else None
-    val idx = new SegmentIndex(
-      readSegments(spark, s"$dir/segments").as[SegmentRow],
-      spark.read.schema(TermStatsSchema).parquet(s"$dir/termstats").as[TermStats],
-      fsRows.map(fs => fs.field -> fs).toMap, fields, docsPerShardOf(dir), stored = stored)
-    (idx, fsRows)
+    val tombstones =
+      if (Files.exists(Paths.get(s"$dir/tombstones"))) Some(deletedDocsDF(spark, dir)) else None
+    new SegmentIndex(readSegments(spark, s"$dir/segments").as[SegmentRow], termStats, fieldStats,
+      fields, docsPerShardOf(dir), stored = stored, tombstones = tombstones)
   }
+
+  /** Same as [[open]], which folds generations itself; `perfbench/` calls
+    * it by this name.
+    */
+  def openMerged(spark: SparkSession, dir: String): SegmentIndex = open(spark, dir)
 }
 
 final class SegmentIndex(
@@ -1162,7 +1091,12 @@ final class SegmentIndex(
       * typed point/range predicates, field-sort keys, and include_fields
       * on the segment path. None when the build didn't request it.
       */
-    val stored: Option[DataFrame] = None) extends SearchableIndex {
+    val stored: Option[DataFrame] = None,
+    /** The dir's deleted docIds as of [[SegmentStore.open]]; every
+      * [[SegmentSearcher]] over this snapshot excludes them. None when the
+      * dir has no tombstone log.
+      */
+    val tombstones: Option[DataFrame] = None) extends SearchableIndex {
 
   /** Driver-side term-stats memo (see TextIndex.statsCache); LRU-bounded —
     * an open-ended query vocabulary must not grow the driver map forever.
@@ -1212,8 +1146,10 @@ final class SegmentIndex(
     val aligned = GraftColumn.internalCreateDataFrame(spark, placed, schema)
       .sortWithinPartitions("field", "term", "minDoc")
       .as(Encoders.product[SegmentRow])
-    val idx = new SegmentIndex(aligned, termStats, fieldStats, fields, docsPerShard,
-      shardAligned = true, stored = stored.map(_.persist()))
+    val idx = new SegmentIndex(aligned,
+      SegmentIndex.ownPlan(termStats.toDF()).as(Encoders.product[TermStats]), fieldStats, fields,
+      docsPerShard, shardAligned = true, stored = stored.map(SegmentIndex.ownPlan(_).persist()),
+      tombstones = tombstones)
     idx.segments.persist()
     idx.termStats.persist()
     idx
@@ -1232,6 +1168,15 @@ final class SegmentIndex(
 }
 
 object SegmentIndex {
+
+  /** `df` re-rooted on its own RDD, so a persist of it matches only this
+    * snapshot. Spark's cache manager matches a parquet scan by its root
+    * path: a snapshot that pinned `dir/termstats` as read would serve its
+    * pinned rows to every later read of that path, stale once a new
+    * generation lands there.
+    */
+  private def ownPlan(df: DataFrame): DataFrame =
+    GraftColumn.internalCreateDataFrame(df.sparkSession, df.queryExecution.toRdd, df.schema)
 
   /** Shard `s` → partition `s % numPartitions`: exact serving placement. */
   private final class ShardPartitioner(val numPartitions: Int) extends Partitioner {

@@ -84,7 +84,7 @@ trait SearchableIndex {
 
 /** Per-field corpus statistics for BM25: number of docs with the field,
   * average field length, and the exact Σdl the average was derived from.
-  * `sumDl` makes multi-generation folds exact — `openMerged` sums longs and
+  * `sumDl` makes multi-generation folds exact — `open` sums longs and
   * divides once instead of reconstituting Σdl as docCount·avgdl (an FP
   * round-trip that could drift a 4th decimal after many generations).
   */

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, Stati
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
-import graft.index.{SegmentIndex, SegmentSearcher, SegmentStore}
+import graft.index.{IndexReaderManager, SegmentSearcher}
 import graft.query.SearchOptions
 
 /** Native Catalyst surface for the segment-store search path (SURVEY.md
@@ -19,7 +19,9 @@ import graft.query.SearchOptions
   * pruned segment scan, per-shard block-max WAND / MAXSCORE, global
   * TakeOrdered merge — so SQL users get the same physical plan as the
   * programmatic API, and Catalyst sees an honest leaf (top-k cardinality in
-  * `computeStats`, so a join against the hits broadcasts).
+  * `computeStats`, so a join against the hits broadcasts). Each execution
+  * refreshes the dir's [[IndexReaderManager]] first, so a query sees every
+  * committed append and delete.
   */
 case class FullTextSearch(
     indexDir: String,
@@ -56,25 +58,12 @@ case class FullTextSearchExec(
     limit: Int) extends LeafExecNode {
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val spark = SparkSession.active
-    val idx = FullTextSearchExec.indexCache.getOrElseUpdate(indexDir,
-      SegmentStore.openMerged(spark, indexDir).cached())
-    new SegmentSearcher(idx, SearchOptions(limit = limit))
+    val reader = IndexReaderManager.of(SparkSession.active, indexDir)
+    reader.maybeRefresh()
+    new SegmentSearcher(reader.acquire(), SearchOptions(limit = limit))
       .search(query).queryExecution.toRdd
   }
 
   override def simpleString(maxFields: Int): String =
     s"FullTextSearchExec dir=$indexDir q='$query' k=$limit"
-}
-
-object FullTextSearchExec {
-  /** Per-JVM open-index memo (Lucene's reader cache analog). */
-  private[plans] val indexCache =
-    scala.collection.concurrent.TrieMap.empty[String, SegmentIndex]
-
-  /** Forget every memoized index and release its pinned storage. */
-  def clearCache(): Unit = {
-    indexCache.values.foreach(_.unpersist(blocking = false))
-    indexCache.clear()
-  }
 }

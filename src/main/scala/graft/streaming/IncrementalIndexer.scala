@@ -18,7 +18,7 @@ import graft.index._
   * `seq.isLaterThan(pending_seq)` guard at DatabaseIndexer.java:361).
   *
   * Layout matches [[SegmentStore]] with `segments/` and `termstats/` written
-  * in append mode; [[SegmentStore.openMerged]] folds the generations
+  * in append mode; [[SegmentStore.open]] folds the generations
   * together at read (Lucene's multi-segment reader, table-style).
   */
 object IncrementalIndexer {
@@ -63,7 +63,7 @@ object IncrementalIndexer {
     * batch: staging is overwritten, any partially-promoted `genN-*` files
     * are deleted first, and promotion repeats — the live dirs end up with
     * exactly one copy of the generation, never a duplicate (a duplicated
-    * generation would double df/cf and break openMerged's
+    * generation would double df/cf and break open's
     * one-generation-per-doc assumption).
     */
   def appendBatch(
@@ -170,7 +170,7 @@ object IncrementalIndexer {
       // a whole Spark job per micro-batch for #fields rows). Idempotent per
       // gen key, and still BEFORE writeMeta: a crash window replays the
       // batch, which overwrites the same key with identical rows.
-      SegmentStore.updateFieldStatsGen(spark, dir, s"gen$batchId", fsRows)
+      SegmentStore.updateFieldStatsGen(dir, s"gen$batchId", fsRows)
       SegmentStore.deleteRecursively(staging)
     } finally withIds.unpersist(blocking = false)
     writeMeta(dir, Meta(meta.nextDocId + n, batchId))
@@ -265,7 +265,7 @@ object IncrementalIndexer {
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
       fields: Seq[FieldDef]): Boolean = {
-    val changed = SegmentStore.specChanged(spark, dir, fields)
+    val changed = SegmentStore.specChanged(dir, fields)
     if (changed) SegmentStore.deleteRecursively(dir)
     changed
   }
@@ -302,7 +302,7 @@ object IncrementalIndexer {
       .trigger(trigger)
       .option("checkpointLocation", s"$dir/checkpoints/stream")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (SegmentStore.persistedSpecDigest(spark, dir).exists(_ != startedDigest))
+        if (SegmentStore.persistedSpecDigest(dir).exists(_ != startedDigest))
           throw new SpecChangedException(dir)
         appendBatch(batch, batchId, dir, orderCols, fields, storedColumns = storedColumns)
       }

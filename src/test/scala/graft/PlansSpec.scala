@@ -31,7 +31,7 @@ class PlansSpec extends SparkSpec {
   test("clearCaches releases the storage a graft_search query pinned") {
     graft.functions.GraftExtensions.register(spark)
     val dir = Engine.segmentIndexDir(spark, sfDir)
-    graft.plans.FullTextSearchExec.clearCache() // the query below opens its index afresh
+    graft.index.IndexReaderManager.releaseAll() // the query below opens its index afresh
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     spark.sql(s"SELECT docId, score FROM graft_search('$dir', 'dup', 10)").collect()
@@ -39,6 +39,32 @@ class PlansSpec extends SparkSpec {
     assert(pinned.nonEmpty)
     Engine.clearCaches()
     assert(sc.getPersistentRDDs.keySet.intersect(pinned).isEmpty)
+  }
+
+  test("clearCaches releases the storage the DataFrame engine's text indexes pinned") {
+    Engine.clearCaches() // the queries below build both text indexes afresh
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    Engine.topk(spark, sfDir, "dup").collect()
+    Engine.topkEvents(spark, sfDir, "day<date>:2024-01-10").collect()
+    val pinned = sc.getPersistentRDDs.keySet -- before
+    assert(pinned.nonEmpty)
+    Engine.clearCaches()
+    assert(sc.getPersistentRDDs.keySet.intersect(pinned).isEmpty)
+  }
+
+  test("Engine.segmentIndex and graft_search over the same dir share one cached index") {
+    graft.functions.GraftExtensions.register(spark)
+    Engine.clearCaches() // the calls below open the dir's index afresh
+    val dir = Engine.segmentIndexDir(spark, sfDir)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    new graft.index.SegmentSearcher(Engine.segmentIndex(spark, sfDir), SearchOptions(limit = 10))
+      .topK("dup")
+    val pinned = sc.getPersistentRDDs.keySet
+    assert((pinned -- before).nonEmpty)
+    spark.sql(s"SELECT docId, score FROM graft_search('$dir', 'dup', 10)").collect()
+    assert(sc.getPersistentRDDs.keySet -- pinned === Set.empty)
   }
 
   test("top-k is TakeOrderedAndProject (bounded heaps, no global sort)") {

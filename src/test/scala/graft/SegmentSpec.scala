@@ -53,6 +53,14 @@ class SegmentSpec extends SparkSpec {
     }
   }
 
+  test("opening a dir without checkpoints/spec.tsv is an error naming the file") {
+    val dir = Files.createTempDirectory("graft-seg-nospec").toString
+    SegmentStore.build(docs.filter(col("docId") < 50), "docId", fields, dir, docsPerShard = 257)
+    Files.delete(java.nio.file.Paths.get(s"$dir/checkpoints/spec.tsv"))
+    val e = intercept[IllegalStateException](SegmentStore.open(spark, dir))
+    assert(e.getMessage.contains("checkpoints/spec.tsv"), e.getMessage)
+  }
+
   test("hot terms split across multiple runs and reassemble") {
     import spark.implicits._
     // role:user is a hot term by construction; with tiny shards it must

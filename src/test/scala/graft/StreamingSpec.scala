@@ -55,6 +55,54 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("one index history: open, graft_search and the NRT reader agree after appends and a delete") {
+    graft.functions.GraftExtensions.register(spark)
+    val dir = Files.createTempDirectory("graft-one-history").toString
+    def append(from: Long, until: Long, batchId: Long): Unit =
+      IncrementalIndexer.appendBatch(turnsDF(from, until), batchId, dir, Seq("conv_id", "turn_idx"), fields, 257)
+    def sql(q: String): Seq[(Long, Double)] =
+      spark.sql(s"SELECT docId, score FROM graft_search('$dir', '$q', 10)").collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq.sortBy { case (d, sc) => (-sc, d) }
+    append(0, 40, 0L)
+    append(40, 80, 1L)
+    // two generations open as the batch build over the same corpus
+    val opened = SegmentStore.open(spark, dir)
+    assert(opened.fieldStats.keySet === batchIndex.fieldStats.keySet)
+    batchIndex.fieldStats.foreach { case (f, ref) =>
+      val fs = opened.fieldStats(f)
+      assert(fs.docCount === ref.docCount, s"docCount differs for $f")
+      assert(math.abs(fs.avgdl - ref.avgdl) <= 1e-9, s"avgdl differs for $f: ${fs.avgdl} vs ${ref.avgdl}")
+    }
+    queries.foreach { q =>
+      val a = topK(opened, q)
+      val b = topK(batchIndex, q)
+      assert(a.map(_._1) === b.map(_._1), s"docIds differ for q=$q")
+      a.zip(b).foreach { case ((_, x), (_, y)) => assert(math.abs(x - y) <= 1e-9, s"q=$q") }
+    }
+    // graft_search serves the dir's reader; a later append must reach it,
+    // and every reader must equal a batch build of the whole history
+    sql("hello")
+    append(80, 120, 2L)
+    val fresh = topK(SegmentStore.open(spark, dir), "hello")
+    val refDir = Files.createTempDirectory("graft-one-history-ref").toString
+    SegmentStore.build(DocIds.assign(turnsDF(0, 120), Seq("conv_id", "turn_idx"), "docId", 8),
+      "docId", fields, refDir, docsPerShard = 257)
+    val ref = topK(SegmentStore.open(spark, refDir), "hello")
+    assert(fresh.map(_._1) === ref.map(_._1))
+    fresh.zip(ref).foreach { case ((_, x), (_, y)) => assert(math.abs(x - y) <= 1e-9) }
+    assert(sql("hello") === fresh)
+    // a delete reaches a fresh open, graft_search and a refreshed NRT reader
+    val mgr = new IndexReaderManager(spark, dir)
+    val victim = fresh.head._1
+    SegmentStore.deleteDocs(spark, dir, Seq(victim))
+    val afterDelete = topK(SegmentStore.open(spark, dir), "hello")
+    assert(!afterDelete.map(_._1).contains(victim))
+    assert(sql("hello") === afterDelete)
+    mgr.maybeRefresh()
+    try assert(!topK(mgr.acquire(), "hello").map(_._1).contains(victim))
+    finally mgr.acquire().unpersist(blocking = false)
+  }
+
   test("optimize of a wide-shard index (docsPerShard > Int.MaxValue) re-synthesizes markers") {
     val dir = Files.createTempDirectory("graft-wide").toString
     val out = Files.createTempDirectory("graft-wide-opt").toString
@@ -112,29 +160,6 @@ class StreamingSpec extends SparkSpec {
         fields, 257, storedColumns = Seq("no_such_column"))
     }
     assert(spark.sparkContext.getPersistentRDDs.keySet === before)
-  }
-
-  test("pre-sumDl fieldstats generations still open and fold exactly (round-5 schema compat)") {
-    val dir = Files.createTempDirectory("graft-legacy-fs").toString
-    IncrementalIndexer.appendBatch(turnsDF(0, 40), 0L, dir, Seq("conv_id", "turn_idx"), fields, 257)
-    // rewrite generation 0's fieldstats as a PARQUET table WITHOUT sumDl —
-    // a store written before the column entered the schema (round 5), which
-    // also predates the round-6 fieldstats sidecar: delete the sidecar too,
-    // so the open exercises the legacy parquet path end-to-end
-    val gen0 = SegmentStore.open(spark, dir).fieldStats.values.toSeq
-      .map(fs => (fs.field, fs.docCount, fs.avgdl))
-    SegmentStore.deleteRecursively(s"$dir/fieldstats")
-    Files.deleteIfExists(SegmentStore.fieldStatsTsvPath(dir))
-    spark.createDataFrame(gen0).toDF("field", "docCount", "avgdl")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/fieldstats")
-    // a post-upgrade generation lands next to it (mixed-schema store)
-    IncrementalIndexer.appendBatch(turnsDF(40, 80), 1L, dir, Seq("conv_id", "turn_idx"), fields, 257)
-    val merged = SegmentStore.openMerged(spark, dir)
-    merged.fieldStats.foreach { case (f, fs) =>
-      val ref = batchIndex.fieldStats(f)
-      assert(fs.docCount == ref.docCount, s"docCount differs for $f")
-      assert(math.abs(fs.avgdl - ref.avgdl) < 1e-9, s"avgdl differs for $f: ${fs.avgdl} vs ${ref.avgdl}")
-    }
   }
 
   test("a later batch passing a different docsPerShard cannot re-shard the index (round 5)") {
