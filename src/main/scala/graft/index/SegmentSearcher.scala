@@ -21,18 +21,19 @@ final case class SConst(field: String, terms: Seq[String]) extends SQ
 final case class SBool(musts: Seq[SQ], shoulds: Seq[SQ], nots: Seq[SQ]) extends SQ
 final case class SBoost(inner: SQ, boost: Double) extends SQ
 /** Constant-score doc-value predicate (typed point/range/match-all): the
-  * matching docIds are materialized per shard from the stored sidecar and
-  * shipped alongside the posting rows, keyed by `predId`.
+  * matching docIds are materialized from the stored sidecar and shipped to
+  * their shards as doc-set rows under term `predId`.
   */
 final case class SDocSet(predId: Int) extends SQ
 case object SEmpty extends SQ
 
 /** Distributed top-k over the compressed, doc-sharded segment store — the
   * 100 TB query path. Execution: a partition-pruned scan of the query
-  * terms' segment rows (a few rows per shard), one small shuffle grouping
-  * them by shard, per-shard block-max WAND / doc-at-a-time scoring in
-  * `flatMapGroups`, then a global TakeOrdered merge of ≤ shards×k rows.
-  * The corpus-sized data never moves: only the query's posting lists do.
+  * terms' segment rows (a few rows per shard) plus the query's doc-set
+  * rows (deleted docs, doc-value matches: [[SegmentStore.DocSetField]]),
+  * ONE per-shard block-max WAND / doc-at-a-time `mapPartitions` stage over
+  * whole-shard partitions, then a global TakeOrdered merge of ≤ shards×k
+  * rows. The corpus-sized data never moves: only the query's rows do.
   * Deleted docs are the snapshot's own [[SegmentIndex.tombstones]] unless a
   * `tombstones` frame is given.
   */
@@ -91,28 +92,37 @@ final class SegmentSearcher(
     val k = opts.skip + opts.limit
     val dps = si.docsPerShard
     import spark.implicits._
-    // typed point/range/match-all queries: one column-pruned,
-    // predicate-pushed sidecar scan per predicate, tagged by predId — a
-    // materialized posting list shuffled by shard like the term rows
+    import SegmentStore.DocSetField, SegmentSearcher.DeletedTerm
+    def docSetRows(docIds: DataFrame, term: String): Dataset[SegmentRow] = {
+      val d = col("docId").cast("long")
+      docIds.select((d / lit(dps)).cast("int").as("shard"), lit(DocSetField).as("field"),
+        lit(term).as("term"), lit(0L).as("df"), lit(0L).as("cf"), d.as("minDoc"), d.as("maxDoc"),
+        lit(0L).as("bytes"), lit(0).as("pid"), typedLit(Seq.empty[Block]).as("blocks")).as[SegmentRow]
+    }
+    // typed point/range/match-all queries: one column-pruned, predicate-
+    // pushed sidecar scan per predicate, its matches tagged by predId
     // (reference CustomQueryParser.java:113-128, FieldType.java:40-162)
-    val dvRows: Option[Dataset[(Int, Long, Int)]] =
-      if (preds.isEmpty) None
-      else {
-        val st = stored("typed doc-value queries")
-        Some(preds.zipWithIndex.map { case (pred, id) =>
-          st.filter(pred).select(
-            (col("docId") / lit(dps)).cast("int").as("shard"),
-            col("docId"),
-            lit(id).as("predId")).as[(Int, Long, Int)]
-        }.reduce(_ union _))
-      }
+    val dvRows = preds.zipWithIndex.map { case (pred, id) =>
+      docSetRows(stored("typed doc-value queries").filter(pred), id.toString)
+    }
     if (sq == SEmpty) return spark.emptyDataset[(Long, Double)].toDF("docId", "score")
+    // tombstones too, not a driver Set broadcast: each shard sees only ITS
+    // deleted ids, and WAND pruning stays active (exclusion at heap-offer
+    // time keeps the threshold a valid lower bound of the kth kept score)
+    val docSets = dvRows ++ tombstones.orElse(si.tombstones).map(docSetRows(_, DeletedTerm))
     val leaves = SegmentSearcher.leafTerms(sq)
     val cond =
-      if (leaves.isEmpty) lit(false) // doc-value-only query: all matches ride the aux channel
+      if (leaves.isEmpty) lit(false) // doc-value-only query: all matches are doc-set rows
       else leaves.map { case (f, t) => (col("field") === f) && (col("term") === t) }.reduce(_ || _)
-    def byTermOf(rows: Iterator[SegmentRow]): Map[(String, String), IndexedSeq[Codec.Block]] =
-      rows.toSeq.groupBy(r => (r.field, r.term)).map { case (key, rs) =>
+    // serving path: cached() already placed whole shards per partition, so
+    // a query without doc-set rows is ONE narrow stage; anything else takes
+    // one per-query shuffle of its few rows by shard
+    val postings = si.segments.filter(cond)
+    val input =
+      if (docSets.isEmpty && si.shardAligned) postings
+      else (postings +: docSets).reduce(_ union _).repartition(col("shard"))
+    def byTermOf(rows: Seq[SegmentRow]): Map[(String, String), IndexedSeq[Codec.Block]] =
+      rows.groupBy(r => (r.field, r.term)).map { case (key, rs) =>
         key -> rs.sortBy(_.minDoc).flatMap(_.blocks).toIndexedSeq
       }
     def run(shard: Int, byTerm: Map[(String, String), IndexedSeq[Codec.Block]],
@@ -135,52 +145,16 @@ final class SegmentSearcher(
           acc.add((shard, cnt))
           res.iterator
       }
-    // tombstones ride the same shard-keyed channel as predId = -1 — a
-    // co-group, not a driver Set broadcast: each shard sees only ITS
-    // deleted ids, so delete volume scales with the cluster, and WAND
-    // pruning stays active (exclusion happens at heap-offer time, which
-    // keeps the threshold a valid lower bound of the kth kept score)
-    val tombRows: Option[Dataset[(Int, Long, Int)]] = tombstones.orElse(si.tombstones).map { df =>
-      df.select(
-        (col("docId").cast("long") / lit(dps)).cast("int").as("shard"),
-        col("docId").cast("long").as("docId"),
-        lit(-1).as("predId")).as[(Int, Long, Int)]
-    }
-    val aux: Option[Dataset[(Int, Long, Int)]] = (dvRows, tombRows) match {
-      case (Some(a), Some(b)) => Some(a.union(b))
-      case (a, b) => a.orElse(b)
-    }
-    lazy val grouped = si.segments.filter(cond).groupByKey(_.shard)
-    val perShard = aux match {
-      case None if si.shardAligned =>
-        // serving path: partitions already hold whole shards (cached()), so
-        // the query is ONE narrow stage — no per-query shuffle
-        si.segments.filter(cond).mapPartitions { it =>
-          it.toSeq.groupBy(_.shard).iterator.flatMap { case (sh, rows) =>
-            run(sh, byTermOf(rows.iterator), Map.empty, _ => false)
-          }
-        }
-      case None =>
-        grouped.flatMapGroups { (sh, rows) => run(sh, byTermOf(rows), Map.empty, _ => false) }
-      case Some(auxDs) =>
-        grouped.cogroup(auxDs.groupByKey(_._1)) { (sh, rows, auxIt) =>
-          val del = scala.collection.mutable.HashSet.empty[Long]
-          val sets = scala.collection.mutable.HashMap
-            .empty[Int, scala.collection.mutable.ArrayBuffer[Long]]
-          auxIt.foreach { case (_, docId, predId) =>
-            if (predId < 0) del += docId
-            else sets.getOrElseUpdate(predId,
-              new scala.collection.mutable.ArrayBuffer[Long]) += docId
-          }
-          val docSets = sets.map { case (id, b) =>
-            val arr = b.toArray
-            java.util.Arrays.sort(arr) // scorer cursors need docId order
-            id -> arr
-          }.toMap
-          run(sh, byTermOf(rows), docSets, del.contains)
-        }
-    }
-    perShard.toDF("docId", "score")
+    input.mapPartitions { it =>
+      it.toSeq.groupBy(_.shard).iterator.flatMap { case (sh, rows) =>
+        val (setRows, postingRows) = rows.partition(_.field == DocSetField)
+        // docId order: scorer cursors walk these and deletes binary-search them
+        val ids = setRows.groupBy(_.term).map { case (t, rs) => t -> rs.map(_.minDoc).toArray.sorted }
+        val del = ids.getOrElse(DeletedTerm, Array.emptyLongArray)
+        run(sh, byTermOf(postingRows), (ids - DeletedTerm).map { case (t, a) => t.toInt -> a },
+          if (del.isEmpty) _ => false else java.util.Arrays.binarySearch(del, _) >= 0)
+      }
+    }.toDF("docId", "score")
   }
 
   def topK(q: String): Seq[(Long, Double)] =
@@ -238,6 +212,9 @@ object SegmentSearcher {
     * query strings re-analyze (cheap) instead of accumulating forever.
     */
   val PlanCacheCapacity = 2048
+
+  /** Doc-set-row term of a deleted doc (a doc-value match's is its predId). */
+  private val DeletedTerm = "-1"
 
   def leafTerms(sq: SQ): Seq[(String, String)] = sq match {
     case STerm(f, t, _, _) => Seq((f, t))

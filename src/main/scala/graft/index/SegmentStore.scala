@@ -66,6 +66,12 @@ final case class MarkerStat(pid: Int, field: String, docCount: Long, sumDl: Long
   */
 object SegmentStore {
 
+  /** Reserved field of doc-set rows: one-doc, blockless [[SegmentRow]]s
+    * (`minDoc = maxDoc = docId`) carrying a query's deleted docs and
+    * doc-value matches to their shard ([[SegmentSearcher]]).
+    */
+  val DocSetField = ""
+
   private def ckptPath(dir: String, stage: String) = Paths.get(s"$dir/checkpoints/$stage.json")
 
   // ---- driver-side metadata sidecars (round 6) -------------------------
@@ -110,10 +116,8 @@ object SegmentStore {
     sb.toString
   }
 
-  private def writeTsv(path: java.nio.file.Path, lines: Seq[String]): Unit = {
-    Files.createDirectories(path.getParent)
-    Files.writeString(path, lines.mkString("", "\n", "\n"))
-  }
+  private def writeTsv(path: java.nio.file.Path, lines: Seq[String]): Unit =
+    writeAtomically(path, lines.mkString("", "\n", "\n"))
 
   private def readTsv(path: java.nio.file.Path): Seq[Array[String]] =
     Files.readString(path).split("\n").toSeq.filter(_.nonEmpty)
@@ -159,31 +163,43 @@ object SegmentStore {
 
   // ---- shard spec (docsPerShard) ---------------------------------------
   // Persisted so readers can route a docId to its shard without scanning
-  // segment metadata — tombstone rows are co-grouped with their shard's
-  // posting rows at query time (no driver-side Set broadcast).
+  // segment metadata — deleted docs and doc-value matches reach their
+  // shard's scoring task as doc-set rows (no driver-side Set broadcast).
 
   private def shardSpecPath(dir: String) = Paths.get(s"$dir/checkpoints/shardspec.json")
 
   def hasShardSpec(dir: String): Boolean = Files.exists(shardSpecPath(dir))
 
-  def writeShardSpec(dir: String, docsPerShard: Long): Unit = {
-    Files.createDirectories(shardSpecPath(dir).getParent)
-    Files.writeString(shardSpecPath(dir), s"""{"docsPerShard": $docsPerShard}""")
+  def writeShardSpec(dir: String, docsPerShard: Long): Unit =
+    writeAtomically(shardSpecPath(dir), s"""{"docsPerShard": $docsPerShard}""")
+
+  /** Write through a sibling temp file + atomic move: never a torn file. */
+  private[graft] def writeAtomically(path: java.nio.file.Path, body: String): Unit = {
+    Files.createDirectories(path.getParent)
+    val tmp = Files.createTempFile(path.getParent, s".${path.getFileName}", ".tmp")
+    Files.writeString(tmp, body)
+    Files.move(tmp, path, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
+
+  /** The long `name` of a checkpoint JSON sidecar; a file without it is
+    * corrupt (a guess would mis-route docIds or reuse them). */
+  private[graft] def jsonLong(path: java.nio.file.Path, name: String): Long =
+    s""""$name":\\s*(-?\\d+)""".r.findFirstMatchIn(Files.readString(path))
+      .map(_.group(1).toLong)
+      .getOrElse(throw new IllegalStateException(s"$path has no $name value"))
 
   def docsPerShardOf(dir: String): Long =
     if (!Files.exists(shardSpecPath(dir))) {
       // A lost shardspec under an index WITH tombstones is not guessable:
-      // a wrong docsPerShard routes deleted docIds to the wrong shard
-      // co-group and deleted docs silently reappear. Refuse to serve.
+      // a wrong docsPerShard routes deleted docIds to the wrong shard's
+      // scoring task and deleted docs silently reappear. Refuse to serve.
       if (Files.exists(Paths.get(s"$dir/tombstones")))
         throw new IllegalStateException(
           s"$dir has tombstones but no checkpoints/shardspec.json — refusing to guess " +
             "docsPerShard (deletes would be silently mis-routed); restore the shardspec " +
             "or run optimize() to rewrite the index")
       1L << 20
-    } else """"docsPerShard":\s*(\d+)""".r.findFirstMatchIn(Files.readString(shardSpecPath(dir)))
-      .map(_.group(1).toLong).getOrElse(1L << 20)
+    } else jsonLong(shardSpecPath(dir), "docsPerShard")
 
   def stageDone(dir: String, stage: String): Boolean = Files.exists(ckptPath(dir, stage))
 
@@ -254,9 +270,8 @@ object SegmentStore {
   }
 
   private def commitStage(dir: String, stage: String, metrics: Map[String, Long]): Unit = {
-    Files.createDirectories(Paths.get(s"$dir/checkpoints"))
     val body = metrics.map { case (k, v) => s""""$k": $v""" }.mkString("{", ", ", "}")
-    Files.writeString(ckptPath(dir, stage),
+    writeAtomically(ckptPath(dir, stage),
       s"""{"stage": "$stage", "completedAtMs": ${System.currentTimeMillis()}, "metrics": $body}""")
   }
 
@@ -477,6 +492,8 @@ object SegmentStore {
     * analyzers. Shared by the batch build and the incremental appender.
     */
   def writeSpec(spark: SparkSession, dir: String, fields: Seq[FieldDef]): Unit = {
+    require(!fields.exists(_.indexField == DocSetField),
+      "the empty index field name is reserved for doc-set rows")
     // driver-side sidecar write (round 6): the spec is #fields rows of
     // in-memory data — the old coalesce(1) parquet write scheduled a whole
     // Spark job (plus a plan cycle) per build/append to persist a kilobyte
@@ -488,8 +505,7 @@ object SegmentStore {
       s"${escTsv(f.indexField)}\t${escTsv(f.source)}\t$kind\t${escTsv(an)}\t" +
         java.lang.Double.toString(f.boost)
     })
-    Files.createDirectories(specDigestPath(dir).getParent)
-    Files.writeString(specDigestPath(dir), specDigest(fields))
+    writeAtomically(specDigestPath(dir), specDigest(fields))
     commitStage(dir, "spec", Map("fields" -> fields.size.toLong))
   }
 
@@ -951,15 +967,16 @@ object SegmentStore {
     docIds.select(col("docId").cast("long").as("docId"))
       .write.mode(SaveMode.Append).parquet(s"$dir/tombstones")
 
-  /** Tombstoned docIds as a (distinct) DataFrame — the scale-safe shape:
-    * the query path co-groups these with segment rows per shard, and
-    * [[optimize]] anti-joins them; nothing is collected to the driver.
-    * Empty when the dir has no tombstone log.
+  /** Tombstoned docIds as a DataFrame — the scale-safe shape: the query
+    * path routes these to their shards as doc-set rows, and [[optimize]]
+    * anti-joins them; nothing is collected to the driver. A docId deleted
+    * twice appears twice (both consumers tolerate it; no per-read
+    * shuffle). Empty when the dir has no tombstone log.
     */
   def deletedDocsDF(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     if (!Files.exists(Paths.get(s"$dir/tombstones"))) spark.emptyDataset[Long].toDF("docId")
-    else spark.read.schema("docId BIGINT").parquet(s"$dir/tombstones").distinct()
+    else spark.read.schema("docId BIGINT").parquet(s"$dir/tombstones")
   }
 
   /** Driver-side tombstone set — bounded uses only (tests, info counts). */
@@ -979,7 +996,7 @@ object SegmentStore {
     // and the tombstone count cross-joined into a single row (each side is a
     // 1-row aggregate), instead of two separately-scheduled jobs per call
     val tomb = idx.tombstones.getOrElse(spark.emptyDataset[Long].toDF("docId"))
-      .agg(count(lit(1)).as("del"))
+      .agg(countDistinct(col("docId")).as("del"))
     val m = seg.agg(count(lit(1)), sum(col("bytes")), countDistinct(col("shard")))
       .crossJoin(tomb).head()
     Map(

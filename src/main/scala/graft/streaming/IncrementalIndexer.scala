@@ -36,21 +36,17 @@ object IncrementalIndexer {
 
   private def metaPath(dir: String) = Paths.get(s"$dir/checkpoints/incremental.json")
 
+  /** The committed meta; a file lacking a value raises (read as 0, it
+    * would skip batch 0 or hand out docIds again from 0). */
   def readMeta(dir: String): Meta = {
     val p = metaPath(dir)
     if (!Files.exists(p)) Meta(0L, -1L)
-    else {
-      val s = Files.readString(p)
-      def field(name: String): Long =
-        s"""\"$name\":\\s*(-?\\d+)""".r.findFirstMatchIn(s).map(_.group(1).toLong).getOrElse(0L)
-      Meta(field("nextDocId"), field("lastBatch"))
-    }
+    else Meta(SegmentStore.jsonLong(p, "nextDocId"), SegmentStore.jsonLong(p, "lastBatch"))
   }
 
-  private def writeMeta(dir: String, m: Meta): Unit = {
-    Files.createDirectories(metaPath(dir).getParent)
-    Files.writeString(metaPath(dir), s"""{"nextDocId": ${m.nextDocId}, "lastBatch": ${m.lastBatch}}""")
-  }
+  private def writeMeta(dir: String, m: Meta): Unit =
+    SegmentStore.writeAtomically(metaPath(dir),
+      s"""{"nextDocId": ${m.nextDocId}, "lastBatch": ${m.lastBatch}}""")
 
   /** Append one batch of new documents to the index. Idempotent per
     * batchId: a replay of an already-committed batch is a no-op.

@@ -64,4 +64,15 @@ class HygieneSpec extends SparkSpec {
     assert(s.topK("gamma").map(_._1) === Seq(1L))
     assert(s.topK("alpha").map(_._1) === Seq(0L))
   }
+
+  test("build and appendBatch reject the index field name reserved for doc-set rows") {
+    import spark.implicits._
+    val docs = Seq((0L, "alpha beta")).toDF("id", "text")
+    val reserved = Seq(FieldDef("", "text", TextField(Analyzers.Standard)))
+    def fresh() = java.nio.file.Files.createTempDirectory("graft-reserved").toString
+    intercept[IllegalArgumentException](
+      SegmentStore.build(docs, "id", reserved, fresh(), docsPerShard = 16))
+    intercept[IllegalArgumentException](
+      graft.streaming.IncrementalIndexer.appendBatch(docs, 0L, fresh(), Seq("id"), reserved, 16))
+  }
 }

@@ -342,7 +342,7 @@ class SegmentSpec extends SparkSpec {
             assert(cachedS.topK(q) === rawS.topK(q), s"top-k differs for q=$q")
             assert(cachedS.topKWithTotal(q) === rawS.topKWithTotal(q), s"totals differ for q=$q")
           }
-          // tombstones route the cached index through the co-group branch
+          // tombstones send the cached index through the per-query repartition
           SegmentStore.deleteDocs(spark, dir, rawS.topK("hello").take(3).map(_._1))
           val tomb = Some(SegmentStore.deletedDocsDF(spark, dir))
           Seq("hello", "hello world", "hello AND world").foreach { q =>
@@ -352,5 +352,62 @@ class SegmentSpec extends SparkSpec {
           }
         } finally idx.unpersist(blocking = true)
       }
+  }
+
+  test("every segment query is one per-shard stage: one shuffle, no co-group, group or sort") {
+    import org.apache.spark.sql.execution.{CoGroupExec, MapGroupsExec, SortExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    def assertOneStage(df: org.apache.spark.sql.DataFrame, what: String): Unit = {
+      // AQE's initial plan: the final plan's collect stops at query stages
+      val plan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case other => other
+      }
+      assert(plan.collect { case e: ShuffleExchangeLike => e }.size === 1, s"$what:\n$plan")
+      assert(plan.collect { case n @ (_: CoGroupExec | _: MapGroupsExec | _: SortExec) => n }.isEmpty,
+        s"$what:\n$plan")
+    }
+    val dir = Files.createTempDirectory("graft-seg-one-stage").toString
+    SegmentStore.build(docs, "docId", fields, dir, docsPerShard = 257, storedColumns = Seq("turn_idx"))
+    val opts = SearchOptions(limit = 10)
+    val live = new SegmentSearcher(SegmentStore.open(spark, dir), opts)
+    assertOneStage(live.search("hello world"), "uncached hello world")
+    val deleted = live.topK("hello").take(3).map(_._1)
+    SegmentStore.deleteDocs(spark, dir, deleted)
+    val idx = SegmentStore.open(spark, dir).cached()
+    try {
+      val cachedS = new SegmentSearcher(idx, opts)
+      val rawS = new SegmentSearcher(SegmentStore.open(spark, dir), opts)
+      Seq("hello world", "turn_idx<long>:[2 TO 6] AND hello", "turn_idx<long>:0").foreach { q =>
+        assertOneStage(cachedS.search(q), s"cached, tombstoned q=$q")
+        val got = cachedS.topKWithTotal(q)
+        assert(got._1.nonEmpty, s"q=$q")
+        assert(got === rawS.topKWithTotal(q), s"cached ≠ uncached for q=$q")
+        assert(got._1.map(_._1).intersect(deleted).isEmpty, s"deleted doc answered for q=$q")
+      }
+    } finally idx.unpersist(blocking = true)
+  }
+
+  test("a docId deleted twice counts once and stays out of cached and uncached answers") {
+    val dir = Files.createTempDirectory("graft-seg-dup-delete").toString
+    SegmentStore.build(docs, "docId", fields, dir, docsPerShard = 257)
+    val opts = SearchOptions(limit = 10)
+    val victim = new SegmentSearcher(SegmentStore.open(spark, dir), opts).topK("hello").head._1
+    SegmentStore.deleteDocs(spark, dir, Seq(victim))
+    SegmentStore.deleteDocs(spark, dir, Seq(victim))
+    assert(SegmentStore.info(spark, dir)("deleted_count") === 1L)
+    val idx = SegmentStore.open(spark, dir).cached()
+    try Seq(idx, SegmentStore.open(spark, dir)).foreach { i =>
+      assert(!new SegmentSearcher(i, opts).topK("hello").map(_._1).contains(victim))
+    } finally idx.unpersist(blocking = true)
+  }
+
+  test("a shardspec.json without docsPerShard is an error naming the file") {
+    val dir = Files.createTempDirectory("graft-seg-badspec").toString
+    SegmentStore.build(docs.filter(col("docId") < 50), "docId", fields, dir, docsPerShard = 257)
+    Files.writeString(java.nio.file.Paths.get(s"$dir/checkpoints/shardspec.json"), "{}")
+    val e = intercept[IllegalStateException](SegmentStore.open(spark, dir))
+    assert(e.getMessage.contains("checkpoints/shardspec.json"), e.getMessage)
   }
 }

@@ -170,7 +170,7 @@ class StreamingSpec extends SparkSpec {
     IncrementalIndexer.appendBatch(turnsDF(40, 80), 1L, dir, Seq("conv_id", "turn_idx"), fields, 8192)
     assert(SegmentStore.docsPerShardOf(dir) === 257L)
     // a delete in the second generation must actually disappear (routing
-    // by the persisted spec reaches the co-group holding its postings)
+    // by the persisted spec reaches the shard holding its postings)
     val idx = SegmentStore.openMerged(spark, dir)
     val victim = topK(idx, "hello").map(_._1).max // high docId → second batch
     SegmentStore.deleteDocs(spark, dir, Seq(victim))
@@ -261,6 +261,15 @@ class StreamingSpec extends SparkSpec {
     // same across forceMergeDeletes)
     assert(topK(after, "hello").map(_._1) === before.map(_._1),
       "post-cleanup ranking differs from pre-cleanup tombstone-filtered ranking")
+  }
+
+  test("an incremental.json missing lastBatch fails appendBatch, naming the file") {
+    val dir = Files.createTempDirectory("graft-inc-torn").toString
+    Files.createDirectories(java.nio.file.Paths.get(s"$dir/checkpoints"))
+    Files.writeString(java.nio.file.Paths.get(s"$dir/checkpoints/incremental.json"), """{"nextDocId": 5}""")
+    val e = intercept[IllegalStateException](
+      IncrementalIndexer.appendBatch(turnsDF(0, 10), 0L, dir, Seq("conv_id", "turn_idx"), fields, 257))
+    assert(e.getMessage.contains("checkpoints/incremental.json"), e.getMessage)
   }
 
   test("crash between promotion and meta write: replay does not duplicate the generation") {
