@@ -311,7 +311,7 @@ object SparkEntry {
       SegmentStore.deleteDocs(s, dir, victims)
       val during = SegmentStore.info(s, dir)
       val optDir = java.nio.file.Files.createTempDirectory("graft-maint-opt").toString
-      SegmentStore.optimize(s, dir, optDir, docsPerShard = 128)
+      SegmentStore.optimize(s, dir, optDir)
       val after = SegmentStore.info(s, optDir)
       Seq((before("doc_count").asInstanceOf[Long], during("deleted_count").asInstanceOf[Long],
         after("doc_count").asInstanceOf[Long], after("deleted_count").asInstanceOf[Long]))

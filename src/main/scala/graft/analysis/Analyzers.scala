@@ -1,7 +1,5 @@
 package graft.analysis
 
-import scala.collection.mutable.ArrayBuffer
-
 /** One token emitted by an analyzer.
   *
   * `pos` is the token's position in the *pre-stop-filter* token stream
@@ -128,14 +126,16 @@ object TokenBuffer {
   * allocation beyond the output buffer.
   */
 trait Analyzer extends Serializable {
-  def tokens(text: String): IndexedSeq[Token]
-
-  /** Allocation-light path: append (term, pos) pairs into `out` instead of
-    * materializing Token objects. Hot analyzers override this as their
-    * primary; the default delegates for the rest.
+  /** The one primitive: append (term, pos) pairs into `out` — the build's
+    * allocation-light path, with no Token objects.
     */
-  def tokensInto(text: String, out: TokenBuffer): Unit =
-    tokens(text).foreach(t => out.add(t.term, t.pos))
+  def tokensInto(text: String, out: TokenBuffer): Unit
+
+  def tokens(text: String): IndexedSeq[Token] = {
+    val buf = new TokenBuffer(64)
+    tokensInto(text, buf)
+    (0 until buf.len).map(i => Token(buf.terms(i), buf.poss(i)))
+  }
 
   /** Analyze a single query term (e.g. the text after `field:`). Returns the
     * analyzed terms; empty when the term is a stop word (Lucene drops the
@@ -175,13 +175,7 @@ object Analyzers {
     * alphanumerics.
     */
   object Standard extends Analyzer {
-    def tokens(text: String): IndexedSeq[Token] = {
-      val buf = new TokenBuffer(64)
-      tokensInto(text, buf)
-      (0 until buf.len).map(i => Token(buf.terms(i), buf.poss(i)))
-    }
-
-    override def tokensInto(text: String, out: TokenBuffer): Unit = {
+    def tokensInto(text: String, out: TokenBuffer): Unit = {
       var pos = 0
       var i = 0
       val n = text.length
@@ -245,17 +239,11 @@ object Analyzers {
         """|[A-Za-z0-9]+""").r // ALPHANUM
     private val AcronymRe = """(?:[A-Za-z]\.)+[A-Za-z]\.?""".r
 
-    def tokens(text: String): IndexedSeq[Token] = {
-      val buf = new TokenBuffer(64)
-      tokensInto(text, buf)
-      (0 until buf.len).map(i => Token(buf.terms(i), buf.poss(i)))
-    }
-
     /** Build-hot-loop path: appends straight into the shared buffer — no
       * Token objects, no ArrayBuffer (COVERAGE round-4 note; the regex
       * matcher itself is the only per-call allocation left).
       */
-    override def tokensInto(text: String, out: TokenBuffer): Unit = {
+    def tokensInto(text: String, out: TokenBuffer): Unit = {
       var pos = 0
       TokenRe.findAllIn(text).foreach { raw =>
         // ClassicFilter: acronym dots removed, trailing possessive stripped
@@ -276,8 +264,7 @@ object Analyzers {
     * (reference: util/Analyzers.java:189-198).
     */
   object Simple extends Analyzer {
-    def tokens(text: String): IndexedSeq[Token] = {
-      val out = new ArrayBuffer[Token]()
+    def tokensInto(text: String, out: TokenBuffer): Unit = {
       var pos = 0
       var i = 0
       val n = text.length
@@ -285,11 +272,10 @@ object Analyzers {
         if (Character.isLetter(text.charAt(i))) {
           val start = i
           while (i < n && Character.isLetter(text.charAt(i))) i += 1
-          out += Token(text.substring(start, i).toLowerCase(java.util.Locale.ROOT), pos)
+          out.add(text.substring(start, i).toLowerCase(java.util.Locale.ROOT), pos)
           pos += 1
         } else i += 1
       }
-      out.toIndexedSeq
     }
   }
 
@@ -297,13 +283,7 @@ object Analyzers {
     * (reference: util/Analyzers.java:219-227).
     */
   object Whitespace extends Analyzer {
-    def tokens(text: String): IndexedSeq[Token] = {
-      val buf = new TokenBuffer(64)
-      tokensInto(text, buf)
-      (0 until buf.len).map(i => Token(buf.terms(i), buf.poss(i)))
-    }
-
-    override def tokensInto(text: String, out: TokenBuffer): Unit = {
+    def tokensInto(text: String, out: TokenBuffer): Unit = {
       var pos = 0
       var i = 0
       val n = text.length
@@ -322,8 +302,8 @@ object Analyzers {
     * (reference: util/Analyzers.java:149-158).
     */
   object Keyword extends Analyzer {
-    def tokens(text: String): IndexedSeq[Token] =
-      if (text == null || text.isEmpty) Vector.empty else Vector(Token(text, 0))
+    def tokensInto(text: String, out: TokenBuffer): Unit =
+      if (text != null && text.nonEmpty) out.add(text, 0)
   }
 
   /** `ngram` analyzer: wraps an inner analyzer with a character n-gram
@@ -332,12 +312,6 @@ object Analyzers {
     * token's position.
     */
   final case class NGram(inner: Analyzer = Standard, min: Int = 1, max: Int = 2) extends Analyzer {
-    def tokens(text: String): IndexedSeq[Token] = {
-      val buf = new TokenBuffer(64)
-      tokensInto(text, buf)
-      (0 until buf.len).map(i => Token(buf.terms(i), buf.poss(i)))
-    }
-
     // per-thread scratch for the inner analyzer's stream: analyzer instances
     // can be shared across tasks (broadcast closures), so the reusable
     // buffer must be thread-confined, not an instance field
@@ -348,7 +322,7 @@ object Analyzers {
       * thread-local scratch buffer, grams append straight to `out` — no
       * Token objects anywhere on the 1-2-gram index build path.
       */
-    override def tokensInto(text: String, out: TokenBuffer): Unit = {
+    def tokensInto(text: String, out: TokenBuffer): Unit = {
       val scratch = innerScratch.get()
       scratch.clear()
       inner.tokensInto(text, scratch)

@@ -279,35 +279,10 @@ object Codec {
     out
   }
 
+  /** The whole block: [[decodeDocs]], then [[decodePositions]]. */
   def decode(b: Block): Array[Decoded] = {
-    val out = new Array[Decoded](b.count)
-    var docPos = 0
-    var tfPos = 0
-    var dlPos = 0
-    var posPos = 0
-    var doc = 0L
-    var i = 0
-    while (i < b.count) {
-      val (delta, np) = readVLong(b.docBytes, docPos)
-      docPos = np
-      doc = if (i == 0) delta else doc + delta
-      val (tf, ntf) = readVLong(b.tfBytes, tfPos)
-      tfPos = ntf
-      val (dl, ndl) = readVLong(b.dlBytes, dlPos)
-      dlPos = ndl
-      val positions = new Array[Int](tf.toInt)
-      var p = 0
-      var j = 0
-      while (j < tf.toInt) {
-        val (d, npp) = readVLong(b.posBytes, posPos)
-        posPos = npp
-        p += d.toInt
-        positions(j) = p
-        j += 1
-      }
-      out(i) = Decoded(doc, tf.toInt, dl.toInt, positions)
-      i += 1
-    }
-    out
+    val d = decodeDocs(b)
+    val ps = decodePositions(b, d.tfs)
+    Array.tabulate(b.count)(i => Decoded(d.docIds(i), d.tfs(i), d.dls(i), ps(i)))
   }
 }

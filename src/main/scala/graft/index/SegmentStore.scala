@@ -50,13 +50,19 @@ final case class MarkerStat(pid: Int, field: String, docCount: Long, sumDl: Long
   * directory with `last_seq` commit user data as its checkpoint
   * (/root/reference/src/main/java/com/github/rnewson/couchdb/lucene/DatabaseIndexer.java:199-211,715-729).
   *
-  * Layout under `dir/`:
+  * Layout under `dir/` — every generation of `segments`, `termstats`,
+  * `stored` and `keys` is written by [[SegmentStore.writeGeneration]]:
   *   termstats/   (field, term, df, cf) parquet (vocab-sized — stays a table)
-  *   segments/    SegmentRow parquet, range-partitioned by (shard, field, term, docId)
+  *   segments/    SegmentRow parquet, shard-partitioned, sorted by (shard, field, term)
+  *   stored/      stored/doc-values sidecar (docId, source columns, shard):
+  *                each shard's rows in one docId-ascending part file per
+  *                generation (only when stored columns are requested)
+  *   keys/        upsert key→docId map (appender generations only)
   *   lineage/     lineage.tsv — per-partition LineageRow sidecar per stage
-  *   checkpoints/ <stage>.json markers — a rerun skips completed stages —
-  *                plus the driver-side metadata sidecars (round 6):
-  *                spec.tsv (indexField, source, kind, analyzer, boost),
+  *   checkpoints/ <stage>.json markers (spec, segments, stats) — a rerun
+  *                skips completed stages — plus the driver-side metadata
+  *                sidecars (round 6): spec.tsv (indexField, source, kind,
+  *                analyzer, boost), spec.digest, shardspec.json,
   *                fieldstats.tsv (gen, field, docCount, avgdl, sumDl).
   *   tombstones/  deleted docIds (parquet, appended per delete)
   *
@@ -207,7 +213,7 @@ object SegmentStore {
     * [[encodeSegments]]): (shard, field, term, minDoc, docIds ascending,
     * tfs, dls, positions).
     */
-  private[index] type MiniRun =
+  private[graft] type MiniRun =
     (Int, String, String, Long, Array[Long], Array[Int], Array[Int], Array[Array[Int]])
 
   /** Postings buffered per map task before a mini-run flush — the Lucene
@@ -277,22 +283,23 @@ object SegmentStore {
 
   /** Staged, resumable build; returns the indexed doc count (max over
     * fields). `failAfterStage` is a test failpoint: throw after committing
-    * that stage (kill-between-stages test, SURVEY.md §5.2).
+    * that stage — `spec`, `segments` or `stats` (kill-between-stages test,
+    * SURVEY.md §5.2). A rerun redoes every stage not yet committed; the
+    * stored sidecar commits with `segments`, so it is rewritten too.
     *
-    * Serial-tax design (the N→4N scaling criterion measures exactly this):
-    * the whole build is 2 corpus-scale jobs — the docID/count pass the
-    * caller ran, and ONE tokenize→shuffle→encode+write job whose
-    * per-partition lineage comes back through an accumulator instead of a
-    * read-back agg. Term/field stats are DERIVED from the encoded segment
-    * rows afterwards (df/cf per (shard, field, term) ride on every row;
-    * dl-marker runs become stats-only rows carrying per-shard
-    * (docCount, Σdl)) — the Lucene per-segment-stats fold, expressed as a
-    * vocab×shards metadata aggregation over a column-pruned read of the
-    * just-written parquet, NOT a second tokenize of the corpus. Block-max
-    * bounds use block-local encAvgdl (see [[Codec.RunEncoder.encodeLocal]]),
-    * which is what breaks the old stats→encode ordering dependency.
-    * avgdl and docCount flow driver-side in memory; parquet read-backs
-    * happen only on the (rare) resume path.
+    * Stages: `spec`, then `segments` — ONE [[writeGeneration]] call, whose
+    * tokenize→shuffle→encode+write job also folds the term stats and
+    * whose stored sidecar (when `storedColumns` are requested) commits
+    * with it — then `stats`, the field stats. With the docID/count pass the
+    * caller ran, the build is 2 corpus-scale jobs: term/field stats are
+    * DERIVED from the encoded segment rows (df/cf per (shard, field, term)
+    * ride on every row; dl-marker runs become stats-only rows carrying
+    * per-shard (docCount, Σdl)) — the Lucene per-segment-stats fold, NOT a
+    * second tokenize of the corpus. Block-max bounds use block-local
+    * encAvgdl (see [[Codec.RunEncoder.encodeLocal]]), which is what breaks
+    * the old stats→encode ordering dependency. Field stats flow
+    * driver-side in memory; the segments parquet is read back only on the
+    * (rare) resume path.
     */
   def build(
       docs: DataFrame,
@@ -308,127 +315,125 @@ object SegmentStore {
     def failpoint(stage: String): Unit =
       if (failAfterStage.contains(stage)) throw new RuntimeException(s"failpoint after $stage")
 
-    Timing.timed("build.spec") {
-      if (!stageDone(dir, "spec")) writeSpec(spark, dir, fields)
-      if (!Files.exists(shardSpecPath(dir))) writeShardSpec(dir, docsPerShard)
-    }
+    Timing.timed("build.spec")(writeSpecOnce(spark, dir, fields, docsPerShard))
     failpoint("spec")
 
-    // Stored-fields / doc-values sidecar (reference: Lucene stored fields +
-    // doc values, DatabaseIndexer.java:517-633): a docId-keyed columnar
-    // projection of the requested source columns, shard-partitioned and
-    // docId-sorted within partitions. Typed point/range predicates filter it
-    // column-pruned (the doc-values shape); the envelope's sort keys and
-    // include_fields join back against it. Skipped entirely when no columns
-    // are requested.
-    def runStored(): Unit =
-      Timing.timed("build.stored") {
-        // AQE-coalescible (no explicit count) — see the encodeSegments note;
-        // also keeps output files near the advisory size instead of one
-        // sliver per session shuffle partition (guide: file sizing on write)
-        docs.select(col(docIdCol).cast("long").as("docId") +: storedColumns.map(col): _*)
-          .withColumn("shard", (col("docId") / lit(docsPerShard)).cast("int"))
-          .repartition(col("shard"))
-          .sortWithinPartitions("docId")
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/stored")
-        commitStage(dir, "stored", Map("columns" -> storedColumns.size.toLong))
-      }
-    val needStored = storedColumns.nonEmpty && !stageDone(dir, "stored")
-    // The stored sidecar and the encode job are independent (both read only
-    // the source `docs`), so on the normal path they run CONCURRENTLY
-    // (guide §2.6 "overlap independent jobs"): the stored write back-fills
-    // executor capacity the encode's stage tails leave idle, instead of
-    // serializing a whole extra corpus-scan job ahead of it. The failpoint
-    // path keeps the legacy sequential order so the kill-between-stages
-    // resume tests exercise the exact stage boundaries they name.
-    val overlapStored = needStored && failAfterStage.isEmpty && !stageDone(dir, "segments")
-    if (needStored && !overlapStored) runStored()
-    failpoint("stored")
-
-    // ONE corpus-scale job: tokenize → shard shuffle → encode → write.
-    // The build reads AND shuffles the source exactly one
-    // time; stats are derived from the encoded rows below. (The round-4
-    // persist-vs-recompute dilemma — cache postings between a stats pass
-    // and an encode pass, or tokenize twice — is gone: there is only one
-    // consumer now.)
-    val needStats = !stageDone(dir, "stats")
-    val needSegments = !stageDone(dir, "segments")
-
-    // marker stats ride the encode job's accumulator (fresh builds) — the
-    // stats stage then writes field stats with NO read-back aggregation;
-    // the read-back fold below stays as the resume path only
-    var markerStatsMem: Option[IndexedSeq[FieldStats]] = None
-    val storedPool =
-      if (overlapStored) Some(java.util.concurrent.Executors.newFixedThreadPool(1)) else None
-    val storedFut = storedPool.map { p =>
-      scala.concurrent.Future(runStored())(scala.concurrent.ExecutionContext.fromExecutor(p))
-    }
-    if (needSegments) try {
-      Timing.timed("build.encode") {
-        // dl-marker rows are NOT shipped through the shuffle (round 5): the
-        // encode tasks reconstruct each (shard, field)'s marker from the
-        // postings they already stream — exact, because a marker exists iff
-        // the (field, doc) has ≥1 posting — which drops one shuffle row per
-        // (doc, field) from the build's widest stage.
-        // per-partition lineage rides back on an accumulator — the round-2
-        // build re-read the committed segments for a metadata agg (a pure
-        // driver-synchronized second job)
-        val linAcc = spark.sparkContext.collectionAccumulator[LineageRow]("graft.lineage")
-        val mkAcc = spark.sparkContext.collectionAccumulator[MarkerStat]("graft.markerstats")
-        // the FUSED tokenize→mini-run pass (no per-posting object stream —
-        // see IndexBuilder.tokenizeMiniRuns)
-        encodeRuns(IndexBuilder.tokenizeMiniRuns(docs, docIdCol, fields, docsPerShard),
-          Some(linAcc), Some(mkAcc), docsPerShard)
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/segments")
-        // dedupe by pid: a speculative/retried task may report twice; the
-        // rows are deterministic per partition so first-wins is exact
-        val rows = {
-          import scala.jdk.CollectionConverters._
-          linAcc.value.asScala.groupBy(_.pid).map(_._2.head).toIndexedSeq.sortBy(_.pid)
-        }
-        markerStatsMem = Some(foldMarkerStats(mkAcc))
-        writeLineage(dir, rows) // accumulator output — driver write, no job
-        commitStage(dir, "segments",
-          Map("segmentRows" -> rows.map(_.rowsOut).sum, "postingBytes" -> rows.map(_.bytesOut).sum,
-            "postingsIn" -> rows.map(_.rowsIn).sum))
-      }
-    } finally {
-      // join the overlapped stored write before any later stage (and before
-      // returning or propagating a failure): build() must never leave the
-      // sidecar write in flight
-      storedFut.foreach { f =>
-        try scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
-        finally storedPool.foreach(_.shutdown())
-      }
+    var generation: Option[Generation] = None
+    if (!stageDone(dir, "segments")) Timing.timed("build.segments") {
+      // Stored-fields / doc-values sidecar (reference: Lucene stored fields +
+      // doc values, DatabaseIndexer.java:517-633): typed point/range
+      // predicates filter it column-pruned (the doc-values shape); the
+      // envelope's sort keys and include_fields join back against it
+      val g = writeGeneration(IndexBuilder.tokenizeMiniRuns(docs, docIdCol, fields, docsPerShard),
+        docsPerShard, dir,
+        if (storedColumns.isEmpty) Nil
+        else Seq(storedSidecar(
+          docs.select(col(docIdCol).cast("long").as("docId") +: storedColumns.map(col): _*),
+          docsPerShard)))
+      writeLineage(dir, g.lineage) // accumulator output — driver write, no job
+      commitStage(dir, "segments",
+        Map("segmentRows" -> g.lineage.map(_.rowsOut).sum, "postingBytes" -> g.lineage.map(_.bytesOut).sum,
+          "postingsIn" -> g.lineage.map(_.rowsIn).sum))
+      generation = Some(g)
     }
     failpoint("segments")
 
     var fieldStatsMem: Option[Seq[FieldStats]] = None
-    if (needStats) {
-      Timing.timed("build.stats") {
-        writeTermStats(spark, s"$dir/segments", s"$dir/termstats")
-        // field stats: folded from the encode job's marker accumulator when
-        // the encode ran in THIS call (zero extra jobs); the read-back agg
-        // over the marker segment rows is the resume path (segments stage
-        // committed by an earlier, crashed run)
-        val fsRows = markerStatsMem.getOrElse {
-          readSegments(spark, s"$dir/segments").filter(col("term") === IndexBuilder.DlMarker)
-            .groupBy(col("field"))
-            .agg(sum(col("df")).as("docCount"), (sum(col("cf")) / sum(col("df"))).as("avgdl"),
-              sum(col("cf")).as("sumDl"))
-            .as[FieldStats].collect().toIndexedSeq
-        }
-        writeFieldStatsGens(dir, Map("base" -> fsRows)) // driver write, no job
-        fieldStatsMem = Some(fsRows)
-        commitStage(dir, "stats",
-          Map("docCount" -> fsRows.map(_.docCount).maxOption.getOrElse(0L)))
+    if (!stageDone(dir, "stats")) Timing.timed("build.stats") {
+      // field stats: folded from the encode job's marker accumulator when
+      // the encode ran in THIS call (zero extra jobs); the read-back agg
+      // over the marker segment rows is the resume path (segments stage
+      // committed by an earlier, crashed run)
+      val fsRows = generation.map(_.fieldStats).getOrElse {
+        readSegments(spark, s"$dir/segments").filter(col("term") === IndexBuilder.DlMarker)
+          .groupBy(col("field"))
+          .agg(sum(col("df")).as("docCount"), (sum(col("cf")) / sum(col("df"))).as("avgdl"),
+            sum(col("cf")).as("sumDl"))
+          .as[FieldStats].collect().toIndexedSeq
       }
+      writeFieldStatsGens(dir, Map("base" -> fsRows)) // driver write, no job
+      fieldStatsMem = Some(fsRows)
+      commitStage(dir, "stats",
+        Map("docCount" -> fsRows.map(_.docCount).maxOption.getOrElse(0L)))
     }
     failpoint("stats")
     fieldStatsMem.map(_.map(_.docCount).maxOption.getOrElse(0L))
       .orElse(stageMetric(dir, "stats", "docCount"))
       .getOrElse(0L)
   }
+
+  /** A generation table written next to the segments: its dir name under
+    * the generation's dir and its rows, built only when the write starts.
+    */
+  private[graft] type Sidecar = (String, () => DataFrame)
+
+  /** What [[writeGeneration]] folded from its encode job: the field stats
+    * and the per-partition lineage.
+    */
+  private[graft] final case class Generation(fieldStats: IndexedSeq[FieldStats], lineage: IndexedSeq[LineageRow])
+
+  /** Write one index generation under `out` — the only write path of
+    * [[build]], [[optimize]] and the appender, as the reference writes
+    * every segment through one IndexWriter (DatabaseIndexer.java:199-211,
+    * 371,274-279). On one thread, the encode job writes `out/segments` and
+    * the term stats then fold into `out/termstats`; each sidecar, a
+    * row-level table of the same docs (the stored sidecar, the upsert key
+    * map), is written to `out/<name>` as a concurrent job (guide §2.6
+    * "overlap independent jobs"). Every write settles before this returns
+    * or throws ([[concurrently]]). The field stats fold from the encode's
+    * marker accumulator and the lineage from its lineage accumulator, both
+    * deduped by pid: a speculative/retried task may report twice, and its
+    * rows are deterministic per partition.
+    */
+  private[graft] def writeGeneration(
+      mini: Dataset[MiniRun],
+      docsPerShard: Long,
+      out: String,
+      sidecars: Seq[Sidecar]): Generation = {
+    val spark = mini.sparkSession
+    val linAcc = spark.sparkContext.collectionAccumulator[LineageRow]("graft.lineage")
+    val mkAcc = spark.sparkContext.collectionAccumulator[MarkerStat]("graft.markerstats")
+    concurrently((() => {
+      encodeRuns(mini, Some(linAcc), Some(mkAcc), docsPerShard)
+        .write.mode(SaveMode.Overwrite).parquet(s"$out/segments")
+      writeTermStats(spark, s"$out/segments", s"$out/termstats")
+    }) +: sidecars.map { case (name, rows) =>
+      () => rows().write.mode(SaveMode.Overwrite).parquet(s"$out/$name")
+    })
+    import scala.jdk.CollectionConverters._
+    Generation(foldMarkerStats(mkAcc),
+      linAcc.value.asScala.groupBy(_.pid).map(_._2.head).toIndexedSeq.sortBy(_.pid))
+  }
+
+  /** Run `writes` (each one or more Spark jobs) concurrently from a driver
+    * pool and wait until every one has settled; only then rethrow the first
+    * failure, so no write is still running into a dir its caller commits,
+    * cleans up or replays. A single write runs on the calling thread.
+    */
+  private[graft] def concurrently(writes: Seq[() => Unit]): Unit =
+    if (writes.size <= 1) writes.foreach(_())
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(writes.size)
+      implicit val ec: scala.concurrent.ExecutionContext =
+        scala.concurrent.ExecutionContext.fromExecutor(pool)
+      try scala.concurrent.Await.result(
+          scala.concurrent.Future.sequence(
+            writes.map(w => scala.concurrent.Future(w()).transform(scala.util.Success(_)))),
+          scala.concurrent.duration.Duration.Inf)
+        .collectFirst { case scala.util.Failure(e) => throw e }
+      finally pool.shutdown()
+    }
+
+  /** The stored-fields / doc-values sidecar of `rows` (docId + source
+    * columns): a `shard` column added, each shard's rows in one partition,
+    * docId-ascending. No explicit partition count: AQE coalesces, keeping
+    * files near the advisory size (guide: file sizing on write).
+    */
+  private[graft] def storedSidecar(rows: => DataFrame, docsPerShard: Long): Sidecar =
+    "stored" -> (() => rows
+      .withColumn("shard", (col("docId") / lit(docsPerShard)).cast("int"))
+      .repartition(col("shard"))
+      .sortWithinPartitions("docId"))
 
   /** A committed stage's numeric metric from its checkpoint marker. */
   def stageMetric(dir: String, stage: String, key: String): Option[Long] = {
@@ -509,17 +514,30 @@ object SegmentStore {
     commitStage(dir, "spec", Map("fields" -> fields.size.toLong))
   }
 
-  /** The encode pipeline over a posting stream: map-side run combine, then
-    * [[encodeRuns]] (shard shuffle, run merge, marker reconstruction, block
-    * encode). The build and the appender feed [[encodeRuns]] from the fused
-    * tokenize pass instead; this posting-level entry serves [[optimize]],
-    * whose decoded postings pass a tombstone anti-join first. `postings`
-    * must not carry dl-marker rows.
+  /** Commit the spec and the shard spec a dir does not have yet: a
+    * committed dir keeps its own. The shard spec has its own guard, not the
+    * spec checkpoint's — a crash between the two writes must still produce
+    * it on rerun.
     */
-  def encodeSegments(
-      postings: Dataset[Posting],
-      docsPerShard: Long,
-      markerAcc: Option[org.apache.spark.util.CollectionAccumulator[MarkerStat]] = None): Dataset[SegmentRow] = {
+  private[graft] def writeSpecOnce(spark: SparkSession, dir: String, fields: Seq[FieldDef],
+      docsPerShard: Long): Unit = {
+    if (!stageDone(dir, "spec")) writeSpec(spark, dir, fields)
+    if (!hasShardSpec(dir)) writeShardSpec(dir, docsPerShard)
+  }
+
+  /** The encode pipeline over a posting stream: [[combineRuns]], then
+    * [[encodeRuns]] (shard shuffle, run merge, marker reconstruction, block
+    * encode). `postings` must not carry dl-marker rows.
+    */
+  def encodeSegments(postings: Dataset[Posting], docsPerShard: Long): Dataset[SegmentRow] =
+    encodeRuns(combineRuns(postings, docsPerShard), None, None, docsPerShard)
+
+  /** The map-side run combine of a posting stream into mini-runs. The
+    * build and the appender make mini-runs in the fused tokenize pass
+    * instead; this posting-level entry serves [[optimize]], whose decoded
+    * postings pass a tombstone anti-join first.
+    */
+  private[graft] def combineRuns(postings: Dataset[Posting], docsPerShard: Long): Dataset[MiniRun] = {
     val spark = postings.sparkSession
     import spark.implicits._
     // ---- map-side run combine (round 6; guide §2.3 "aggregate before you
@@ -550,7 +568,7 @@ object SegmentStore {
     // explicit partition count, AQE coalesces from observed sizes, and
     // coalescing merges whole post-shuffle partitions so the whole-shards-
     // per-partition invariant the marker reconstruction needs is preserved.
-    val mini: Dataset[SegmentStore.MiniRun] = postings.mapPartitions { it =>
+    postings.mapPartitions { it =>
       new Iterator[SegmentStore.MiniRun] {
         private var out: Iterator[SegmentStore.MiniRun] = Iterator.empty
         private def refill(): Unit = {
@@ -575,7 +593,6 @@ object SegmentStore {
         def next(): SegmentStore.MiniRun = out.next()
       }
     }
-    encodeRuns(mini, None, markerAcc, docsPerShard)
   }
 
   /** The post-combine half of [[encodeSegments]]: shard-shuffle the
@@ -609,8 +626,7 @@ object SegmentStore {
       .sortWithinPartitions(col("shard"), col("field"), col("term"), col("minDoc"))
       .as[SegmentStore.MiniRun]
 
-    val encodeFn = (it: Iterator[SegmentStore.MiniRun]) => {
-      val pid = TaskContext.getPartitionId()
+    val encodeFn = (pid: Int, it: Iterator[SegmentStore.MiniRun]) => {
       val src = it.buffered
       // reusable run buffers + encoder per task (VERDICT r3 #1b): no boxed
       // per-posting objects in the build's widest stage — the allocation
@@ -724,46 +740,44 @@ object SegmentStore {
         }
       }
     }
-    if (lineageAcc.isEmpty && markerAcc.isEmpty) sortedRuns.mapPartitions(encodeFn)
-    else
-      sortedRuns.mapPartitions { it =>
-        val pid = TaskContext.getPartitionId()
-        val out = encodeFn(it)
-        new Iterator[SegmentRow] {
-          private var rowsIn = 0L
-          private var rowsOut = 0L
-          private var bytesOut = 0L
-          // per-field (docCount, Σdl) fold of this partition's marker rows —
-          // emitted once at exhaustion so the accumulator carries
-          // #partitions × #fields rows, never one per (shard, field)
-          private val perField = scala.collection.mutable.LinkedHashMap[String, (Long, Long)]()
-          private var reported = false
-          def hasNext: Boolean = {
-            val h = out.hasNext
-            if (!h && !reported) {
-              reported = true // report once; empty partitions stay silent
-              if (rowsOut > 0)
-                lineageAcc.foreach(_.add(LineageRow("segments", pid, rowsIn, rowsOut, bytesOut)))
-              markerAcc.foreach(acc => perField.foreach { case (f, (dc, sd)) =>
-                acc.add(MarkerStat(pid, f, dc, sd))
-              })
-            }
-            h
+    sortedRuns.mapPartitions { it =>
+      val pid = TaskContext.getPartitionId()
+      val out = encodeFn(pid, it)
+      new Iterator[SegmentRow] {
+        private var rowsIn = 0L
+        private var rowsOut = 0L
+        private var bytesOut = 0L
+        // per-field (docCount, Σdl) fold of this partition's marker rows —
+        // emitted once at exhaustion so the accumulator carries
+        // #partitions × #fields rows, never one per (shard, field)
+        private val perField = scala.collection.mutable.LinkedHashMap[String, (Long, Long)]()
+        private var reported = false
+        def hasNext: Boolean = {
+          val h = out.hasNext
+          if (!h && !reported) {
+            reported = true // report once; empty partitions stay silent
+            if (rowsOut > 0)
+              lineageAcc.foreach(_.add(LineageRow("segments", pid, rowsIn, rowsOut, bytesOut)))
+            markerAcc.foreach(acc => perField.foreach { case (f, (dc, sd)) =>
+              acc.add(MarkerStat(pid, f, dc, sd))
+            })
           }
-          def next(): SegmentRow = {
-            val r = out.next()
-            // stats-only marker rows are metadata, not postings — keep
-            // the lineage invariant rowsIn == postings tokenized
-            if (r.term != IndexBuilder.DlMarker) {
-              rowsIn += r.df; rowsOut += 1; bytesOut += r.bytes
-            } else if (markerAcc.isDefined) {
-              val cur = perField.getOrElse(r.field, (0L, 0L))
-              perField.update(r.field, (cur._1 + r.df, cur._2 + r.cf))
-            }
-            r
+          h
+        }
+        def next(): SegmentRow = {
+          val r = out.next()
+          // stats-only marker rows are metadata, not postings — keep
+          // the lineage invariant rowsIn == postings tokenized
+          if (r.term != IndexBuilder.DlMarker) {
+            rowsIn += r.df; rowsOut += 1; bytesOut += r.bytes
+          } else {
+            val cur = perField.getOrElse(r.field, (0L, 0L))
+            perField.update(r.field, (cur._1 + r.df, cur._2 + r.cf))
           }
+          r
         }
       }
+    }
   }
 
   /** Fold a marker-stat accumulator's rows into exact [[FieldStats]]: dedupe
@@ -802,71 +816,43 @@ object SegmentStore {
   /** `_optimize` analog (reference DatabaseIndexer.java:274-279,
     * forceMerge(1)): decode every run, drop tombstoned docs, and re-encode
     * each (shard, field, term) as a single fresh run with tight blocks.
-    * Writes a full replacement `segments/` + stats (new dir returned).
+    * Writes a full replacement index dir at `outDir` under the source's
+    * spec and shard spec — a maintenance op never re-shards the corpus.
     *
-    * Single-pass like the build (round 5): decode → anti-join → ONE
-    * shuffle+encode job; the encode tasks reconstruct each
-    * (shard, field)'s marker row from the postings they already see
-    * (see [[encodeRuns]]), and term/field stats fold from the new
-    * segments' metadata. No persist of the decoded postings, no separate
-    * stats aggregations — the old shape ran three corpus-scale passes over
-    * a MEMORY_AND_DISK cache.
+    * Single-pass like the build: decode → anti-join → ONE [[writeGeneration]]
+    * call; the encode tasks reconstruct each (shard, field)'s marker row
+    * from the postings they already see (marker segment rows are stats-only
+    * in EVERY index, so the decode never recovers marker postings), and
+    * term/field stats fold from the new segments' metadata.
     */
-  def optimize(spark: SparkSession, dir: String, outDir: String, docsPerShard: Long = -1L): Unit = {
+  def optimize(spark: SparkSession, dir: String, outDir: String): Unit = {
     import spark.implicits._
-    // default (non-positive): carry the source index's shard spec — a
-    // maintenance op should not silently re-shard the corpus
-    val dps = if (docsPerShard > 0) docsPerShard else docsPerShardOf(dir)
+    val dps = docsPerShardOf(dir)
     // tombstones dropped via anti-join (never a driver-side Set — at scale
     // deletes are normal state, potentially corpus-sized)
+    val deleted = deletedDocsDF(spark, dir)
     val decoded: Dataset[Posting] = readSegments(spark, s"$dir/segments").as[SegmentRow]
       .flatMap { row =>
         row.blocks.iterator.flatMap(Codec.decode(_).iterator)
           .map(d => Posting(row.field, row.term, d.docId, d.tf, d.positions, d.dl))
       }
     // re-select in Posting declaration order: the using-join moves docId to
-    // the front, and encodeSegments binds a positional tuple encoder
-    val postings = decoded.join(deletedDocsDF(spark, dir), Seq("docId"), "left_anti")
+    // the front, and combineRuns binds a positional tuple encoder
+    val postings = decoded.join(deleted, Seq("docId"), "left_anti")
       .select("field", "term", "docId", "tf", "positions", "dl")
       .as[Posting]
-    // spec carries over; stats recomputed post-expunge
-    java.nio.file.Files.createDirectories(Paths.get(outDir))
+    // the source's spec and shard spec, written over whatever `outDir` held
+    writeSpec(spark, outDir, readSpec(dir))
     writeShardSpec(outDir, dps)
-    // spec carries over VERBATIM — byte-level file copies (round 6): the
-    // old read→rewrite through Spark was a whole job to reproduce a
-    // kilobyte file the source dir already holds
-    if (Files.exists(specTsvPath(dir))) {
-      Files.createDirectories(specTsvPath(outDir).getParent)
-      Files.copy(specTsvPath(dir), specTsvPath(outDir),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-    if (Files.exists(specDigestPath(dir))) {
-      Files.createDirectories(specDigestPath(outDir).getParent)
-      Files.copy(specDigestPath(dir), specDigestPath(outDir),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-    commitStage(outDir, "spec", Map.empty)
     // stored sidecar: expunge tombstoned rows too — a doc-value-only query
     // (no posting conjunction) reads stored directly, so a row surviving
     // its postings would resurrect the deleted doc
-    if (Files.exists(Paths.get(s"$dir/stored"))) {
-      readInferred(spark, s"$dir/stored")
-        .join(deletedDocsDF(spark, dir), Seq("docId"), "left_anti")
-        .withColumn("shard", (col("docId") / lit(dps)).cast("int"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$outDir/stored")
-      commitStage(outDir, "stored", Map.empty)
-    }
-    // Marker segment rows are stats-only (no blocks) in EVERY index, so the
-    // decode above never recovers marker postings: the encode tasks
-    // reconstruct them, keyed on the SAME pinned shard spec as the build
-    val mkAcc = spark.sparkContext.collectionAccumulator[MarkerStat]("graft.markerstats")
-    encodeSegments(postings, dps, Some(mkAcc))
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/segments")
+    val stored = s"$dir/stored"
+    val g = writeGeneration(combineRuns(postings, dps), dps, outDir,
+      if (!Files.exists(Paths.get(stored))) Nil
+      else Seq(storedSidecar(readInferred(spark, stored).join(deleted, Seq("docId"), "left_anti"), dps)))
     commitStage(outDir, "segments", Map.empty)
-    writeTermStats(spark, s"$outDir/segments", s"$outDir/termstats")
-    // field stats fold from the encode job's marker accumulator — the
-    // optimize runs its encode unconditionally, so no read-back fallback
-    writeFieldStatsGens(outDir, Map("base" -> foldMarkerStats(mkAcc))) // driver write, no job
+    writeFieldStatsGens(outDir, Map("base" -> g.fieldStats)) // driver write, no job
     commitStage(outDir, "stats", Map.empty)
   }
 
@@ -880,11 +866,10 @@ object SegmentStore {
     * non-atomic window; production maps this to an Iceberg
     * snapshot-replace commit, see the class note above).
     */
-  def optimizeInPlace(spark: SparkSession, dir: String, docsPerShard: Long = -1L): Unit = {
-    val dps = if (docsPerShard > 0) docsPerShard else docsPerShardOf(dir)
+  def optimizeInPlace(spark: SparkSession, dir: String): Unit = {
     val staging = s"$dir/staging-optimize"
     deleteRecursively(staging)
-    optimize(spark, dir, staging, dps)
+    optimize(spark, dir, staging)
     val subs = Seq("termstats", "segments") ++
       (if (Files.exists(Paths.get(s"$staging/stored"))) Seq("stored") else Nil)
     subs.foreach { sub =>
@@ -900,8 +885,9 @@ object SegmentStore {
         if (!n.endsWith(".parquet")) Files.delete(p)
       })
     }
-    // promote the staged metadata sidecars over the live ones
-    Seq(specTsvPath _, specDigestPath _, fieldStatsTsvPath _).foreach { pathOf =>
+    // promote the staged metadata sidecars over the live ones (the shard
+    // spec too: a dir that had none gets the value optimize used)
+    Seq(specTsvPath _, specDigestPath _, fieldStatsTsvPath _, shardSpecPath _).foreach { pathOf =>
       if (Files.exists(pathOf(staging))) {
         Files.createDirectories(pathOf(dir).getParent)
         Files.move(pathOf(staging), pathOf(dir),
@@ -919,7 +905,6 @@ object SegmentStore {
       Files.move(Paths.get(compacted), Paths.get(s"$dir/keys"))
     }
     deleteRecursively(s"$dir/tombstones")
-    writeShardSpec(dir, dps)
     deleteRecursively(staging)
   }
 

@@ -73,13 +73,7 @@ object IncrementalIndexer {
     val meta = readMeta(dir)
     if (batchId <= meta.lastBatch) return // replayed batch — already committed
     val spark = batch.sparkSession
-    if (!SegmentStore.stageDone(dir, "spec")) {
-      SegmentStore.writeSpec(spark, dir, fields)
-    }
-    // own guard, NOT tied to the spec checkpoint: a crash between the spec
-    // commit and this write must still produce a shardspec on replay (the
-    // same per-file guard SegmentStore.build uses)
-    if (!SegmentStore.hasShardSpec(dir)) SegmentStore.writeShardSpec(dir, docsPerShard)
+    SegmentStore.writeSpecOnce(spark, dir, fields, docsPerShard)
     // the shard spec is an INDEX property, not a batch property: readers
     // route docIds (and tombstones) by the persisted value, so a later call
     // passing a different docsPerShard must not silently re-shard its
@@ -101,60 +95,23 @@ object IncrementalIndexer {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try if (n > 0) {
       val staging = s"$dir/staging/gen-$batchId"
-      // ONE batch-scale job (same single-pass shape as SegmentStore.build):
-      // tokenize → encode, with the per-(shard, field) dl-marker rows
-      // reconstructed inside the encode tasks rather than shipped through
-      // the shuffle; the generation's term/field stats
-      // are then derived from the encoded rows' metadata, so each
-      // micro-batch tokenizes its documents exactly once. Block-max bounds
-      // use block-local encAvgdl — the scorers' max(1, q/encAvgdl)
-      // inflation (Codec.Block.encAvgdl) is what keeps WAND sound when the
-      // merged multi-generation avgdl differs from any encode-time value.
-      // field stats fold from the encode job's marker accumulator (round 6)
-      // — the old shape re-read the staged segments for a second metadata
-      // aggregation + collect per micro-batch
-      val mkAcc = spark.sparkContext.collectionAccumulator[graft.index.MarkerStat]("graft.markerstats")
-      // the fused tokenize→mini-run pass (IndexBuilder.tokenizeMiniRuns)
-      SegmentStore.encodeRuns(IndexBuilder.tokenizeMiniRuns(withIds, "docId", fields, dps),
-        None, Some(mkAcc), dps)
-        .write.mode(SaveMode.Overwrite).parquet(s"$staging/segments")
-      val fsRows = SegmentStore.foldMarkerStats(mkAcc)
-      // The three remaining staged writes are INDEPENDENT of each other
-      // (termstats reads the just-encoded segments; keys/stored read the
-      // persisted batch), so they run as concurrent jobs from a small driver
-      // pool (guide §2.6 "overlap independent jobs") — each is tiny next to
-      // the encode, and serially their per-job scheduling latency was the
-      // bulk of a micro-batch's tail. Promotion below still happens only
-      // after ALL of them complete — and a failure is rethrown only once
-      // every write has settled, so no sibling keeps writing into staging
-      // after appendBatch returns (a replay overwrites the same dirs).
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      try {
-        val writes = Seq(
-          scala.concurrent.Future {
-            SegmentStore.writeTermStats(spark, s"$staging/segments", s"$staging/termstats")
-          },
-          // key→docId map rides along as its own generation: the MERGE/upsert
-          // path joins incoming keys against it to find superseded docIds
-          scala.concurrent.Future {
-            withIds.select((orderCols.map(org.apache.spark.sql.functions.col) :+ col("docId")): _*)
-              .write.mode(SaveMode.Overwrite).parquet(s"$staging/keys")
-          }) ++
-          // stored/doc-values sidecar generation (round 4): docIds are
-          // append-only, so generations union cleanly at open — doc-value and
-          // envelope queries work on an incrementally-maintained index too
-          (if (storedColumns.isEmpty) Nil else Seq(scala.concurrent.Future {
-            withIds.select(col("docId").cast("long").as("docId") +: storedColumns.map(col): _*)
-              .withColumn("shard", (col("docId") / lit(dps)).cast("int"))
-              .write.mode(SaveMode.Overwrite).parquet(s"$staging/stored")
-          }))
-        val settled = scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(writes.map(_.transform(scala.util.Success(_)))),
-          scala.concurrent.duration.Duration.Inf)
-        settled.collectFirst { case scala.util.Failure(e) => throw e }
-      } finally pool.shutdown()
+      // ONE batch-scale generation write, the same as SegmentStore.build's:
+      // the fused tokenize pass feeds the encode, so each micro-batch
+      // tokenizes its documents exactly once, and the generation's term and
+      // field stats derive from the encoded rows. Block-max bounds use
+      // block-local encAvgdl — the scorers' max(1, q/encAvgdl) inflation
+      // (Codec.Block.encAvgdl) is what keeps WAND sound when the merged
+      // multi-generation avgdl differs from any encode-time value.
+      // The key→docId map rides along as its own generation (the
+      // MERGE/upsert path joins incoming keys against it to find superseded
+      // docIds), and so does the stored sidecar: docIds are append-only, so
+      // generations union cleanly at open. Promotion below happens only
+      // after every staged write has settled.
+      val generation = SegmentStore.writeGeneration(
+        IndexBuilder.tokenizeMiniRuns(withIds, "docId", fields, dps), dps, staging,
+        ("keys", () => withIds.select((orderCols.map(col) :+ col("docId")): _*)) +:
+          (if (storedColumns.isEmpty) Nil
+          else Seq(SegmentStore.storedSidecar(withIds.select(col("docId") +: storedColumns.map(col): _*), dps))))
       // promote: idempotent move under stable names, then delete staging
       val subs = Seq("termstats", "segments", "keys") ++
         (if (storedColumns.nonEmpty) Seq("stored") else Nil)
@@ -166,7 +123,7 @@ object IncrementalIndexer {
       // a whole Spark job per micro-batch for #fields rows). Idempotent per
       // gen key, and still BEFORE writeMeta: a crash window replays the
       // batch, which overwrites the same key with identical rows.
-      SegmentStore.updateFieldStatsGen(dir, s"gen$batchId", fsRows)
+      SegmentStore.updateFieldStatsGen(dir, s"gen$batchId", generation.fieldStats)
       SegmentStore.deleteRecursively(staging)
     } finally withIds.unpersist(blocking = false)
     writeMeta(dir, Meta(meta.nextDocId + n, batchId))

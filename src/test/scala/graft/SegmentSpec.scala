@@ -410,4 +410,110 @@ class SegmentSpec extends SparkSpec {
     val e = intercept[IllegalStateException](SegmentStore.open(spark, dir))
     assert(e.getMessage.contains("checkpoints/shardspec.json"), e.getMessage)
   }
+
+  /** Stored columns of the writer fixtures below. */
+  private val storedCols = Seq("turn_idx", "role")
+
+  /** One index dir per generation writer over the fixture: a build, an
+    * optimize of a second build after three deletes, and a two-batch append.
+    */
+  private lazy val writerDirs: Map[String, String] = {
+    def tmpDir(name: String) = Files.createTempDirectory(s"graft-writer-$name").toString
+    val built = tmpDir("build")
+    SegmentStore.build(docs, "docId", fields, built, docsPerShard = 257, storedColumns = storedCols)
+    val source = tmpDir("optimize-src")
+    SegmentStore.build(docs, "docId", fields, source, docsPerShard = 257, storedColumns = storedCols)
+    SegmentStore.deleteDocs(spark, source, Seq(3L, 100L, 400L))
+    val optimized = tmpDir("optimize")
+    SegmentStore.optimize(spark, source, optimized)
+    val appended = tmpDir("append")
+    val order = Seq("conv_id", "turn_idx")
+    // a batch this small coalesces into one partition; uncoalesced, it
+    // spans several, as a large batch does
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(coalesce, "false")
+    try Seq(col("docId") < 300, col("docId") >= 300).zipWithIndex.foreach { case (part, b) =>
+      graft.streaming.IncrementalIndexer.appendBatch(docs.filter(part).drop("docId"), b.toLong,
+        appended, order, fields, 257, storedColumns = storedCols)
+    } finally spark.conf.unset(coalesce)
+    Map("build" -> built, "optimize" -> optimized, "append" -> appended)
+  }
+
+  /** Canonical digests of an index dir's written tables: every SegmentRow
+    * field but `pid` (blocks byte for byte), the term stats rows, the field
+    * stats sidecar and the stored rows, each as sorted lines.
+    */
+  private def writerDigests(dir: String): Map[String, String] = {
+    import spark.implicits._
+    def md5(lines: Seq[String]): String = java.security.MessageDigest.getInstance("MD5")
+      .digest(lines.sorted.mkString("\n").getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
+    def hex(b: Array[Byte]) = b.map("%02x".format(_)).mkString
+    val segments = SegmentStore.readSegments(spark, s"$dir/segments").as[SegmentRow].collect().toSeq
+      .map(r => (Seq(r.shard, r.field, r.term, r.df, r.cf, r.minDoc, r.maxDoc, r.bytes) ++
+        r.blocks.map(b => Seq(b.firstDoc, b.lastDoc, b.count, b.maxTf, b.maxTfNorm, b.encAvgdl,
+          b.minPos, b.maxPos, hex(b.docBytes), hex(b.tfBytes), hex(b.dlBytes), hex(b.posBytes))
+          .mkString(","))).mkString("|"))
+    val termStats = spark.read.parquet(s"$dir/termstats").as[TermStats].collect().toSeq
+      .map(t => s"${t.field}|${t.term}|${t.df}|${t.cf}")
+    val fieldStats = SegmentStore.readFieldStatsGens(dir).get.toSeq.flatMap { case (gen, rows) =>
+      rows.map(f => s"$gen|${f.field}|${f.docCount}|${f.avgdl}|${f.sumDl}")
+    }
+    val stored = spark.read.parquet(s"$dir/stored").collect().toSeq.map(_.toSeq.mkString("|"))
+    Map("segments" -> md5(segments), "termstats" -> md5(termStats),
+      "fieldstats" -> md5(fieldStats), "stored" -> md5(stored))
+  }
+
+  test("build, optimize and appendBatch write the pinned generation bytes") {
+    val want = Map(
+      "build" -> Map("segments" -> "d7b0415a9267", "termstats" -> "1697a7fed96f",
+        "fieldstats" -> "5b4acc10cafd", "stored" -> "30c8ce144241"),
+      "optimize" -> Map("segments" -> "aa9aa5bc02df", "termstats" -> "70c04c09a8da",
+        "fieldstats" -> "d2b792f3d130", "stored" -> "61af13503144"),
+      "append" -> Map("segments" -> "7cf79616faf2", "termstats" -> "500ef1566466",
+        "fieldstats" -> "91d0bfce756b", "stored" -> "30c8ce144241"))
+    assert(writerDirs.map { case (w, dir) => w -> writerDigests(dir) } === want)
+  }
+
+  test("every writer keeps each shard's stored rows in one docId-ascending part file") {
+    import spark.implicits._
+    writerDirs.foreach { case (w, dir) =>
+      val parts = scala.util.Using.resource(Files.list(java.nio.file.Paths.get(s"$dir/stored")))(
+        _.toArray.map(_.asInstanceOf[Path])).filter(_.getFileName.toString.endsWith(".parquet"))
+      // a generation's files share the name prefix (`part`, `gen0`, `gen1`)
+      parts.groupBy(_.getFileName.toString.takeWhile(_ != '-')).foreach { case (gen, files) =>
+        val shardsByFile = files.toSeq.map { f =>
+          val ids = spark.read.parquet(f.toString).select("docId", "shard").as[(Long, Int)].collect()
+          assert(ids.map(_._1).toSeq === ids.map(_._1).sorted.toSeq, s"$w $gen: $f is not docId-ascending")
+          ids.map(_._2).toSet
+        }
+        val all = shardsByFile.flatten
+        assert(all.size === all.toSet.size, s"$w $gen: a shard spans several part files")
+      }
+    }
+  }
+
+  test("a build with stored columns resumes after the segments failpoint with the same doc-value answers") {
+    val dir = Files.createTempDirectory("graft-resume-stored").toString
+    intercept[RuntimeException] {
+      SegmentStore.build(docs, "docId", fields, dir, docsPerShard = 257,
+        failAfterStage = Some("segments"), storedColumns = storedCols)
+    }
+    assert(SegmentStore.stageDone(dir, "segments") && !SegmentStore.stageDone(dir, "stats"))
+    SegmentStore.build(docs, "docId", fields, dir, docsPerShard = 257, storedColumns = storedCols)
+    val resumed = SegmentStore.open(spark, dir)
+    val whole = SegmentStore.open(spark, writerDirs("build"))
+    Seq("turn_idx<long>:3 AND hello", "turn_idx<long>:[2 TO 6] AND (hello OR world)",
+      "hello AND -turn_idx<long>:[0 TO 3]", "turn_idx<long>:0").foreach { q =>
+      val opts = SearchOptions(limit = 10)
+      assert(new SegmentSearcher(resumed, opts).topK(q) === new SegmentSearcher(whole, opts).topK(q),
+        s"q=$q")
+    }
+    val envOpts = SearchOptions(limit = 8,
+      sort = graft.query.QueryParser.parseSort("/turn_idx<int>"), includeFields = Seq("role"))
+    def envelope(idx: SegmentIndex) = new SegmentSearcher(idx, envOpts).searchEnvelope("hello")
+      .select(col("docId"), col("score"), col("rank"), col("role")).collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getInt(2), r.getString(3))).toSeq.sortBy(_._3)
+    val got = envelope(resumed)
+    assert(got.nonEmpty && got === envelope(whole))
+  }
 }

@@ -226,7 +226,7 @@ class StreamingSpec extends SparkSpec {
     IncrementalIndexer.upsertBatch(updated, 1L, dir, Seq("conv_id", "turn_idx"), fields, 257)
     assert(SegmentStore.deletedDocs(spark, dir).size.toLong === nUpdated)
     // expunge: physical removal, doc count returns to the corpus size
-    SegmentStore.optimizeInPlace(spark, dir, docsPerShard = 257)
+    SegmentStore.optimizeInPlace(spark, dir)
     val after = SegmentStore.openMerged(spark, dir)
     assert(after.fieldStats("default").docCount === baseDocs)
     val hitsAfter = new SegmentSearcher(after, SearchOptions(limit = 100000)).topK("zzzupdated")
@@ -419,7 +419,7 @@ class StreamingSpec extends SparkSpec {
 
     // optimize: physical removal + stats recomputed == fresh build minus victims
     val optDir = Files.createTempDirectory("graft-opt").toString
-    SegmentStore.optimize(spark, dir, optDir, docsPerShard = 257)
+    SegmentStore.optimize(spark, dir, optDir)
     val opt = SegmentStore.open(spark, optDir).cached()
     val refDir = Files.createTempDirectory("graft-ref").toString
     SegmentStore.build(all.filter(!col("docId").isin(victims: _*)), "docId", fields, refDir, docsPerShard = 257)
