@@ -60,8 +60,6 @@ object GraftExtensions {
       "graft_tokenize", build, "built-in")
     spark.sessionState.tableFunctionRegistry.createOrReplaceTempFunction(
       "graft_search", buildSearch, "built-in")
-    if (!spark.experimental.extraStrategies.contains(graft.plans.FullTextSearchStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.FullTextSearchStrategy
+    graft.plans.FullTextSearchStrategy.install(spark)
   }
 }

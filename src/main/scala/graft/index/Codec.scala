@@ -78,20 +78,31 @@ object Codec {
     out.append(v.toByte)
   }
 
+  /** Cursor over a VByte stream: [[next]] reads one value and advances the
+    * position. The decoders walk each block byte array with one cursor, so
+    * no value allocates a (value, position) pair.
+    */
+  final class VByteReader(bytes: Array[Byte], private var pos: Int = 0) {
+    def position: Int = pos
+    def next(): Long = {
+      var b = bytes(pos)
+      pos += 1
+      var v = b & 0x7fL
+      var shift = 7
+      while ((b & 0x80) != 0) {
+        b = bytes(pos)
+        pos += 1
+        v |= (b & 0x7fL) << shift
+        shift += 7
+      }
+      v
+    }
+  }
+
   /** Reads a VLong from `bytes` at `pos`; returns (value, newPos). */
   def readVLong(bytes: Array[Byte], pos: Int): (Long, Int) = {
-    var p = pos
-    var shift = 0
-    var v = 0L
-    var b = bytes(p)
-    while ((b & 0x80) != 0) {
-      v |= (b & 0x7fL) << shift
-      shift += 7
-      p += 1
-      b = bytes(p)
-    }
-    v |= (b & 0x7fL) << shift
-    (v, p + 1)
+    val r = new VByteReader(bytes, pos)
+    (r.next(), r.position)
   }
 
   // ---- encode ----------------------------------------------------------
@@ -235,22 +246,16 @@ object Codec {
     val docIds = new Array[Long](b.count)
     val tfs = new Array[Int](b.count)
     val dls = new Array[Int](b.count)
-    var docPos = 0
-    var tfPos = 0
-    var dlPos = 0
+    val docR = new VByteReader(b.docBytes)
+    val tfR = new VByteReader(b.tfBytes)
+    val dlR = new VByteReader(b.dlBytes)
     var doc = 0L
     var i = 0
     while (i < b.count) {
-      val (delta, np) = readVLong(b.docBytes, docPos)
-      docPos = np
-      doc = if (i == 0) delta else doc + delta
+      doc += docR.next() // the first value is absolute: doc starts at 0
       docIds(i) = doc
-      val (tf, ntf) = readVLong(b.tfBytes, tfPos)
-      tfPos = ntf
-      tfs(i) = tf.toInt
-      val (dl, ndl) = readVLong(b.dlBytes, dlPos)
-      dlPos = ndl
-      dls(i) = dl.toInt
+      tfs(i) = tfR.next().toInt
+      dls(i) = dlR.next().toInt
       i += 1
     }
     new BlockDocs(docIds, tfs, dls)
@@ -259,7 +264,7 @@ object Codec {
   /** Decode the whole block's position lists (tf(i) positions per doc). */
   def decodePositions(b: Block, tfs: Array[Int]): Array[Array[Int]] = {
     val out = new Array[Array[Int]](b.count)
-    var posPos = 0
+    val posR = new VByteReader(b.posBytes)
     var i = 0
     while (i < b.count) {
       val tf = tfs(i)
@@ -267,9 +272,7 @@ object Codec {
       var p = 0
       var j = 0
       while (j < tf) {
-        val (d, npp) = readVLong(b.posBytes, posPos)
-        posPos = npp
-        p += d.toInt
+        p += posR.next().toInt
         positions(j) = p
         j += 1
       }

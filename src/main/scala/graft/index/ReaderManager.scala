@@ -42,8 +42,9 @@ object ReaderManager {
 
 /** One serving reader over an index dir: `acquire()` returns the current
   * cached snapshot with no IO; `maybeRefresh()` re-opens (folded
-  * generations, tombstones, serving placement) ONLY when
-  * [[ReaderManager.version]] moved, unpersisting the superseded snapshot.
+  * generations, tombstones) and pins the new snapshot's shard readers ONLY
+  * when [[ReaderManager.version]] moved, releasing the superseded
+  * snapshot's readers.
   * The `etag` is stable across acquires of the same snapshot — a caching
   * HTTP façade would serve 304s off it exactly like the reference.
   */

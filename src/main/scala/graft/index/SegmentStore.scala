@@ -2,12 +2,10 @@ package graft.index
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.{Partitioner, TaskContext}
-import org.apache.spark.rdd.ShuffledRDD
+import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
+import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, GraftColumn, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-import org.apache.spark.sql.execution.UnsafeRowSerializer
 import org.apache.spark.sql.functions._
 
 import graft.analysis.Analyzers
@@ -1079,16 +1077,20 @@ object SegmentStore {
   def openMerged(spark: SparkSession, dir: String): SegmentIndex = open(spark, dir)
 }
 
+/** An index snapshot ([[SegmentStore.open]]): its segment rows, stats,
+  * spec, stored sidecar and deletes. [[cached]] turns it into a serving
+  * snapshot with resident [[ShardReader]]s, which every
+  * [[SegmentSearcher]] query then runs over without a SQL plan.
+  */
 final class SegmentIndex(
+    /** The segment rows: a parquet scan of an opened snapshot; the resident
+      * readers' rows, in placement order, of a cached one.
+      */
     val segments: Dataset[SegmentRow],
     val termStats: Dataset[TermStats],
     val fieldStats: Map[String, FieldStats],
     val fields: Seq[FieldDef],
     val docsPerShard: Long = 1L << 20,
-    /** True when every partition of `segments` holds only whole shards
-      * (see [[cached]]) — queries then skip the per-query shuffle.
-      */
-    val shardAligned: Boolean = false,
     /** Stored-fields / doc-values sidecar (docId + source columns): serves
       * typed point/range predicates, field-sort keys, and include_fields
       * on the segment path. None when the build didn't request it.
@@ -1098,7 +1100,11 @@ final class SegmentIndex(
       * [[SegmentSearcher]] over this snapshot excludes them. None when the
       * dir has no tombstone log.
       */
-    val tombstones: Option[DataFrame] = None) extends SearchableIndex {
+    val tombstones: Option[DataFrame] = None,
+    /** The pinned per-shard readers of a [[cached]] snapshot, deletes
+      * included; None on an opened one.
+      */
+    private[graft] val readers: Option[RDD[ShardReader]] = None) extends SearchableIndex {
 
   /** Driver-side term-stats memo (see TextIndex.statsCache); LRU-bounded —
     * an open-ended query vocabulary must not grow the driver map forever.
@@ -1106,64 +1112,50 @@ final class SegmentIndex(
   @transient lazy val statsCache: LruCache[(String, String), Option[TermStats]] =
     new LruCache(65536)
 
-  /** Serving mode: place every shard whole in one partition and pin the
-    * segments in memory. A query then runs as ONE narrow stage (filter →
-    * per-partition shard top-k → TakeOrdered) with no per-query shuffle —
-    * the exchange is paid once here, like Lucene opening its per-segment
-    * readers up front and searching them per request
-    * (reference DatabaseIndexer.java:531-535).
-    *
-    * Shard `s` goes to partition `s % P`, `P = min(shards, defaultParallelism)`,
-    * through an exact partitioner: hashing `shard` into P buckets collides
-    * (4 shards hashed into 4 partitions filled only 2), and every empty
-    * partition is still one scheduled task per query. So each of the P
-    * serving partitions holds whole shards, and with contiguous shard ids
-    * none is empty. The shard count is the span of the `shard` column's
-    * parquet footer statistics, read on the driver with no Spark job; an
-    * index whose footers carry none falls back to `P = defaultParallelism`.
+  /** Reader partitions P: `min(shards, defaultParallelism)` — the shard
+    * count is the span of the `shard` column's parquet footer statistics,
+    * read on the driver with no Spark job; an index whose footers carry
+    * none falls back to `P = defaultParallelism`. With contiguous shard ids
+    * no partition is empty.
+    */
+  private[index] lazy val placementWidth: Int = readers.fold {
+    val par = segments.sparkSession.sparkContext.defaultParallelism
+    SegmentIndex.shardSpan(segments).fold(par)(math.min(_, par))
+  }(_.getNumPartitions)
+
+  /** Serving mode: open every shard's reader once and pin it — Lucene
+    * opening its per-segment readers up front and searching them per
+    * request (reference DatabaseIndexer.java:531-535). The snapshot's
+    * segment rows and its deletes are placed together
+    * ([[ShardReader.place]]: shard `s` in partition `s % P`), so each
+    * reader carries its shard's live docs, and a live or tombstoned query
+    * is one job of P tasks with no shuffle. The readers are built and
+    * materialized here, before this returns. termStats and the stored
+    * sidecar are pinned on the snapshot's own RDD plans.
     */
   def cached(): SegmentIndex = {
     val spark = segments.sparkSession
-    val par = spark.sparkContext.defaultParallelism
-    val p = SegmentIndex.shardSpan(segments).fold(par)(math.min(_, par))
-    val rows = segments.toDF()
-    val schema = rows.schema
-    val shardAt = schema.fieldIndex("shard")
-    // InternalRow-level hop (the same one DocIds.assign takes): no
-    // external-Row decode/encode per segment row, and the shuffle moves the
-    // rows' UnsafeRow bytes with the SQL exchange's serializer
-    val keyed = rows.queryExecution.toRdd.mapPartitions { it =>
-      val toUnsafe = UnsafeProjection.create(schema)
-      it.map(r => (r.getInt(shardAt), toUnsafe(r): InternalRow))
-    }
-    val placed = new ShuffledRDD[Int, InternalRow, InternalRow](keyed, new SegmentIndex.ShardPartitioner(p))
-      .setSerializer(new UnsafeRowSerializer(schema.length))
-      .map(_._2)
-    // sortWithinPartitions by (field, term): the columnar cache's per-batch
-    // min/max stats then give every query batch-level term pruning — a term
-    // query decompresses only the few batches whose [min,max] term range
-    // covers it, instead of scanning the whole cached index (the per-query
-    // bandwidth that capped query core-scaling). Keep batches small enough
-    // to prune (see Bench session conf inMemoryColumnarStorage.batchSize).
-    val aligned = GraftColumn.internalCreateDataFrame(spark, placed, schema)
-      .sortWithinPartitions("field", "term", "minDoc")
-      .as(Encoders.product[SegmentRow])
-    val idx = new SegmentIndex(aligned,
+    val rows = (segments +: tombstones.toSeq.map(
+      SegmentSearcher.docSetRows(_, ShardReader.DeletedTerm, docsPerShard))).reduce(_ union _)
+    val pinned = ShardReader.place(rows.queryExecution.toRdd, placementWidth)
+      .setName("shard readers").persist(StorageLevel.MEMORY_AND_DISK)
+    pinned.count()
+    val idx = new SegmentIndex(
+      spark.createDataset(pinned.mapPartitions(_.flatMap(_.rows)))(Encoders.product[SegmentRow]),
       SegmentIndex.ownPlan(termStats.toDF()).as(Encoders.product[TermStats]), fieldStats, fields,
-      docsPerShard, shardAligned = true, stored = stored.map(SegmentIndex.ownPlan(_).persist()),
-      tombstones = tombstones)
-    idx.segments.persist()
+      docsPerShard, stored = stored.map(SegmentIndex.ownPlan(_).persist()),
+      tombstones = tombstones, readers = Some(pinned))
     idx.termStats.persist()
     idx
   }
 
-  /** Release what [[cached]] pinned: segments, termStats and the stored
+  /** Release what [[cached]] pinned: the readers, termStats and the stored
     * sidecar. A no-op once the session's SparkContext has stopped — its
     * storage went with it.
     */
   def unpersist(blocking: Boolean): Unit =
     if (!segments.sparkSession.sparkContext.isStopped) {
-      segments.unpersist(blocking)
+      readers.foreach(_.unpersist(blocking))
       termStats.unpersist(blocking)
       stored.foreach(_.unpersist(blocking))
     }
@@ -1179,11 +1171,6 @@ object SegmentIndex {
     */
   private def ownPlan(df: DataFrame): DataFrame =
     GraftColumn.internalCreateDataFrame(df.sparkSession, df.queryExecution.toRdd, df.schema)
-
-  /** Shard `s` → partition `s % numPartitions`: exact serving placement. */
-  private final class ShardPartitioner(val numPartitions: Int) extends Partitioner {
-    def getPartition(key: Any): Int = Math.floorMod(key.asInstanceOf[Int], numPartitions)
-  }
 
   /** Number of shard ids the segment files span (max − min + 1 of the
     * `shard` column), from the parquet footers' column statistics: a

@@ -295,20 +295,36 @@ class SegmentSpec extends SparkSpec {
     assert(!SegmentStore.stageDone(dir, "segments"))
   }
 
-  /** Tasks run by the jobs `f` starts (listener bus drained both sides). */
-  private def tasksOf(f: => Unit): Int = {
+  /** What the jobs `f` starts ran (listener bus drained both sides). */
+  private final case class JobShape(jobs: Int, stages: Int, tasks: Int, resultTasks: Int,
+      shuffleBytes: Long, shuffleRecords: Long)
+
+  private def shapeOf(f: => Unit): JobShape = {
+    import org.apache.spark.scheduler._
     val sc = spark.sparkContext
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        n.incrementAndGet()
+    val jobs, stages, tasks, resultTasks = new java.util.concurrent.atomic.AtomicInteger
+    val bytes, records = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = stages.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+        tasks.incrementAndGet()
+        if (e.taskType == "ResultTask") resultTasks.incrementAndGet()
+        Option(e.taskMetrics).foreach { m =>
+          bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+          records.addAndGet(m.shuffleWriteMetrics.recordsWritten)
+        }
+      }
     }
     org.apache.spark.GraftListenerBus.drain(sc)
     sc.addSparkListener(listener)
     try { f; org.apache.spark.GraftListenerBus.drain(sc) }
     finally sc.removeSparkListener(listener)
-    n.get
+    JobShape(jobs.get, stages.get, tasks.get, resultTasks.get, bytes.get, records.get)
   }
+
+  /** Tasks run by the jobs `f` starts. */
+  private def tasksOf(f: => Unit): Int = shapeOf(f).tasks
 
   // docsPerShard 257 gives at least defaultParallelism (4) shards over the
   // fixture; docsPerShard = half the corpus gives two
@@ -354,39 +370,79 @@ class SegmentSpec extends SparkSpec {
       }
   }
 
-  test("every segment query is one per-shard stage: one shuffle, no co-group, group or sort") {
-    import org.apache.spark.sql.execution.{CoGroupExec, MapGroupsExec, SortExec}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    def assertOneStage(df: org.apache.spark.sql.DataFrame, what: String): Unit = {
-      // AQE's initial plan: the final plan's collect stops at query stages
-      val plan = df.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.initialPlan
-        case other => other
-      }
-      assert(plan.collect { case e: ShuffleExchangeLike => e }.size === 1, s"$what:\n$plan")
-      assert(plan.collect { case n @ (_: CoGroupExec | _: MapGroupsExec | _: SortExec) => n }.isEmpty,
-        s"$what:\n$plan")
-    }
+  test("every segment query is one job over the shard readers") {
     val dir = Files.createTempDirectory("graft-seg-one-stage").toString
     SegmentStore.build(docs, "docId", fields, dir, docsPerShard = 257, storedColumns = Seq("turn_idx"))
     val opts = SearchOptions(limit = 10)
     val live = new SegmentSearcher(SegmentStore.open(spark, dir), opts)
-    assertOneStage(live.search("hello world"), "uncached hello world")
+    // uncached: the job's one shuffle moves the query's filtered rows only
+    live.search("hello world").collect()
+    val filtered = SegmentStore.open(spark, dir).segments
+      .filter(col("field") === "default" && col("term").isin("hello", "world")).count()
+    val uncached = shapeOf(live.search("hello world").collect())
+    assert(uncached.jobs === 1 && uncached.stages === 2, s"uncached: $uncached")
+    assert(uncached.shuffleRecords === filtered, s"uncached: $uncached")
     val deleted = live.topK("hello").take(3).map(_._1)
     SegmentStore.deleteDocs(spark, dir, deleted)
     val idx = SegmentStore.open(spark, dir).cached()
     try {
+      val p = idx.readers.get.getNumPartitions
       val cachedS = new SegmentSearcher(idx, opts)
       val rawS = new SegmentSearcher(SegmentStore.open(spark, dir), opts)
-      Seq("hello world", "turn_idx<long>:[2 TO 6] AND hello", "turn_idx<long>:0").foreach { q =>
-        assertOneStage(cachedS.search(q), s"cached, tombstoned q=$q")
+      val stored = SegmentStore.open(spark, dir).stored.get
+      Seq("hello world" -> None,
+          "turn_idx<long>:[2 TO 6] AND hello" -> Some(col("turn_idx").between(2, 6)),
+          "turn_idx<long>:0" -> Some(col("turn_idx") === 0)).foreach { case (q, pred) =>
+        cachedS.search(q).collect() // warm: plan memo + stats
+        val shape = shapeOf(cachedS.search(q).collect())
+        assert(shape.jobs === 1 && shape.resultTasks === p, s"cached, tombstoned q=$q: $shape")
+        pred match {
+          case None => // the deletes live in the readers: one stage, nothing shuffled
+            assert(shape.stages === 1 && shape.tasks === p && shape.shuffleBytes === 0L, s"q=$q: $shape")
+          case Some(c) => // only the query's doc-value matches are shuffled to the readers
+            assert(shape.stages === 2 && shape.shuffleRecords === stored.filter(c).count(), s"q=$q: $shape")
+        }
         val got = cachedS.topKWithTotal(q)
         assert(got._1.nonEmpty, s"q=$q")
         assert(got === rawS.topKWithTotal(q), s"cached ≠ uncached for q=$q")
         assert(got._1.map(_._1).intersect(deleted).isEmpty, s"deleted doc answered for q=$q")
       }
     } finally idx.unpersist(blocking = true)
+  }
+
+  test("a memoized search frame runs its job on every collect, with the same answer") {
+    val s = new SegmentSearcher(segIndex, SearchOptions(limit = 10))
+    val df = s.search("hello world")
+    assert(s.search("hello world") eq df)
+    var answers = Seq.empty[Seq[(Long, Double)]]
+    val shape = shapeOf((1 to 2).foreach { _ =>
+      answers :+= df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    })
+    assert(shape.jobs === 2, shape.toString)
+    assert(answers.head.nonEmpty && answers.head === answers(1))
+    assert(answers.head === s.topK("hello world"))
+  }
+
+  test("unpersist, maybeRefresh and releaseAll each release a snapshot's shard readers") {
+    val dir = Files.createTempDirectory("graft-seg-release").toString
+    SegmentStore.build(docs.filter(col("docId") < 200), "docId", fields, dir, docsPerShard = 257)
+    val sc = spark.sparkContext
+    def pinned(idx: SegmentIndex): Boolean = sc.getPersistentRDDs.contains(idx.readers.get.id)
+    val idx = SegmentStore.open(spark, dir).cached()
+    assert(pinned(idx))
+    idx.unpersist(blocking = true)
+    assert(!pinned(idx))
+    val mgr = new IndexReaderManager(spark, dir)
+    val first = mgr.acquire()
+    assert(pinned(first))
+    SegmentStore.deleteDocs(spark, dir, Seq(0L))
+    assert(mgr.maybeRefresh())
+    assert(!pinned(first) && pinned(mgr.acquire()))
+    mgr.acquire().unpersist(blocking = true)
+    val shared = IndexReaderManager.of(spark, dir).acquire()
+    assert(pinned(shared))
+    IndexReaderManager.releaseAll()
+    assert(!pinned(shared))
   }
 
   test("a docId deleted twice counts once and stays out of cached and uncached answers") {
