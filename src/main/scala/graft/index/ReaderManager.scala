@@ -15,7 +15,7 @@ import org.apache.spark.sql.SparkSession
 object ReaderManager {
 
   /** Freshness token — the ETag analog: a digest of the index dir's commit
-    * surface (checkpoint markers, generation file names + sizes, tombstone
+    * surface (the commit file, generation file names + sizes, tombstone
     * files). Changes iff a commit advanced the index: a new appended
     * generation, an optimize swap, a spec rewrite, or new tombstones.
     * Pure metadata walk — never opens parquet data.
@@ -32,9 +32,9 @@ object ReaderManager {
         entries.foreach(e => md.update(e.getBytes("UTF-8")))
       }
     }
-    // checkpoints carries stage markers + incremental meta + spec digest;
+    // checkpoints carries the commit (spec, field stats, appender position);
     // segments/termstats/tombstones/stored catch generation promotion and
-    // optimize swaps even when marker contents alone wouldn't change
+    // optimize swaps even when the commit's size alone wouldn't change
     Seq("checkpoints", "segments", "termstats", "tombstones", "stored").foreach(feed)
     md.digest().map("%02x".format(_)).mkString
   }

@@ -28,8 +28,8 @@ final case class SegmentRow(
     pid: Int, // encoding partition, for lineage
     blocks: Seq[Block])
 
-/** Per-stage, per-partition build lineage (north rule: resumable with
-  * per-partition lineage + row/term/byte metrics).
+/** Per-stage, per-partition build lineage (north rule: per-partition
+  * lineage + row/term/byte metrics).
   */
 final case class LineageRow(stage: String, pid: Int, rowsIn: Long, rowsOut: Long, bytesOut: Long)
 
@@ -43,10 +43,10 @@ final case class LineageRow(stage: String, pid: Int, rowsIn: Long, rowsOut: Long
   */
 final case class MarkerStat(pid: Int, field: String, docCount: Long, sumDl: Long)
 
-/** The on-disk index: compressed posting segments + stats + spec, built in
-  * resumable stages — the Spark-scale analog of the reference's Lucene index
-  * directory with `last_seq` commit user data as its checkpoint
-  * (/root/reference/src/main/java/com/github/rnewson/couchdb/lucene/DatabaseIndexer.java:199-211,715-729).
+/** The on-disk index: compressed posting segments + stats + spec, made
+  * part of the index by one commit — the Spark-scale analog of the
+  * reference's Lucene index directory, committed with its `last_seq` user
+  * data (/root/reference/src/main/java/com/github/rnewson/couchdb/lucene/DatabaseIndexer.java:199-211,715-729).
   *
   * Layout under `dir/` — every generation of `segments`, `termstats`,
   * `stored` and `keys` is written by [[SegmentStore.writeGeneration]]:
@@ -56,17 +56,17 @@ final case class MarkerStat(pid: Int, field: String, docCount: Long, sumDl: Long
   *                each shard's rows in one docId-ascending part file per
   *                generation (only when stored columns are requested)
   *   keys/        upsert key→docId map (appender generations only)
-  *   lineage/     lineage.tsv — per-partition LineageRow sidecar per stage
-  *   checkpoints/ <stage>.json markers (spec, segments, stats) — a rerun
-  *                skips completed stages — plus the driver-side metadata
-  *                sidecars (round 6): spec.tsv (indexField, source, kind,
-  *                analyzer, boost), spec.digest, shardspec.json,
-  *                fieldstats.tsv (gen, field, docCount, avgdl, sumDl).
+  *   lineage/     lineage.tsv — the build's per-partition LineageRow sidecar
+  *   checkpoints/ commit.tsv — the dir's one commit ([[SegmentStore.Commit]]:
+  *                shard width, spec, each generation's field stats, an
+  *                appender's position), replaced by one atomic write per
+  *                commit; a streamed dir keeps Structured Streaming's own
+  *                `stream/` checkpoint beside it
   *   tombstones/  deleted docIds (parquet, appended per delete)
   *
-  * Production note: each stage's write maps 1:1 onto an Iceberg table commit
-  * (snapshot id = the checkpoint); this sandbox has no Iceberg jars, so the
-  * commit protocol is parquet dir + `_SUCCESS` + checkpoint marker.
+  * Production note: a commit maps 1:1 onto an Iceberg table commit
+  * (snapshot id = the commit); this sandbox has no Iceberg jars, so the
+  * commit protocol is parquet dirs + `_SUCCESS` + the commit file.
   */
 object SegmentStore {
 
@@ -76,18 +76,12 @@ object SegmentStore {
     */
   val DocSetField = ""
 
-  private def ckptPath(dir: String, stage: String) = Paths.get(s"$dir/checkpoints/$stage.json")
-
-  // ---- driver-side metadata sidecars (round 6) -------------------------
-  // spec, fieldstats and lineage are #fields / #generations×#fields /
-  // #partitions-sized metadata that is ALREADY driver-resident at every
+  // ---- driver-side metadata files --------------------------------------
+  // The commit and the lineage are #fields / #generations×#fields /
+  // #partitions-sized metadata that is already driver-resident at every
   // write site (FieldDefs in memory, marker-accumulator folds, lineage
-  // accumulators) — the Lucene segments-info/commit-user-data analog.
-  // Round-5 wrote and re-read them as parquet THROUGH Spark: one scheduled
-  // job (plus a full plan/optimize cycle) per tiny table per build/open —
-  // pure serial tax on the build path and a fixed per-open cost on every
-  // maintenance op (guide §1.2: remove driver-synchronized passes first).
-  // They are now TSV sidecars written/read driver-side with zero jobs.
+  // accumulators). They are TSV files written and read on the driver with
+  // zero Spark jobs (guide §1.2: remove driver-synchronized passes first).
 
   private def escTsv(s: String): String = {
     val sb = new StringBuilder(s.length)
@@ -128,30 +122,124 @@ object SegmentStore {
       // -1: keep trailing empty cells (an empty analyzer name is legal)
       .map(_.split("\t", -1).map(unescTsv))
 
-  private def specTsvPath(dir: String) = Paths.get(s"$dir/checkpoints/spec.tsv")
+  // ---- the commit ------------------------------------------------------
 
-  private[graft] def fieldStatsTsvPath(dir: String) = Paths.get(s"$dir/checkpoints/fieldstats.tsv")
-
-  /** Write the full per-generation fieldstats map (driver-side, no job). */
-  private[graft] def writeFieldStatsGens(dir: String, gens: Map[String, Seq[FieldStats]]): Unit =
-    writeTsv(fieldStatsTsvPath(dir),
-      gens.toSeq.sortBy(_._1).flatMap { case (gen, rows) =>
-        rows.sortBy(_.field).map(r =>
-          s"${escTsv(gen)}\t${escTsv(r.field)}\t${r.docCount}\t" +
-            s"${java.lang.Double.toString(r.avgdl)}\t${r.sumDl}")
-      })
-
-  private[graft] def readFieldStatsGens(dir: String): Option[Map[String, Seq[FieldStats]]] =
-    if (!Files.exists(fieldStatsTsvPath(dir))) None
-    else Some(readTsv(fieldStatsTsvPath(dir))
-      .map(c => (c(0), FieldStats(c(1), c(2).toLong, java.lang.Double.parseDouble(c(3)), c(4).toLong)))
-      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap)
-
-  /** Upsert one generation's rows into the sidecar. Idempotent per gen key
-    * (a replayed batch overwrites its own rows with identical values).
+  /** The one commit of an index or dedup dir: the shard width, the field
+    * spec, each generation's field stats (`base` for a build or optimize,
+    * `gen<batchId>` per appended batch), and an appender's position — the
+    * next free docId and the last committed batch (the `last_seq` analog).
+    * A dedup store commits its `lastBatch` only. Everything a writer put
+    * under the dir becomes part of the index when its commit replaces the
+    * dir's `checkpoints/commit.tsv` ([[writeCommit]]).
     */
-  private[graft] def updateFieldStatsGen(dir: String, gen: String, rows: Seq[FieldStats]): Unit =
-    writeFieldStatsGens(dir, readFieldStatsGens(dir).getOrElse(Map.empty) + (gen -> rows))
+  private[graft] final case class Commit(
+      docsPerShard: Option[Long] = None,
+      fields: Seq[FieldDef] = Nil,
+      fieldStats: Map[String, Seq[FieldStats]] = Map.empty,
+      nextDocId: Option[Long] = None,
+      lastBatch: Option[Long] = None) {
+    require(!fields.exists(_.indexField == DocSetField),
+      "the empty index field name is reserved for doc-set rows")
+  }
+
+  private def commitPath(dir: String) = Paths.get(s"$dir/checkpoints/commit.tsv")
+
+  /** Structured Streaming's own checkpoint dir of a streamed index or dedup
+    * dir — the one other entry under `checkpoints/`.
+    */
+  def streamCheckpoint(dir: String): String = s"$dir/checkpoints/stream"
+
+  /** True when `dir` holds a commit. */
+  def committed(dir: String): Boolean = Files.exists(commitPath(dir))
+
+  /** The (kind, analyzer name) a field's spec row persists. */
+  private def kindOf(f: FieldDef): (String, String) = f.kind match {
+    case TextField(a) => ("text", analyzerName(a))
+    case StringField => ("string", "")
+  }
+
+  /** Replace `dir`'s commit with `c`: one atomic write, one row per value. */
+  private[graft] def writeCommit(dir: String, c: Commit): Unit =
+    writeTsv(commitPath(dir),
+      c.docsPerShard.map(d => s"docsPerShard\t$d").toSeq ++
+        c.fields.map { f =>
+          val (kind, an) = kindOf(f)
+          s"field\t${escTsv(f.indexField)}\t${escTsv(f.source)}\t$kind\t${escTsv(an)}\t" +
+            java.lang.Double.toString(f.boost)
+        } ++
+        c.fieldStats.toSeq.sortBy(_._1).flatMap { case (gen, rows) =>
+          rows.sortBy(_.field).map(r =>
+            s"fieldstats\t${escTsv(gen)}\t${escTsv(r.field)}\t${r.docCount}\t" +
+              s"${java.lang.Double.toString(r.avgdl)}\t${r.sumDl}")
+        } ++
+        c.nextDocId.map(n => s"nextDocId\t$n") ++
+        c.lastBatch.map(b => s"lastBatch\t$b"))
+
+  /** `dir`'s commit, or None before its first one. A row that does not
+    * parse raises, naming the file.
+    */
+  private[graft] def lastCommit(dir: String): Option[Commit] = {
+    val path = commitPath(dir)
+    if (!committed(dir)) None
+    else Some(readTsv(path).foldLeft(Commit()) { (c, row) =>
+      row match {
+        case Array("docsPerShard", d) => c.copy(docsPerShard = Some(d.toLong))
+        case Array("field", name, source, "text", an, boost) =>
+          c.copy(fields = c.fields :+ FieldDef(name, source, TextField(Analyzers.byName(an)), boost.toDouble))
+        case Array("field", name, source, "string", _, boost) =>
+          c.copy(fields = c.fields :+ FieldDef(name, source, StringField, boost.toDouble))
+        case Array("fieldstats", gen, field, docCount, avgdl, sumDl) =>
+          val fs = FieldStats(field, docCount.toLong, java.lang.Double.parseDouble(avgdl), sumDl.toLong)
+          c.copy(fieldStats = c.fieldStats.updated(gen, c.fieldStats.getOrElse(gen, Vector.empty) :+ fs))
+        case Array("nextDocId", n) => c.copy(nextDocId = Some(n.toLong))
+        case Array("lastBatch", b) => c.copy(lastBatch = Some(b.toLong))
+        case other => throw new IllegalStateException(s"$path has an unreadable row: ${other.mkString("\t")}")
+      }
+    })
+  }
+
+  /** `dir`'s commit; a dir without one is not a committed index. */
+  private[graft] def readCommit(dir: String): Commit =
+    lastCommit(dir).getOrElse(
+      throw new IllegalStateException(s"${commitPath(dir)} is missing: not a committed index dir"))
+
+  /** A value `dir`'s commit must hold; a commit without it is corrupt (a
+    * guess would mis-route docIds, reuse them or replay batches).
+    */
+  private[graft] def required[A](dir: String, name: String, value: Option[A]): A =
+    value.getOrElse(throw new IllegalStateException(s"${commitPath(dir)} has no $name value"))
+
+  /** The committed field spec of `dir`. */
+  private def specOf(dir: String, c: Commit): Seq[FieldDef] =
+    required(dir, "field spec", Some(c.fields).filter(_.nonEmpty))
+
+  /** The committed field stats of `dir`, per generation; None before its
+    * first commit.
+    */
+  private[graft] def readFieldStatsGens(dir: String): Option[Map[String, Seq[FieldStats]]] =
+    lastCommit(dir).map(_.fieldStats)
+
+  /** The committed shard width: readers route a docId to its shard by it —
+    * deleted docs and doc-value matches reach their shard's scoring task as
+    * doc-set rows (no driver-side Set broadcast).
+    */
+  def docsPerShardOf(dir: String): Long = required(dir, "docsPerShard", readCommit(dir).docsPerShard)
+
+  /** Field stats folded over generations: a single-generation commit reads
+    * as written; several sum their exact integer counts per field, so the
+    * merged avgdl is one division — no docCount·avgdl FP round-trip that
+    * could drift after many appended generations.
+    */
+  private def foldFieldStats(gens: Map[String, Seq[FieldStats]]): Map[String, FieldStats] =
+    if (gens.size <= 1) gens.values.flatten.map(fs => fs.field -> fs).toMap
+    else gens.values.flatten.groupBy(_.field).map { case (f, rows) =>
+      val dc = rows.map(_.docCount).sum
+      val sd = rows.map(_.sumDl).sum
+      f -> FieldStats(f, dc, sd.toDouble / dc.toDouble, sd)
+    }
+
+  /** Indexed doc count: the max over fields. */
+  private def docCount(stats: Iterable[FieldStats]): Long = stats.map(_.docCount).maxOption.getOrElse(0L)
 
   /** Lineage rows as a TSV sidecar (accumulator output — driver data). */
   private def lineageTsvPath(dir: String) = Paths.get(s"$dir/lineage/lineage.tsv")
@@ -165,18 +253,6 @@ object SegmentStore {
     else readTsv(lineageTsvPath(dir))
       .map(c => LineageRow(c(0), c(1).toInt, c(2).toLong, c(3).toLong, c(4).toLong))
 
-  // ---- shard spec (docsPerShard) ---------------------------------------
-  // Persisted so readers can route a docId to its shard without scanning
-  // segment metadata — deleted docs and doc-value matches reach their
-  // shard's scoring task as doc-set rows (no driver-side Set broadcast).
-
-  private def shardSpecPath(dir: String) = Paths.get(s"$dir/checkpoints/shardspec.json")
-
-  def hasShardSpec(dir: String): Boolean = Files.exists(shardSpecPath(dir))
-
-  def writeShardSpec(dir: String, docsPerShard: Long): Unit =
-    writeAtomically(shardSpecPath(dir), s"""{"docsPerShard": $docsPerShard}""")
-
   /** Write through a sibling temp file + atomic move: never a torn file. */
   private[graft] def writeAtomically(path: java.nio.file.Path, body: String): Unit = {
     Files.createDirectories(path.getParent)
@@ -184,28 +260,6 @@ object SegmentStore {
     Files.writeString(tmp, body)
     Files.move(tmp, path, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
-
-  /** The long `name` of a checkpoint JSON sidecar; a file without it is
-    * corrupt (a guess would mis-route docIds or reuse them). */
-  private[graft] def jsonLong(path: java.nio.file.Path, name: String): Long =
-    s""""$name":\\s*(-?\\d+)""".r.findFirstMatchIn(Files.readString(path))
-      .map(_.group(1).toLong)
-      .getOrElse(throw new IllegalStateException(s"$path has no $name value"))
-
-  def docsPerShardOf(dir: String): Long =
-    if (!Files.exists(shardSpecPath(dir))) {
-      // A lost shardspec under an index WITH tombstones is not guessable:
-      // a wrong docsPerShard routes deleted docIds to the wrong shard's
-      // scoring task and deleted docs silently reappear. Refuse to serve.
-      if (Files.exists(Paths.get(s"$dir/tombstones")))
-        throw new IllegalStateException(
-          s"$dir has tombstones but no checkpoints/shardspec.json — refusing to guess " +
-            "docsPerShard (deletes would be silently mis-routed); restore the shardspec " +
-            "or run optimize() to rewrite the index")
-      1L << 20
-    } else jsonLong(shardSpecPath(dir), "docsPerShard")
-
-  def stageDone(dir: String, stage: String): Boolean = Files.exists(ckptPath(dir, stage))
 
   /** One map-side-combined posting run (see the combine note in
     * [[encodeSegments]]): (shard, field, term, minDoc, docIds ascending,
@@ -273,31 +327,24 @@ object SegmentStore {
     (d2, t2, l2, p2)
   }
 
-  private def commitStage(dir: String, stage: String, metrics: Map[String, Long]): Unit = {
-    val body = metrics.map { case (k, v) => s""""$k": $v""" }.mkString("{", ", ", "}")
-    writeAtomically(ckptPath(dir, stage),
-      s"""{"stage": "$stage", "completedAtMs": ${System.currentTimeMillis()}, "metrics": $body}""")
-  }
-
-  /** Staged, resumable build; returns the indexed doc count (max over
-    * fields). `failAfterStage` is a test failpoint: throw after committing
-    * that stage — `spec`, `segments` or `stats` (kill-between-stages test,
-    * SURVEY.md §5.2). A rerun redoes every stage not yet committed; the
-    * stored sidecar commits with `segments`, so it is rewritten too.
+  /** Build an index of `docs` into `dir` and commit it; returns the
+    * indexed doc count (max over fields). ONE [[writeGeneration]] call —
+    * its tokenize→shuffle→encode+write job also folds the term stats, and
+    * the stored sidecar (when `storedColumns` are requested) is written
+    * beside it — then the lineage sidecar, then ONE commit of the spec,
+    * the shard width and the generation's field stats. With the docID/count
+    * pass the caller ran, the build is 2 corpus-scale jobs: term/field
+    * stats are DERIVED from the encoded segment rows (df/cf per (shard,
+    * field, term) ride on every row; dl-marker runs become stats-only rows
+    * carrying per-shard (docCount, Σdl)) — the Lucene per-segment-stats
+    * fold, NOT a second tokenize of the corpus. Block-max bounds use
+    * block-local encAvgdl (see [[Codec.RunEncoder.encodeLocal]]), which is
+    * what breaks the old stats→encode ordering dependency.
     *
-    * Stages: `spec`, then `segments` — ONE [[writeGeneration]] call, whose
-    * tokenize→shuffle→encode+write job also folds the term stats and
-    * whose stored sidecar (when `storedColumns` are requested) commits
-    * with it — then `stats`, the field stats. With the docID/count pass the
-    * caller ran, the build is 2 corpus-scale jobs: term/field stats are
-    * DERIVED from the encoded segment rows (df/cf per (shard, field, term)
-    * ride on every row; dl-marker runs become stats-only rows carrying
-    * per-shard (docCount, Σdl)) — the Lucene per-segment-stats fold, NOT a
-    * second tokenize of the corpus. Block-max bounds use block-local
-    * encAvgdl (see [[Codec.RunEncoder.encodeLocal]]), which is what breaks
-    * the old stats→encode ordering dependency. Field stats flow
-    * driver-side in memory; the segments parquet is read back only on the
-    * (rare) resume path.
+    * A dir that already holds a commit — a completed build, or an
+    * appender's dir — is left as it is: the build writes nothing and
+    * returns the committed doc count. A build that failed before its commit
+    * left none, so its rerun writes the whole generation again.
     */
   def build(
       docs: DataFrame,
@@ -305,60 +352,28 @@ object SegmentStore {
       fields: Seq[FieldDef],
       dir: String,
       docsPerShard: Long = 1L << 20,
-      failAfterStage: Option[String] = None,
-      storedColumns: Seq[String] = Nil): Long = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-
-    def failpoint(stage: String): Unit =
-      if (failAfterStage.contains(stage)) throw new RuntimeException(s"failpoint after $stage")
-
-    Timing.timed("build.spec")(writeSpecOnce(spark, dir, fields, docsPerShard))
-    failpoint("spec")
-
-    var generation: Option[Generation] = None
-    if (!stageDone(dir, "segments")) Timing.timed("build.segments") {
-      // Stored-fields / doc-values sidecar (reference: Lucene stored fields +
-      // doc values, DatabaseIndexer.java:517-633): typed point/range
-      // predicates filter it column-pruned (the doc-values shape); the
-      // envelope's sort keys and include_fields join back against it
-      val g = writeGeneration(IndexBuilder.tokenizeMiniRuns(docs, docIdCol, fields, docsPerShard),
-        docsPerShard, dir,
-        if (storedColumns.isEmpty) Nil
-        else Seq(storedSidecar(
-          docs.select(col(docIdCol).cast("long").as("docId") +: storedColumns.map(col): _*),
-          docsPerShard)))
-      writeLineage(dir, g.lineage) // accumulator output — driver write, no job
-      commitStage(dir, "segments",
-        Map("segmentRows" -> g.lineage.map(_.rowsOut).sum, "postingBytes" -> g.lineage.map(_.bytesOut).sum,
-          "postingsIn" -> g.lineage.map(_.rowsIn).sum))
-      generation = Some(g)
+      storedColumns: Seq[String] = Nil): Long =
+    lastCommit(dir) match {
+      case Some(c) => docCount(foldFieldStats(c.fieldStats).values)
+      case None =>
+        val spec = Commit(Some(docsPerShard), fields) // a reserved field name fails before any write
+        val g = Timing.timed("build.segments") {
+          // Stored-fields / doc-values sidecar (reference: Lucene stored
+          // fields + doc values, DatabaseIndexer.java:517-633): typed
+          // point/range predicates filter it column-pruned (the doc-values
+          // shape); the envelope's sort keys and include_fields join back
+          // against it
+          writeGeneration(IndexBuilder.tokenizeMiniRuns(docs, docIdCol, fields, docsPerShard),
+            docsPerShard, dir,
+            if (storedColumns.isEmpty) Nil
+            else Seq(storedSidecar(
+              docs.select(col(docIdCol).cast("long").as("docId") +: storedColumns.map(col): _*),
+              docsPerShard)))
+        }
+        writeLineage(dir, g.lineage) // accumulator output — driver write, no job
+        writeCommit(dir, spec.copy(fieldStats = Map("base" -> g.fieldStats)))
+        docCount(g.fieldStats)
     }
-    failpoint("segments")
-
-    var fieldStatsMem: Option[Seq[FieldStats]] = None
-    if (!stageDone(dir, "stats")) Timing.timed("build.stats") {
-      // field stats: folded from the encode job's marker accumulator when
-      // the encode ran in THIS call (zero extra jobs); the read-back agg
-      // over the marker segment rows is the resume path (segments stage
-      // committed by an earlier, crashed run)
-      val fsRows = generation.map(_.fieldStats).getOrElse {
-        readSegments(spark, s"$dir/segments").filter(col("term") === IndexBuilder.DlMarker)
-          .groupBy(col("field"))
-          .agg(sum(col("df")).as("docCount"), (sum(col("cf")) / sum(col("df"))).as("avgdl"),
-            sum(col("cf")).as("sumDl"))
-          .as[FieldStats].collect().toIndexedSeq
-      }
-      writeFieldStatsGens(dir, Map("base" -> fsRows)) // driver write, no job
-      fieldStatsMem = Some(fsRows)
-      commitStage(dir, "stats",
-        Map("docCount" -> fsRows.map(_.docCount).maxOption.getOrElse(0L)))
-    }
-    failpoint("stats")
-    fieldStatsMem.map(_.map(_.docCount).maxOption.getOrElse(0L))
-      .orElse(stageMetric(dir, "stats", "docCount"))
-      .getOrElse(0L)
-  }
 
   /** A generation table written next to the segments: its dir name under
     * the generation's dir and its rows, built only when the write starts.
@@ -433,13 +448,6 @@ object SegmentStore {
       .repartition(col("shard"))
       .sortWithinPartitions("docId"))
 
-  /** A committed stage's numeric metric from its checkpoint marker. */
-  def stageMetric(dir: String, stage: String, key: String): Option[Long] = {
-    val p = ckptPath(dir, stage)
-    if (!Files.exists(p)) None
-    else s""""$key":\\s*(\\d+)""".r.findFirstMatchIn(Files.readString(p)).map(_.group(1).toLong)
-  }
-
   /** Canonical digest of an index field spec — the identity the reference
     * bakes into its index directory name (a changed view function ⇒ a new
     * digest ⇒ a fresh index dir, DatabaseIndexer.java:343-348 /
@@ -447,10 +455,7 @@ object SegmentStore {
     */
   def specDigest(fields: Seq[FieldDef]): String = {
     val canon = fields.map { f =>
-      val (kind, an) = f.kind match {
-        case TextField(a) => ("text", analyzerName(a))
-        case StringField => ("string", "")
-      }
+      val (kind, an) = kindOf(f)
       s"${f.indexField}|${f.source}|$kind|$an|${f.boost}"
     }.mkString("\n")
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -463,65 +468,18 @@ object SegmentStore {
     * digest-named dir).
     */
   def specChanged(dir: String, fields: Seq[FieldDef]): Boolean =
-    stageDone(dir, "spec") && persistedSpecDigest(dir).exists(_ != specDigest(fields))
+    persistedSpecDigest(dir).exists(_ != specDigest(fields))
 
-  private def specDigestPath(dir: String) = Paths.get(s"$dir/checkpoints/spec.digest")
-
-  /** The committed spec's digest, from the tiny digest file [[writeSpec]]
-    * writes — cheap enough to poll every micro-batch.
-    */
+  /** The committed spec's digest; None before the dir's first commit. */
   def persistedSpecDigest(dir: String): Option[String] =
-    if (Files.exists(specDigestPath(dir))) Some(Files.readString(specDigestPath(dir)).trim)
-    else None
+    lastCommit(dir).map(c => specDigest(specOf(dir, c)))
 
-  /** A sidecar [[open]] cannot do without is missing: an error naming the
-    * file, never a default.
+  /** Replace the committed index field spec (queryable name, source
+    * column, kind, analyzer), keeping the rest of the commit — an external
+    * spec edit, as a design-doc change is in the reference.
     */
-  private def missingSidecar(path: java.nio.file.Path): Nothing =
-    throw new IllegalStateException(s"$path is missing: not a committed index dir")
-
-  private def readSpec(dir: String): Seq[FieldDef] = {
-    if (!Files.exists(specTsvPath(dir))) missingSidecar(specTsvPath(dir))
-    readTsv(specTsvPath(dir)).map { c =>
-      FieldDef(c(0), c(1), c(2) match {
-        case "text" => TextField(Analyzers.byName(c(3)))
-        case "string" => StringField
-      }, c(4).toDouble)
-    }
-  }
-
-  /** Commit the index field spec (queryable name, source column, kind,
-    * analyzer) — readable without the builder, so [[open]] reconstructs
-    * analyzers. Shared by the batch build and the incremental appender.
-    */
-  def writeSpec(spark: SparkSession, dir: String, fields: Seq[FieldDef]): Unit = {
-    require(!fields.exists(_.indexField == DocSetField),
-      "the empty index field name is reserved for doc-set rows")
-    // driver-side sidecar write (round 6): the spec is #fields rows of
-    // in-memory data — the old coalesce(1) parquet write scheduled a whole
-    // Spark job (plus a plan cycle) per build/append to persist a kilobyte
-    writeTsv(specTsvPath(dir), fields.map { f =>
-      val (kind, an) = f.kind match {
-        case TextField(a) => ("text", analyzerName(a))
-        case StringField => ("string", "")
-      }
-      s"${escTsv(f.indexField)}\t${escTsv(f.source)}\t$kind\t${escTsv(an)}\t" +
-        java.lang.Double.toString(f.boost)
-    })
-    writeAtomically(specDigestPath(dir), specDigest(fields))
-    commitStage(dir, "spec", Map("fields" -> fields.size.toLong))
-  }
-
-  /** Commit the spec and the shard spec a dir does not have yet: a
-    * committed dir keeps its own. The shard spec has its own guard, not the
-    * spec checkpoint's — a crash between the two writes must still produce
-    * it on rerun.
-    */
-  private[graft] def writeSpecOnce(spark: SparkSession, dir: String, fields: Seq[FieldDef],
-      docsPerShard: Long): Unit = {
-    if (!stageDone(dir, "spec")) writeSpec(spark, dir, fields)
-    if (!hasShardSpec(dir)) writeShardSpec(dir, docsPerShard)
-  }
+  def writeSpec(spark: SparkSession, dir: String, fields: Seq[FieldDef]): Unit =
+    writeCommit(dir, lastCommit(dir).getOrElse(Commit()).copy(fields = fields))
 
   /** The encode pipeline over a posting stream: [[combineRuns]], then
     * [[encodeRuns]] (shard shuffle, run merge, marker reconstruction, block
@@ -814,8 +772,9 @@ object SegmentStore {
   /** `_optimize` analog (reference DatabaseIndexer.java:274-279,
     * forceMerge(1)): decode every run, drop tombstoned docs, and re-encode
     * each (shard, field, term) as a single fresh run with tight blocks.
-    * Writes a full replacement index dir at `outDir` under the source's
-    * spec and shard spec — a maintenance op never re-shards the corpus.
+    * Writes a full replacement index dir at `outDir` and commits it with
+    * the source's spec, shard width and appender position — a maintenance
+    * op never re-shards the corpus, and an appender resumes after it.
     *
     * Single-pass like the build: decode → anti-join → ONE [[writeGeneration]]
     * call; the encode tasks reconstruct each (shard, field)'s marker row
@@ -825,7 +784,8 @@ object SegmentStore {
     */
   def optimize(spark: SparkSession, dir: String, outDir: String): Unit = {
     import spark.implicits._
-    val dps = docsPerShardOf(dir)
+    val source = readCommit(dir)
+    val dps = required(dir, "docsPerShard", source.docsPerShard)
     // tombstones dropped via anti-join (never a driver-side Set — at scale
     // deletes are normal state, potentially corpus-sized)
     val deleted = deletedDocsDF(spark, dir)
@@ -839,9 +799,6 @@ object SegmentStore {
     val postings = decoded.join(deleted, Seq("docId"), "left_anti")
       .select("field", "term", "docId", "tf", "positions", "dl")
       .as[Posting]
-    // the source's spec and shard spec, written over whatever `outDir` held
-    writeSpec(spark, outDir, readSpec(dir))
-    writeShardSpec(outDir, dps)
     // stored sidecar: expunge tombstoned rows too — a doc-value-only query
     // (no posting conjunction) reads stored directly, so a row surviving
     // its postings would resurrect the deleted doc
@@ -849,17 +806,16 @@ object SegmentStore {
     val g = writeGeneration(combineRuns(postings, dps), dps, outDir,
       if (!Files.exists(Paths.get(stored))) Nil
       else Seq(storedSidecar(readInferred(spark, stored).join(deleted, Seq("docId"), "left_anti"), dps)))
-    commitStage(outDir, "segments", Map.empty)
-    writeFieldStatsGens(outDir, Map("base" -> g.fieldStats)) // driver write, no job
-    commitStage(outDir, "stats", Map.empty)
+    // one generation now: its field stats replace every generation's
+    writeCommit(outDir, source.copy(fieldStats = Map("base" -> g.fieldStats)))
   }
 
   /** `_cleanup` analog (reference LuceneServlet.java:75-118 deletes index
     * directories no longer referenced): optimize into a staging dir, then
     * swap it in and expire every superseded generation file — appended
-    * `termstats`/`fieldstats`/`segments` generations and the tombstone log
-    * all collapse to one fresh generation, so an incrementally-maintained
-    * index stops growing monotonically. A stale staging dir from a crashed
+    * `termstats`/`segments` generations, their field stats and the
+    * tombstone log all collapse to one fresh generation, so an
+    * incrementally-maintained index stops growing monotonically. A stale staging dir from a crashed
     * prior attempt is discarded and rebuilt (the swap itself is the
     * non-atomic window; production maps this to an Iceberg
     * snapshot-replace commit, see the class note above).
@@ -883,15 +839,8 @@ object SegmentStore {
         if (!n.endsWith(".parquet")) Files.delete(p)
       })
     }
-    // promote the staged metadata sidecars over the live ones (the shard
-    // spec too: a dir that had none gets the value optimize used)
-    Seq(specTsvPath _, specDigestPath _, fieldStatsTsvPath _, shardSpecPath _).foreach { pathOf =>
-      if (Files.exists(pathOf(staging))) {
-        Files.createDirectories(pathOf(dir).getParent)
-        Files.move(pathOf(staging), pathOf(dir),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
-    }
+    // the staged commit replaces the live one
+    Files.move(commitPath(staging), commitPath(dir), java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     // compact the upsert key map (if any): drop rows whose docIds the
     // optimize just expunged, BEFORE clearing the tombstone log
     if (Files.exists(Paths.get(s"$dir/keys"))) {
@@ -1038,37 +987,29 @@ object SegmentStore {
   /** Open an index dir as ONE snapshot — Lucene's multi-segment reader,
     * expressed as aggregations: the spec, the segments, the stored sidecar
     * and the tombstone log ([[SegmentIndex.tombstones]]) as they are now.
-    * When the fieldstats sidecar lists more than one appended generation,
-    * term stats are folded by (field, term) and field stats by field; the
-    * generation count comes from the driver-side sidecar, so deciding runs
-    * no job, and a single-generation dir reads its stats as written.
+    * When the commit lists more than one appended generation, term stats
+    * are folded by (field, term) and field stats by field
+    * ([[foldFieldStats]]); the generation count comes from the driver-side
+    * commit, so deciding runs no job, and a single-generation dir reads its
+    * stats as written.
     * NOTE: assumes a doc appears in at most one generation (append-only
     * corpus; updates go through tombstones + optimize).
     */
   def open(spark: SparkSession, dir: String): SegmentIndex = {
     import spark.implicits._
-    val fields = readSpec(dir)
-    val gens = readFieldStatsGens(dir).getOrElse(missingSidecar(fieldStatsTsvPath(dir)))
+    val commit = readCommit(dir)
     val terms = spark.read.schema(TermStatsSchema).parquet(s"$dir/termstats").as[TermStats]
-    // exact fold: Σdl travels as a long per generation, so the merged avgdl
-    // is one division over exact integer sums — no docCount·avgdl FP
-    // round-trip that could drift after many appended generations
-    val (termStats, fieldStats) =
-      if (gens.size <= 1) (terms, gens.values.flatten.map(fs => fs.field -> fs).toMap)
-      else (
-        terms.groupBy($"field", $"term").agg(sum($"df").as("df"), sum($"cf").as("cf")).as[TermStats],
-        gens.values.flatten.groupBy(_.field).map { case (f, rows) =>
-          val dc = rows.map(_.docCount).sum
-          val sd = rows.map(_.sumDl).sum
-          f -> FieldStats(f, dc, sd.toDouble / dc.toDouble, sd)
-        })
+    val termStats =
+      if (commit.fieldStats.size <= 1) terms
+      else terms.groupBy($"field", $"term").agg(sum($"df").as("df"), sum($"cf").as("cf")).as[TermStats]
     val stored =
       if (Files.exists(Paths.get(s"$dir/stored"))) Some(readInferred(spark, s"$dir/stored"))
       else None
     val tombstones =
       if (Files.exists(Paths.get(s"$dir/tombstones"))) Some(deletedDocsDF(spark, dir)) else None
-    new SegmentIndex(readSegments(spark, s"$dir/segments").as[SegmentRow], termStats, fieldStats,
-      fields, docsPerShardOf(dir), stored = stored, tombstones = tombstones)
+    new SegmentIndex(readSegments(spark, s"$dir/segments").as[SegmentRow], termStats,
+      foldFieldStats(commit.fieldStats), specOf(dir, commit),
+      required(dir, "docsPerShard", commit.docsPerShard), stored = stored, tombstones = tombstones)
   }
 
   /** Same as [[open]], which folds generations itself; `perfbench/` calls

@@ -20,11 +20,12 @@ import graft.index.SegmentStore
   *   - `dir/digests/` — one parquet generation per committed batch of
   *     (content_md5, doc_id) for every ACCEPTED document;
   *   - `dir/clean/`   — the surviving rows, same generation names;
-  *   - `dir/checkpoints/dedup.json` — the `last_seq` analog; a replayed
-  *     batchId is a no-op, and a crash anywhere before the meta write
-  *     re-runs the whole batch onto the same generation names (staging +
-  *     idempotent promote, so the store never holds a duplicated
-  *     generation that would leak duplicates through the anti-join).
+  *   - the dir's commit ([[SegmentStore.Commit]]) holds `lastBatch`, the
+  *     `last_seq` analog; a replayed batchId is a no-op, and a crash
+  *     anywhere before the commit re-runs the whole batch onto the same
+  *     generation names (staging + idempotent promote, so the store never
+  *     holds a duplicated generation that would leak duplicates through
+  *     the anti-join).
   *
   * Scale shape: the history anti-join shuffles on the 16-byte digest —
   * batch-sized on one side, history-sized on the other, the canonical
@@ -45,22 +46,12 @@ object IncrementalDedup {
   val DigestSchema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.StructType.fromDDL("content_md5 STRING, doc_id BIGINT")
 
-  private def metaPath(dir: String) = Paths.get(s"$dir/checkpoints/dedup.json")
-
-  def readMeta(dir: String): Meta = {
-    val p = metaPath(dir)
-    if (!Files.exists(p)) Meta(-1L)
-    else {
-      val s = Files.readString(p)
-      val last = """"lastBatch":\s*(-?\d+)""".r.findFirstMatchIn(s).map(_.group(1).toLong).getOrElse(-1L)
-      Meta(last)
-    }
-  }
-
-  private def writeMeta(dir: String, m: Meta): Unit = {
-    Files.createDirectories(metaPath(dir).getParent)
-    Files.writeString(metaPath(dir), s"""{"lastBatch": ${m.lastBatch}}""")
-  }
+  /** The committed `lastBatch`; -1 before the store's first commit. A
+    * commit lacking it raises (read as -1, it would replay every batch).
+    */
+  def readMeta(dir: String): Meta =
+    SegmentStore.lastCommit(dir).fold(Meta(-1L))(c =>
+      Meta(SegmentStore.required(dir, "lastBatch", c.lastBatch)))
 
   /** Deduplicate one batch against itself and the accepted-digest history,
     * then commit the survivors and their digests as generation `batchId`.
@@ -78,7 +69,7 @@ object IncrementalDedup {
     if (batchId <= meta.lastBatch) return // replayed batch — already committed
     val spark = batch.sparkSession
 
-    // crash-window replay (promoted but meta stale): this batch's OWN
+    // crash-window replay (promoted but not committed): this batch's OWN
     // generation may already sit in the live dirs — drop it BEFORE reading
     // the history, or the anti-join would see the batch's own digests and
     // commit an empty generation in its place (caught by
@@ -124,7 +115,7 @@ object IncrementalDedup {
       IncrementalIndexer.promoteGeneration(s"$staging/$sub", s"$dir/$sub", s"gen$batchId")
     }
     SegmentStore.deleteRecursively(staging)
-    writeMeta(dir, Meta(batchId))
+    SegmentStore.writeCommit(dir, SegmentStore.Commit(lastBatch = Some(batchId)))
   }
 
   /** Delete a (possibly partially) promoted generation's files. */
@@ -169,7 +160,7 @@ object IncrementalDedup {
       .parquet(sourceDir)
       .writeStream
       .trigger(trigger)
-      .option("checkpointLocation", s"$dir/checkpoints/stream")
+      .option("checkpointLocation", SegmentStore.streamCheckpoint(dir))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         dedupBatch(batch, batchId, dir, idCol, textCol)
       }

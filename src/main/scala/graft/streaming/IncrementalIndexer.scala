@@ -15,7 +15,10 @@ import graft.index._
   * maximum, encoded, and appended as a new posting-segment generation; the
   * batch id is the `last_seq` analog persisted with the commit, so a
   * replayed batch is skipped (exactly-once append, mirroring the
-  * `seq.isLaterThan(pending_seq)` guard at DatabaseIndexer.java:361).
+  * `seq.isLaterThan(pending_seq)` guard at DatabaseIndexer.java:361). The
+  * batch id, the next free docId and the generation's field stats land in
+  * ONE commit of the dir ([[SegmentStore.Commit]]), as the reference
+  * commits its index and `last_seq` together (DatabaseIndexer.java:715-729).
   *
   * Layout matches [[SegmentStore]] with `segments/` and `termstats/` written
   * in append mode; [[SegmentStore.open]] folds the generations
@@ -34,28 +37,26 @@ object IncrementalIndexer {
 
   final case class Meta(nextDocId: Long, lastBatch: Long)
 
-  private def metaPath(dir: String) = Paths.get(s"$dir/checkpoints/incremental.json")
+  /** The committed appender position; `Meta(0, -1)` before the dir's
+    * first commit. A commit lacking a value raises (read as 0, it would
+    * skip batch 0 or hand out docIds again from 0).
+    */
+  def readMeta(dir: String): Meta = metaOf(dir, SegmentStore.lastCommit(dir))
 
-  /** The committed meta; a file lacking a value raises (read as 0, it
-    * would skip batch 0 or hand out docIds again from 0). */
-  def readMeta(dir: String): Meta = {
-    val p = metaPath(dir)
-    if (!Files.exists(p)) Meta(0L, -1L)
-    else Meta(SegmentStore.jsonLong(p, "nextDocId"), SegmentStore.jsonLong(p, "lastBatch"))
-  }
-
-  private def writeMeta(dir: String, m: Meta): Unit =
-    SegmentStore.writeAtomically(metaPath(dir),
-      s"""{"nextDocId": ${m.nextDocId}, "lastBatch": ${m.lastBatch}}""")
+  private def metaOf(dir: String, commit: Option[SegmentStore.Commit]): Meta =
+    commit.fold(Meta(0L, -1L))(c => Meta(SegmentStore.required(dir, "nextDocId", c.nextDocId),
+      SegmentStore.required(dir, "lastBatch", c.lastBatch)))
 
   /** Append one batch of new documents to the index. Idempotent per
     * batchId: a replay of an already-committed batch is a no-op.
     *
-    * Commit protocol (exactly-once under crash/replay): the batch's three
+    * Commit protocol (exactly-once under crash/replay): the batch's
     * outputs are written to a STAGING generation dir, then promoted into
     * the live dirs under deterministic per-generation file names, and only
-    * then is meta (the `last_seq` analog) advanced. A crash anywhere before
-    * writeMeta leaves lastBatch stale, so the replay re-runs the whole
+    * then does ONE commit record the generation's field stats and advance
+    * the position (the `last_seq` analog); the first batch's commit also
+    * fixes the dir's spec and shard width. A crash anywhere before the
+    * commit leaves the old one in place, so the replay re-runs the whole
     * batch: staging is overwritten, any partially-promoted `genN-*` files
     * are deleted first, and promotion repeats — the live dirs end up with
     * exactly one copy of the generation, never a duplicate (a duplicated
@@ -70,15 +71,15 @@ object IncrementalIndexer {
       fields: Seq[FieldDef],
       docsPerShard: Long = 1L << 14,
       storedColumns: Seq[String] = Nil): Unit = {
-    val meta = readMeta(dir)
+    val prior = SegmentStore.lastCommit(dir)
+    val meta = metaOf(dir, prior)
     if (batchId <= meta.lastBatch) return // replayed batch — already committed
-    val spark = batch.sparkSession
-    SegmentStore.writeSpecOnce(spark, dir, fields, docsPerShard)
-    // the shard spec is an INDEX property, not a batch property: readers
-    // route docIds (and tombstones) by the persisted value, so a later call
-    // passing a different docsPerShard must not silently re-shard its
-    // generation — the committed spec wins for every batch after the first
-    val dps = SegmentStore.docsPerShardOf(dir)
+    // the spec and shard width are INDEX properties, not batch properties:
+    // readers route docIds (and tombstones) by the committed width, so a
+    // later call passing a different docsPerShard must not silently
+    // re-shard its generation — the first commit wins for every later batch
+    val base = prior.getOrElse(SegmentStore.Commit(Some(docsPerShard), fields))
+    val dps = SegmentStore.required(dir, "docsPerShard", base.docsPerShard)
 
     // persist the assigned batch for the micro-batch's lifetime: the
     // tokenize and key-map jobs both consume it, and round 2 re-ran the
@@ -93,7 +94,7 @@ object IncrementalIndexer {
     val withIds = assigned
       .withColumn("docId", col("docId") + lit(meta.nextDocId))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try if (n > 0) {
+    val batchStats = try if (n == 0) Map.empty[String, Seq[FieldStats]] else {
       val staging = s"$dir/staging/gen-$batchId"
       // ONE batch-scale generation write, the same as SegmentStore.build's:
       // the fused tokenize pass feeds the encode, so each micro-batch
@@ -118,15 +119,11 @@ object IncrementalIndexer {
       subs.foreach { sub =>
         promoteGeneration(s"$staging/$sub", s"$dir/$sub", s"gen$batchId")
       }
-      // this generation's field stats land in the driver-side sidecar
-      // (round 6 — the old per-batch coalesce(1) parquet write + promote was
-      // a whole Spark job per micro-batch for #fields rows). Idempotent per
-      // gen key, and still BEFORE writeMeta: a crash window replays the
-      // batch, which overwrites the same key with identical rows.
-      SegmentStore.updateFieldStatsGen(dir, s"gen$batchId", generation.fieldStats)
       SegmentStore.deleteRecursively(staging)
+      Map(s"gen$batchId" -> generation.fieldStats)
     } finally withIds.unpersist(blocking = false)
-    writeMeta(dir, Meta(meta.nextDocId + n, batchId))
+    SegmentStore.writeCommit(dir, base.copy(fieldStats = base.fieldStats ++ batchStats,
+      nextDocId = Some(meta.nextDocId + n), lastBatch = Some(batchId)))
   }
 
   /** Staleness gate — the reference's default search path blocks until the
@@ -231,8 +228,7 @@ object IncrementalIndexer {
     *
     * MID-stream spec edits are detected too (round 4; reference detects a
     * design-doc change DURING the changes loop, DatabaseIndexer.java:343-348):
-    * every micro-batch compares the persisted spec digest (a tiny text
-    * file) against the spec this stream was started with, and a mismatch
+    * every micro-batch compares the committed spec's digest against the spec this stream was started with, and a mismatch
     * fails the query with [[SpecChangedException]] BEFORE indexing the
     * batch under the stale spec — the caller restarts, and the restart's
     * reindexOnSpecChange rebuilds from scratch.
@@ -253,7 +249,7 @@ object IncrementalIndexer {
       .parquet(sparkStreamSourceDir)
       .writeStream
       .trigger(trigger)
-      .option("checkpointLocation", s"$dir/checkpoints/stream")
+      .option("checkpointLocation", SegmentStore.streamCheckpoint(dir))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (SegmentStore.persistedSpecDigest(dir).exists(_ != startedDigest))
           throw new SpecChangedException(dir)

@@ -57,12 +57,24 @@ class IncrementalDedupSpec extends SparkSpec {
   test("crash before the meta write: replay overwrites the same generation, never duplicates") {
     val dir = Files.createTempDirectory("graft-incdedup-crash").toString
     IncrementalDedup.dedupBatch(docsFixture((1L, "a"), (2L, "b")), 0L, dir, "doc_id", "text")
-    // simulate the crash window: generation promoted but meta stale
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$dir/checkpoints/dedup.json"), """{"lastBatch": -1}""")
+    // simulate the crash window: generation promoted but its commit lost —
+    // roll the store back to before its first commit
+    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$dir/checkpoints/commit.tsv"))
     IncrementalDedup.dedupBatch(docsFixture((1L, "a"), (2L, "b")), 0L, dir, "doc_id", "text")
     assert(IncrementalDedup.readClean(spark, dir).count() == 2L)
     assert(IncrementalDedup.readMeta(dir).lastBatch == 0L)
+  }
+
+  test("a dedup commit without lastBatch fails dedupBatch, naming the file") {
+    val dir = Files.createTempDirectory("graft-incdedup-torn").toString
+    IncrementalDedup.dedupBatch(docsFixture((1L, "a"), (2L, "b")), 0L, dir, "doc_id", "text")
+    // a commit that lost its lastBatch: read as -1 it would replay every batch
+    val commit = java.nio.file.Paths.get(s"$dir/checkpoints/commit.tsv")
+    java.nio.file.Files.writeString(commit, "")
+    val e = intercept[IllegalStateException](
+      IncrementalDedup.dedupBatch(docsFixture((3L, "c")), 1L, dir, "doc_id", "text"))
+    assert(e.getMessage.contains("checkpoints/commit.tsv"), e.getMessage)
+    assert(IncrementalDedup.readClean(spark, dir).count() == 2L)
   }
 
   test("Structured Streaming foreachBatch maintains the clean corpus over arriving files") {

@@ -53,12 +53,12 @@ class SegmentSpec extends SparkSpec {
     }
   }
 
-  test("opening a dir without checkpoints/spec.tsv is an error naming the file") {
+  test("opening a dir without its commit is an error naming the file") {
     val dir = Files.createTempDirectory("graft-seg-nospec").toString
     SegmentStore.build(docs.filter(col("docId") < 50), "docId", fields, dir, docsPerShard = 257)
-    Files.delete(java.nio.file.Paths.get(s"$dir/checkpoints/spec.tsv"))
+    Files.delete(java.nio.file.Paths.get(s"$dir/checkpoints/commit.tsv"))
     val e = intercept[IllegalStateException](SegmentStore.open(spark, dir))
-    assert(e.getMessage.contains("checkpoints/spec.tsv"), e.getMessage)
+    assert(e.getMessage.contains("checkpoints/commit.tsv"), e.getMessage)
   }
 
   test("hot terms split across multiple runs and reassemble") {
@@ -78,24 +78,22 @@ class SegmentSpec extends SparkSpec {
     assert(rows.map(_.df).sum === statDf)
   }
 
-  test("staged build is resumable: failpoint between stages, rerun completes identically") {
+  /** Each file under `dir/sub` with its modification time. */
+  private def mtimes(dir: String, sub: String): Map[String, java.nio.file.attribute.FileTime] =
+    scala.util.Using.resource(Files.list(java.nio.file.Paths.get(s"$dir/$sub")))(
+      _.toArray.map(_.asInstanceOf[Path])).map(p => p.getFileName.toString -> Files.getLastModifiedTime(p)).toMap
+
+  test("a rerun of a committed build rewrites no segment file and answers identically") {
     val dir = Files.createTempDirectory("graft-resume").toString
-    // segments commit first (round 5: encode is the single corpus pass;
-    // stats derive from its output) — fail between them, leaving stats
-    // outstanding
-    intercept[RuntimeException] {
-      SegmentStore.build(docs, "docId", fields, dir, docsPerShard = 257, failAfterStage = Some("segments"))
-    }
-    assert(SegmentStore.stageDone(dir, "spec"))
-    assert(SegmentStore.stageDone(dir, "segments"))
-    assert(!SegmentStore.stageDone(dir, "stats"))
-    val segMtime = Files.getLastModifiedTime(java.nio.file.Paths.get(s"$dir/checkpoints/segments.json"))
-    // resume
-    SegmentStore.build(docs, "docId", fields, dir, docsPerShard = 257)
-    assert(SegmentStore.stageDone(dir, "stats"))
-    // completed stages were NOT recomputed
-    assert(Files.getLastModifiedTime(java.nio.file.Paths.get(s"$dir/checkpoints/segments.json")) === segMtime)
-    // the resumed index answers identically to the uninterrupted one
+    val n = SegmentStore.build(docs, "docId", fields, dir, docsPerShard = 257)
+    assert(SegmentStore.committed(dir))
+    val segMtimes = mtimes(dir, "segments")
+    assert(segMtimes.keys.exists(_.endsWith(".parquet")))
+    // rerun: the committed build is a no-op that returns the committed count
+    assert(SegmentStore.build(docs, "docId", fields, dir, docsPerShard = 257) === n)
+    // no segment part file was rewritten
+    assert(mtimes(dir, "segments") === segMtimes)
+    // the rerun index answers identically to the uninterrupted one
     val resumed = SegmentStore.open(spark, dir)
     queries.take(5).foreach { q =>
       val a = new SegmentSearcher(resumed, SearchOptions(limit = 10)).topK(q)
@@ -250,9 +248,6 @@ class SegmentSpec extends SparkSpec {
     // total postings in == total postings tokenized
     val totalPostings = IndexBuilder.tokenizePostings(docs, "docId", fields).count()
     assert(lineage.map(_.rowsIn).sum === totalPostings)
-    // checkpoints carry metrics
-    val ckpt = Files.readString(java.nio.file.Paths.get(s"$tmp/checkpoints/segments.json"))
-    assert(ckpt.contains("segmentRows") && ckpt.contains("postingBytes"))
   }
 
   test("fused tokenize→mini-run path ≡ posting-stream combine, row for row (round 6)") {
@@ -292,7 +287,7 @@ class SegmentSpec extends SparkSpec {
     def causes(t: Throwable): Seq[Throwable] = if (t == null) Nil else t +: causes(t.getCause)
     val iae = causes(e).collectFirst { case x: IllegalArgumentException => x }
     assert(iae.exists(_.getMessage.contains(s"<= Int.MaxValue (${Int.MaxValue})")), e.toString)
-    assert(!SegmentStore.stageDone(dir, "segments"))
+    assert(!SegmentStore.committed(dir))
   }
 
   /** What the jobs `f` starts ran (listener bus drained both sides). */
@@ -459,12 +454,36 @@ class SegmentSpec extends SparkSpec {
     } finally idx.unpersist(blocking = true)
   }
 
-  test("a shardspec.json without docsPerShard is an error naming the file") {
+  test("a commit without docsPerShard is an error naming the file") {
     val dir = Files.createTempDirectory("graft-seg-badspec").toString
     SegmentStore.build(docs.filter(col("docId") < 50), "docId", fields, dir, docsPerShard = 257)
-    Files.writeString(java.nio.file.Paths.get(s"$dir/checkpoints/shardspec.json"), "{}")
+    val commit = java.nio.file.Paths.get(s"$dir/checkpoints/commit.tsv")
+    Files.writeString(commit, Files.readString(commit).linesIterator
+      .filterNot(_.startsWith("docsPerShard\t")).mkString("", "\n", "\n"))
     val e = intercept[IllegalStateException](SegmentStore.open(spark, dir))
-    assert(e.getMessage.contains("checkpoints/shardspec.json"), e.getMessage)
+    assert(e.getMessage.contains("checkpoints/commit.tsv"), e.getMessage)
+    assert(e.getMessage.contains("docsPerShard"), e.getMessage)
+  }
+
+  test("build over an appended dir writes nothing: open answers exactly as before") {
+    val dir = Files.createTempDirectory("graft-seg-appended").toString
+    val order = Seq("conv_id", "turn_idx")
+    Seq(col("docId") < 300, col("docId") >= 300).zipWithIndex.foreach { case (part, b) =>
+      graft.streaming.IncrementalIndexer.appendBatch(docs.filter(part).drop("docId"), b.toLong,
+        dir, order, fields, 257)
+    }
+    val opts = SearchOptions(limit = 10)
+    def answers(): (Map[String, FieldStats], Seq[Seq[(Long, Double)]]) = {
+      val idx = SegmentStore.open(spark, dir)
+      (idx.fieldStats, queries.map(new SegmentSearcher(idx, opts).topK(_)))
+    }
+    val before = answers()
+    val committed = before._1.values.map(_.docCount).max
+    // other docs, another shard width: the appender's commit stands
+    assert(SegmentStore.build(docs.filter(col("docId") < 50), "docId", fields, dir, docsPerShard = 64) ===
+      committed)
+    assert(answers() === before)
+    assert(SegmentStore.docsPerShardOf(dir) === 257L)
   }
 
   /** Stored columns of the writer fixtures below. */
@@ -548,13 +567,13 @@ class SegmentSpec extends SparkSpec {
     }
   }
 
-  test("a build with stored columns resumes after the segments failpoint with the same doc-value answers") {
+  test("a build whose stored write fails leaves no commit; its rerun answers identically") {
     val dir = Files.createTempDirectory("graft-resume-stored").toString
-    intercept[RuntimeException] {
+    intercept[org.apache.spark.sql.AnalysisException] {
       SegmentStore.build(docs, "docId", fields, dir, docsPerShard = 257,
-        failAfterStage = Some("segments"), storedColumns = storedCols)
+        storedColumns = Seq("no_such_column"))
     }
-    assert(SegmentStore.stageDone(dir, "segments") && !SegmentStore.stageDone(dir, "stats"))
+    assert(!SegmentStore.committed(dir))
     SegmentStore.build(docs, "docId", fields, dir, docsPerShard = 257, storedColumns = storedCols)
     val resumed = SegmentStore.open(spark, dir)
     val whole = SegmentStore.open(spark, writerDirs("build"))

@@ -263,24 +263,77 @@ class StreamingSpec extends SparkSpec {
       "post-cleanup ranking differs from pre-cleanup tombstone-filtered ranking")
   }
 
-  test("an incremental.json missing lastBatch fails appendBatch, naming the file") {
+  test("a commit missing lastBatch fails appendBatch, naming the file") {
     val dir = Files.createTempDirectory("graft-inc-torn").toString
     Files.createDirectories(java.nio.file.Paths.get(s"$dir/checkpoints"))
-    Files.writeString(java.nio.file.Paths.get(s"$dir/checkpoints/incremental.json"), """{"nextDocId": 5}""")
+    Files.writeString(java.nio.file.Paths.get(s"$dir/checkpoints/commit.tsv"), "nextDocId\t5\n")
     val e = intercept[IllegalStateException](
       IncrementalIndexer.appendBatch(turnsDF(0, 10), 0L, dir, Seq("conv_id", "turn_idx"), fields, 257))
-    assert(e.getMessage.contains("checkpoints/incremental.json"), e.getMessage)
+    assert(e.getMessage.contains("checkpoints/commit.tsv"), e.getMessage)
+  }
+
+  test("every index dir's checkpoints/ holds only its commit file") {
+    val built = Files.createTempDirectory("graft-one-commit-build").toString
+    val appended = Files.createTempDirectory("graft-one-commit-append").toString
+    val optimized = Files.createTempDirectory("graft-one-commit-opt").toString
+    SegmentStore.build(DocIds.assign(turnsDF(0, 40), Seq("conv_id", "turn_idx"), "docId", 8),
+      "docId", fields, built, docsPerShard = 257)
+    IncrementalIndexer.appendBatch(turnsDF(0, 30), 0L, appended, Seq("conv_id", "turn_idx"), fields, 257)
+    IncrementalIndexer.appendBatch(turnsDF(30, 40), 1L, appended, Seq("conv_id", "turn_idx"), fields, 257)
+    def checkpoints(dir: String): Set[String] =
+      scala.util.Using.resource(Files.list(java.nio.file.Paths.get(s"$dir/checkpoints")))(
+        _.toArray.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)).toSet
+    assert(checkpoints(built) === Set("commit.tsv"))
+    assert(checkpoints(appended) === Set("commit.tsv"))
+    SegmentStore.deleteDocs(spark, appended, Seq(3L))
+    SegmentStore.optimizeInPlace(spark, appended)
+    SegmentStore.optimize(spark, appended, optimized)
+    Seq(built, appended, optimized).foreach(d => assert(checkpoints(d) === Set("commit.tsv"), d))
+  }
+
+  test("optimizeInPlace keeps the appender position: replay is a no-op, the next batch follows") {
+    val dir = Files.createTempDirectory("graft-opt-position").toString
+    val order = Seq("conv_id", "turn_idx")
+    IncrementalIndexer.appendBatch(turnsDF(0, 60), 0L, dir, order, fields, 257)
+    IncrementalIndexer.appendBatch(turnsDF(60, 80), 1L, dir, order, fields, 257)
+    val before = IncrementalIndexer.readMeta(dir)
+    SegmentStore.optimizeInPlace(spark, dir)
+    assert(IncrementalIndexer.readMeta(dir) === before)
+    // a replay of batch 1 after the optimize is still a no-op
+    IncrementalIndexer.appendBatch(turnsDF(60, 80), 1L, dir, order, fields, 257)
+    assert(IncrementalIndexer.readMeta(dir) === before)
+    queries.foreach { q =>
+      val a = topK(SegmentStore.open(spark, dir), q)
+      val b = topK(batchIndex, q)
+      assert(a.map(_._1) === b.map(_._1), s"docIds differ after optimize for q=$q")
+      a.zip(b).foreach { case ((_, x), (_, y)) => assert(math.abs(x - y) <= 1e-9, s"q=$q") }
+    }
+    // batch 2's docIds start where the pre-optimize position left off
+    IncrementalIndexer.appendBatch(turnsDF(80, 100), 2L, dir, order, fields, 257)
+    val gen2 = spark.read.parquet(s"$dir/keys/gen2-*").select("docId")
+    assert(gen2.agg(min("docId")).head().getLong(0) === before.nextDocId)
+    val refDir = Files.createTempDirectory("graft-opt-position-ref").toString
+    SegmentStore.build(DocIds.assign(turnsDF(0, 100), order, "docId", 8), "docId", fields, refDir,
+      docsPerShard = 257)
+    val ref = SegmentStore.open(spark, refDir)
+    val live = SegmentStore.open(spark, dir)
+    queries.foreach { q =>
+      val a = topK(live, q)
+      val b = topK(ref, q)
+      assert(a.map(_._1) === b.map(_._1), s"docIds differ after batch 2 for q=$q")
+      a.zip(b).foreach { case ((_, x), (_, y)) => assert(math.abs(x - y) <= 1e-9, s"q=$q") }
+    }
   }
 
   test("crash between promotion and meta write: replay does not duplicate the generation") {
     val dir = Files.createTempDirectory("graft-inc-crash").toString
     IncrementalIndexer.appendBatch(turnsDF(0, 60), 0L, dir, Seq("conv_id", "turn_idx"), fields, 257)
-    val metaPath = java.nio.file.Paths.get(s"$dir/checkpoints/incremental.json")
+    val metaPath = java.nio.file.Paths.get(s"$dir/checkpoints/commit.tsv")
     val metaAfter0 = Files.readString(metaPath)
     IncrementalIndexer.appendBatch(turnsDF(60, 80), 1L, dir, Seq("conv_id", "turn_idx"), fields, 257)
     val metaAfter1 = Files.readString(metaPath)
     // simulate the crash window: generation 1 fully (or partially) promoted
-    // but the meta write lost — roll meta back and delete one promoted file
+    // but its commit lost — roll the commit back and delete one promoted file
     Files.writeString(metaPath, metaAfter0)
     val segDir = java.nio.file.Paths.get(s"$dir/segments")
     val gen1 = Files.list(segDir).toArray.map(_.asInstanceOf[java.nio.file.Path])
