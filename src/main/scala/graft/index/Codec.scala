@@ -105,13 +105,137 @@ object Codec {
     (r.next(), r.position)
   }
 
+  // ---- posting runs ---------------------------------------------------
+
+  /** One docId-ascending posting run as ONE VByte stream — a build
+    * mini-run's payload from the tokenizer to the encoder
+    * ([[SegmentStore.MiniRun]]), as Lucene's in-RAM postings are VInt byte
+    * slices, not an object per posting. Per posting: the docId's delta from
+    * the previous posting's (none for the first, whose docId travels beside
+    * the stream), tf, dl, then its tf positions delta-coded from 0 — the
+    * VByte values the blocks store. Read back by [[RunBuffers.appendStream]].
+    */
+  final class RunStreamWriter {
+    private val out = new ByteWriter(16)
+    private var n = 0
+    private var first = 0L
+    private var last = 0L
+    def count: Int = n
+    def firstDoc: Long = first
+    def lastDoc: Long = last
+
+    /** Append a posting whose positions are `positions(from until from + tf)`,
+      * ascending; `docId` must not precede [[lastDoc]].
+      */
+    def add(docId: Long, tf: Int, dl: Int, positions: Array[Int], from: Int): Unit = {
+      if (n == 0) first = docId else writeVLong(out, docId - last)
+      last = docId
+      writeVLong(out, tf.toLong)
+      writeVLong(out, dl.toLong)
+      var prev = 0
+      var j = from
+      while (j < from + tf) {
+        val p = positions(j)
+        writeVLong(out, (p - prev).toLong)
+        prev = p
+        j += 1
+      }
+      n += 1
+    }
+
+    def result(): Array[Byte] = out.toArray
+    def reset(): Unit = { out.reset(); n = 0 }
+  }
+
+  /** Reusable primitive buffers of one posting run: parallel docId, tf and
+    * dl arrays, and every posting's positions in ONE flat array — posting
+    * `i`'s tf positions start at `posStart(i)`. The build's encode tasks
+    * decode a key's mini-run streams in here and [[RunEncoder]] reads the
+    * run from it; the arrays keep their grown capacity across runs.
+    */
+  final class RunBuffers(initial: Int = 1024) {
+    private[index] var n = 0
+    private[index] var docIds = new Array[Long](initial)
+    private[index] var tfs = new Array[Int](initial)
+    private[index] var dls = new Array[Int](initial)
+    private[index] var posStart = new Array[Int](initial)
+    private[index] var positions = new Array[Int](4 * initial)
+    private var nPos = 0
+
+    def size: Int = n
+    def clear(): Unit = { n = 0; nPos = 0 }
+
+    /** Room for one more posting with `tf` positions. */
+    private def reserve(tf: Int): Unit = {
+      if (n == docIds.length) {
+        val c = n * 2
+        docIds = java.util.Arrays.copyOf(docIds, c)
+        tfs = java.util.Arrays.copyOf(tfs, c)
+        dls = java.util.Arrays.copyOf(dls, c)
+        posStart = java.util.Arrays.copyOf(posStart, c)
+      }
+      if (nPos + tf > positions.length)
+        positions = java.util.Arrays.copyOf(positions, math.max(positions.length * 2, nPos + tf))
+    }
+
+    def add(docId: Long, tf: Int, dl: Int, pos: Array[Int], from: Int): Unit = {
+      reserve(tf)
+      docIds(n) = docId; tfs(n) = tf; dls(n) = dl; posStart(n) = nPos
+      System.arraycopy(pos, from, positions, nPos, tf)
+      nPos += tf
+      n += 1
+    }
+
+    /** Append the `count` postings of a [[RunStreamWriter]] stream whose
+      * first docId is `firstDoc`.
+      */
+    def appendStream(bytes: Array[Byte], firstDoc: Long, count: Int): Unit = {
+      val r = new VByteReader(bytes)
+      var doc = firstDoc
+      var i = 0
+      while (i < count) {
+        if (i > 0) doc += r.next()
+        val tf = r.next().toInt
+        reserve(tf)
+        docIds(n) = doc; tfs(n) = tf; dls(n) = r.next().toInt; posStart(n) = nPos
+        var p = 0
+        var j = 0
+        while (j < tf) {
+          p += r.next().toInt
+          positions(nPos + j) = p
+          j += 1
+        }
+        nPos += tf
+        n += 1
+        i += 1
+      }
+    }
+
+    /** Stable sort of the run by docId — the rare case of overlapping
+      * mini-runs. Each posting's positions stay in place; its offset moves.
+      */
+    def sortByDoc(): Unit = {
+      val idx = Array.range(0, n).sortBy(docIds(_))
+      val d = idx.map(docIds(_)); val t = idx.map(tfs(_))
+      val l = idx.map(dls(_)); val s = idx.map(posStart(_))
+      System.arraycopy(d, 0, docIds, 0, n)
+      System.arraycopy(t, 0, tfs, 0, n)
+      System.arraycopy(l, 0, dls, 0, n)
+      System.arraycopy(s, 0, posStart, 0, n)
+    }
+
+    /** Posting `i` as a [[Decoded]] (allocates: for checks, not the build). */
+    def posting(i: Int): Decoded = Decoded(docIds(i), tfs(i), dls(i),
+      java.util.Arrays.copyOfRange(positions, posStart(i), posStart(i) + tfs(i)))
+  }
+
   // ---- encode ----------------------------------------------------------
 
   /** Reusable run encoder — the build's hottest allocator after the
     * tokenizer diet (VERDICT r3 #1b): one instance per encode task, fed
-    * docId-sorted runs as primitive parallel arrays. The only allocations
-    * per block are the four output byte arrays the Block must own; the
-    * writers keep their grown capacity across blocks and runs.
+    * docId-sorted runs in [[RunBuffers]]. The only allocations per block
+    * are the four output byte arrays the Block must own; the writers keep
+    * their grown capacity across blocks and runs.
     */
   final class RunEncoder {
     private val docB = new ByteWriter(512)
@@ -119,16 +243,10 @@ object Codec {
     private val dlB = new ByteWriter(256)
     private val posB = new ByteWriter(1024)
 
-    /** Encode `len` postings from the parallel arrays into blocks, bounding
-      * each block's tf-norm against the fixed reference `avgdl`.
+    /** Encode the run into blocks, bounding each block's tf-norm against
+      * the fixed reference `avgdl`.
       */
-    def encode(
-        docIds: Array[Long],
-        tfs: Array[Int],
-        dls: Array[Int],
-        poss: Array[Array[Int]],
-        len: Int,
-        avgdl: Double): Vector[Block] = encodeImpl(docIds, tfs, dls, poss, len, avgdl)
+    def encode(run: RunBuffers, avgdl: Double): Vector[Block] = encodeImpl(run, avgdl)
 
     /** Encode with a BLOCK-LOCAL reference avgdl (the block's own mean dl).
       * Scorers already inflate each block's bound by `max(1, q/encAvgdl)`
@@ -139,20 +257,15 @@ object Codec {
       * FIRST corpus pass and derive df/cf/avgdl from segment metadata
       * afterwards, instead of paying a whole stats pass up front.
       */
-    def encodeLocal(
-        docIds: Array[Long],
-        tfs: Array[Int],
-        dls: Array[Int],
-        poss: Array[Array[Int]],
-        len: Int): Vector[Block] = encodeImpl(docIds, tfs, dls, poss, len, Double.NaN)
+    def encodeLocal(run: RunBuffers): Vector[Block] = encodeImpl(run, Double.NaN)
 
-    private def encodeImpl(
-        docIds: Array[Long],
-        tfs: Array[Int],
-        dls: Array[Int],
-        poss: Array[Array[Int]],
-        len: Int,
-        fixedAvgdl: Double): Vector[Block] = {
+    private def encodeImpl(run: RunBuffers, fixedAvgdl: Double): Vector[Block] = {
+      val docIds = run.docIds
+      val tfs = run.tfs
+      val dls = run.dls
+      val posStart = run.posStart
+      val positions = run.positions
+      val len = run.n
       val blocks = Vector.newBuilder[Block]
       var s = 0
       while (s < len) {
@@ -184,18 +297,18 @@ object Codec {
           val tf = tfs(i)
           writeVLong(tfB, tf.toLong)
           writeVLong(dlB, dls(i).toLong)
-          val positions = poss(i)
+          val ps = posStart(i)
           var pPrev = 0
-          var j = 0
-          while (j < positions.length) {
+          var j = ps
+          while (j < ps + tf) {
             val p = positions(j)
             writeVLong(posB, (p - pPrev).toLong)
             pPrev = p
             j += 1
           }
-          if (positions.length > 0) {
-            if (positions(0) < minPos) minPos = positions(0)
-            if (positions(positions.length - 1) > maxPos) maxPos = positions(positions.length - 1)
+          if (tf > 0) {
+            if (positions(ps) < minPos) minPos = positions(ps)
+            if (positions(ps + tf - 1) > maxPos) maxPos = positions(ps + tf - 1)
           }
           if (tf > maxTf) maxTf = tf
           val norm = tf * (IndexBuilder.K1 + 1.0) /
@@ -213,25 +326,30 @@ object Codec {
     }
   }
 
-  /** Encode one docId-sorted posting run into blocks. `avgdl` fixes the
-    * block-max tf-norm bound. Convenience wrapper over [[RunEncoder]] for
-    * the non-hot paths (optimize, tests); the build feeds RunEncoder
-    * directly from its reusable buffers.
+  /** A docId-sorted posting iterator in [[RunBuffers]]; each posting must
+    * carry `tf` positions, as [[decode]] reads back `tf` of them.
     */
-  def encode(run: Iterator[Decoded], avgdl: Double): Vector[Block] = {
-    val buf = run.toArray
-    val enc = new RunEncoder
-    enc.encode(buf.map(_.docId), buf.map(_.tf), buf.map(_.dl), buf.map(_.positions),
-      buf.length, avgdl)
+  private def buffered(run: Iterator[Decoded]): RunBuffers = {
+    val buf = new RunBuffers(16)
+    run.foreach { d =>
+      require(d.positions.length == d.tf,
+        s"docId ${d.docId}: ${d.positions.length} positions for tf ${d.tf}")
+      buf.add(d.docId, d.tf, d.dl, d.positions, 0)
+    }
+    buf
   }
 
+  /** Encode one docId-sorted posting run into blocks. `avgdl` fixes the
+    * block-max tf-norm bound. Convenience wrapper over [[RunEncoder]] for
+    * the non-hot paths (tests, kernels); the build feeds RunEncoder
+    * directly from its reusable buffers.
+    */
+  def encode(run: Iterator[Decoded], avgdl: Double): Vector[Block] =
+    new RunEncoder().encode(buffered(run), avgdl)
+
   /** Block-local-avgdl variant of [[encode]] (see [[RunEncoder.encodeLocal]]). */
-  def encodeLocal(run: Iterator[Decoded]): Vector[Block] = {
-    val buf = run.toArray
-    val enc = new RunEncoder
-    enc.encodeLocal(buf.map(_.docId), buf.map(_.tf), buf.map(_.dl), buf.map(_.positions),
-      buf.length)
-  }
+  def encodeLocal(run: Iterator[Decoded]): Vector[Block] =
+    new RunEncoder().encodeLocal(buffered(run))
 
   // ---- decode ----------------------------------------------------------
 

@@ -143,9 +143,12 @@ object IndexBuilder {
     (docs.select(cols: _*), arrayString)
   }
 
-  /** Receives one document's term runs from [[DocTokenizer.addDoc]]. */
+  /** Receives one document's term runs from [[DocTokenizer.addDoc]]. A
+    * run's positions are the slice `positions(from until from + tf)` of an
+    * array the tokenizer reuses: a sink copies what it keeps.
+    */
   private[index] trait RunSink {
-    def run(field: Int, term: String, docId: Long, tf: Int, dl: Int, positions: Array[Int]): Unit
+    def run(field: Int, term: String, docId: Long, tf: Int, dl: Int, positions: Array[Int], from: Int): Unit
 
     /** Called once per (doc, field) that emitted ≥ 1 run; `dl` is the field length. */
     def fieldEnd(field: Int, docId: Long, dl: Int): Unit = ()
@@ -166,6 +169,8 @@ object IndexBuilder {
       case _ => null
     }.toArray
     private val buf = new graft.analysis.TokenBuffer(256)
+    /** The one position of a scalar STRING field's term. */
+    private val ZeroPosition = Array(0)
 
     def addDoc(row: org.apache.spark.sql.Row, sink: RunSink): Unit = {
       val docId = row.getLong(0)
@@ -177,7 +182,7 @@ object IndexBuilder {
             val m = elems.length
             if (m > 0) {
               elems.zipWithIndex.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (term, occ) =>
-                sink.run(i, term, docId, occ.length, m, occ.map(_._2).toArray)
+                sink.run(i, term, docId, occ.length, m, occ.map(_._2).toArray, 0)
               }
               sink.fieldEnd(i, docId, m)
             }
@@ -186,7 +191,7 @@ object IndexBuilder {
             // sentinel — see the array note in tokenizeInput)
             val v = row.getString(i + 1)
             if (!v.isEmpty) {
-              sink.run(i, v, docId, 1, 1, Array(0))
+              sink.run(i, v, docId, 1, 1, ZeroPosition, 0)
               sink.fieldEnd(i, docId, 1)
             }
           } else {
@@ -202,7 +207,7 @@ object IndexBuilder {
               while (s < dl) {
                 var e = s + 1
                 while (e < dl && terms(e) == terms(s)) e += 1
-                sink.run(i, terms(s), docId, e - s, dl, java.util.Arrays.copyOfRange(poss, s, e))
+                sink.run(i, terms(s), docId, e - s, dl, poss, s)
                 s = e
               }
               sink.fieldEnd(i, docId, dl)
@@ -227,8 +232,8 @@ object IndexBuilder {
       val tok = new DocTokenizer(fields, arrayString)
       var out: ArrayBuffer[Posting] = null
       val sink = new RunSink {
-        def run(i: Int, term: String, docId: Long, tf: Int, dl: Int, p: Array[Int]): Unit =
-          out += Posting(names(i), term, docId, tf, p, dl)
+        def run(i: Int, term: String, docId: Long, tf: Int, dl: Int, p: Array[Int], from: Int): Unit =
+          out += Posting(names(i), term, docId, tf, java.util.Arrays.copyOfRange(p, from, from + tf), dl)
         override def fieldEnd(i: Int, docId: Long, dl: Int): Unit =
           out += Posting(names(i), DlMarker, docId, dl, emptyPos, dl)
       }
@@ -249,7 +254,10 @@ object IndexBuilder {
     * partition that tokenizes each document and appends its term runs
     * straight into per-term [[SegmentStore.RunBuf]]s, emitting
     * [[SegmentStore.MiniRun]] rows per shard — the input to
-    * [[SegmentStore.encodeRuns]], for any docsPerShard.
+    * [[SegmentStore.encodeRuns]], for any docsPerShard. A run's positions
+    * go from the tokenizer's reused buffer into the term's VByte run stream
+    * with no array in between: a mini-run row is its key, its first docId,
+    * its posting count and one byte payload.
     *
     * Semantically identical to `tokenizePostings |> encodeSegments`'s
     * internal combine (same runs, same docId order — property-pinned by
@@ -263,9 +271,9 @@ object IndexBuilder {
     * Flush granularity: a mini-run window closes at a shard boundary (docs
     * arrive docId-ascending from [[DocIds.assign]], so shards are monotonic
     * per partition) or at [[SegmentStore.FlushPostings]] buffered runs —
-    * the Lucene flush-by-RAM bound. Unordered input stays CORRECT (the
-    * encode merge handles any mini-run split; RunBuf index-sorts the rare
-    * unsorted run) but flushes more often.
+    * the Lucene flush-by-RAM bound. Unordered input stays CORRECT (RunBuf
+    * splits a term's unsorted postings into ascending mini-runs, and the
+    * encode merge sorts overlapping ones) but flushes more often.
     */
   def tokenizeMiniRuns(
       docs: DataFrame,
@@ -286,11 +294,11 @@ object IndexBuilder {
         private var nBuffered = 0
         private var out: Iterator[SegmentStore.MiniRun] = Iterator.empty
 
-        def run(i: Int, term: String, docId: Long, tf: Int, dl: Int, p: Array[Int]): Unit = {
+        def run(i: Int, term: String, docId: Long, tf: Int, dl: Int, p: Array[Int], from: Int): Unit = {
           val m = bufs(i)
           var b = m.get(term)
-          if (b == null) { b = new SegmentStore.RunBuf(); m.put(term, b) }
-          b.add(docId, tf, dl, p)
+          if (b == null) { b = new SegmentStore.RunBuf(curShard, fieldNames(i), term); m.put(term, b) }
+          b.add(docId, tf, dl, p, from)
           nBuffered += 1
         }
 
@@ -298,12 +306,8 @@ object IndexBuilder {
           val acc = new ArrayBuffer[SegmentStore.MiniRun](bufs.iterator.map(_.size).sum)
           var i = 0
           while (i < nFields) {
-            val it = bufs(i).entrySet().iterator()
-            while (it.hasNext) {
-              val e = it.next()
-              val (d, t, l, ps) = e.getValue.result()
-              acc += ((curShard, fieldNames(i), e.getKey, d(0), d, t, l, ps))
-            }
+            val it = bufs(i).values().iterator()
+            while (it.hasNext) acc ++= it.next().runs
             bufs(i).clear()
             i += 1
           }

@@ -262,69 +262,44 @@ object SegmentStore {
   }
 
   /** One map-side-combined posting run (see the combine note in
-    * [[encodeSegments]]): (shard, field, term, minDoc, docIds ascending,
-    * tfs, dls, positions).
+    * [[combineRuns]]): the `count` postings of (shard, field, term) from
+    * docId `minDoc` on, ascending, as one [[Codec.RunStreamWriter]] VByte
+    * stream. A mini-run is bytes from the tokenizer to the encoder: no
+    * column holds an array per posting.
     */
-  private[graft] type MiniRun =
-    (Int, String, String, Long, Array[Long], Array[Int], Array[Int], Array[Array[Int]])
+  private[graft] final case class MiniRun(
+      shard: Int, field: String, term: String, minDoc: Long, count: Int, postings: Array[Byte])
 
   /** Postings buffered per map task before a mini-run flush — the Lucene
-    * flush-by-RAM bound (~100 MB of primitive buffers at typical position
-    * counts); several flush windows per task just mean several mini-runs
-    * per term, which the encode-side merge folds anyway.
+    * flush-by-RAM bound: the window's run streams take about one byte per
+    * VByte value (4.2 bytes per posting on a 1,000-conversation
+    * `TranscriptGen` corpus, so ~4 MB per window), plus one small writer
+    * per distinct term. Several flush windows per task just
+    * mean several mini-runs per term, which the encode-side merge folds
+    * anyway.
     */
   private[index] val FlushPostings: Int = 1 << 20
 
-  /** Growable parallel posting buffers for one (shard, field, term)
-    * mini-run of the map-side combine (shared with the fused
-    * tokenize-to-mini-run pass, [[IndexBuilder.tokenizeMiniRuns]]).
+  /** The postings of (shard, field, term) in one map task's flush window,
+    * appended straight into a VByte run stream (shared with the fused
+    * tokenize-to-mini-run pass, [[IndexBuilder.tokenizeMiniRuns]]). A docId
+    * below the stream's last one closes the stream and opens the next, so
+    * unordered input yields several ascending mini-runs, which the encode
+    * merge sorts.
     */
-  private[index] final class RunBuf {
-    private var n = 0
-    private var isSorted = true
-    private var docIds = new Array[Long](4)
-    private var tfs = new Array[Int](4)
-    private var dls = new Array[Int](4)
-    private var poss = new Array[Array[Int]](4)
-    def add(docId: Long, tf: Int, dl: Int, p: Array[Int]): Unit = {
-      if (n == docIds.length) {
-        val c = n * 2
-        docIds = java.util.Arrays.copyOf(docIds, c)
-        tfs = java.util.Arrays.copyOf(tfs, c)
-        dls = java.util.Arrays.copyOf(dls, c)
-        poss = java.util.Arrays.copyOf(poss, c)
-      }
-      if (n > 0 && docId < docIds(n - 1)) isSorted = false
-      docIds(n) = docId; tfs(n) = tf; dls(n) = dl; poss(n) = p
-      n += 1
+  private[index] final class RunBuf(shard: Int, field: String, term: String) {
+    private val stream = new Codec.RunStreamWriter
+    private var closed: List[MiniRun] = Nil
+    def add(docId: Long, tf: Int, dl: Int, positions: Array[Int], from: Int): Unit = {
+      if (stream.count > 0 && docId < stream.lastDoc) close()
+      stream.add(docId, tf, dl, positions, from)
     }
-    /** Trimmed, docId-ascending copies (input usually arrives ascending —
-      * tokenize streams docs in order — so the sort is the rare path).
-      */
-    def result(): (Array[Long], Array[Int], Array[Int], Array[Array[Int]]) =
-      if (isSorted)
-        (java.util.Arrays.copyOf(docIds, n), java.util.Arrays.copyOf(tfs, n),
-          java.util.Arrays.copyOf(dls, n), java.util.Arrays.copyOf(poss, n))
-      else sortedByDoc(docIds, tfs, dls, poss, n)
-  }
-
-  /** The first `n` entries of parallel posting buffers as new arrays,
-    * stably index-sorted by docId.
-    */
-  private def sortedByDoc(docIds: Array[Long], tfs: Array[Int], dls: Array[Int],
-      poss: Array[Array[Int]], n: Int): (Array[Long], Array[Int], Array[Int], Array[Array[Int]]) = {
-    val idx = Array.range(0, n).sortBy(docIds(_))
-    val d2 = new Array[Long](n)
-    val t2 = new Array[Int](n)
-    val l2 = new Array[Int](n)
-    val p2 = new Array[Array[Int]](n)
-    var i = 0
-    while (i < n) {
-      val j = idx(i)
-      d2(i) = docIds(j); t2(i) = tfs(j); l2(i) = dls(j); p2(i) = poss(j)
-      i += 1
+    private def close(): Unit = {
+      closed ::= MiniRun(shard, field, term, stream.firstDoc, stream.count, stream.result())
+      stream.reset()
     }
-    (d2, t2, l2, p2)
+    /** The buffered postings as mini-runs. */
+    def runs: List[MiniRun] = { if (stream.count > 0) close(); closed }
   }
 
   /** Build an index of `docs` into `dir` and commit it; returns the
@@ -408,7 +383,7 @@ object SegmentStore {
     val mkAcc = spark.sparkContext.collectionAccumulator[MarkerStat]("graft.markerstats")
     concurrently((() => {
       encodeRuns(mini, Some(linAcc), Some(mkAcc), docsPerShard)
-        .write.mode(SaveMode.Overwrite).parquet(s"$out/segments")
+        .write.options(SegmentsParquetOptions).mode(SaveMode.Overwrite).parquet(s"$out/segments")
       writeTermStats(spark, s"$out/segments", s"$out/termstats")
     }) +: sidecars.map { case (name, rows) =>
       () => rows().write.mode(SaveMode.Overwrite).parquet(s"$out/$name")
@@ -417,6 +392,17 @@ object SegmentStore {
     Generation(foldMarkerStats(mkAcc),
       linAcc.value.asScala.groupBy(_.pid).map(_._2.head).toIndexedSeq.sortBy(_.pid))
   }
+
+  /** Parquet writer options of every segments table: no dictionary on the
+    * four block payload columns. Their values are high-cardinality byte
+    * strings: a dictionary over them costs a hash per value and saves no
+    * bytes (the benchmark's index is ~0.7 % smaller without it). The other
+    * columns (field, term, block metadata) keep theirs, which do shrink
+    * the file.
+    */
+  private val SegmentsParquetOptions: Map[String, String] =
+    Seq("docBytes", "tfBytes", "dlBytes", "posBytes")
+      .map(c => s"parquet.enable.dictionary#blocks.list.element.$c" -> "false").toMap
 
   /** Run `writes` (each one or more Spark jobs) concurrently from a driver
     * pool and wait until every one has settled; only then rethrow the first
@@ -504,13 +490,13 @@ object SegmentStore {
     // 11.8 s) and the posting-row shuffle another quarter. Postings are now
     // combined into per-(shard, field, term) MINI-RUNS inside each map task
     // first — the Lucene flush-then-merge shape: the exchange ships one row
-    // per term per flush window (~vocab-sized, not corpus-sized; same
-    // payload bytes), and the reduce sort orders run KEYS instead of every
-    // posting. The encode tasks merge a term's mini-runs back into one
-    // docId-ordered run: mini-runs are docId-sorted and (build path) cover
-    // disjoint docId ranges, so the merge is a concatenation; overlapping
-    // ranges (possible on exotic inputs) fall back to an index sort of that
-    // run. The encoder then sees EXACTLY the posting sequence the old
+    // per term per flush window (~vocab-sized, not corpus-sized), its
+    // postings one VByte byte stream, and the reduce sort orders run KEYS
+    // instead of every posting. The encode tasks merge a term's mini-runs
+    // back into one docId-ordered run: mini-runs are docId-sorted and (build
+    // path) cover disjoint docId ranges, so the merge is a concatenation;
+    // overlapping ranges (unordered input) fall back to a sort of that run.
+    // The encoder then sees EXACTLY the posting sequence the old
     // per-posting sort produced, so every SegmentRow — blocks, stats,
     // min/max — is bit-identical (SegmentSpec/StreamingSpec/WandSpec +
     // the seg_* oracle gates pin this end-to-end).
@@ -525,34 +511,34 @@ object SegmentStore {
     // coalescing merges whole post-shuffle partitions so the whole-shards-
     // per-partition invariant the marker reconstruction needs is preserved.
     postings.mapPartitions { it =>
-      new Iterator[SegmentStore.MiniRun] {
-        private var out: Iterator[SegmentStore.MiniRun] = Iterator.empty
+      new Iterator[MiniRun] {
+        private var out: Iterator[MiniRun] = Iterator.empty
         private def refill(): Unit = {
           val bufs = new scala.collection.mutable.HashMap[(Int, String, String), RunBuf]()
           var buffered = 0
           while (it.hasNext && buffered < FlushPostings) {
             val p = it.next()
+            require(p.positions.length == p.tf,
+              s"posting (${p.field}, ${p.term}, ${p.docId}) carries ${p.positions.length} positions for tf ${p.tf}")
             val shard = (p.docId / docsPerShard).toInt
-            bufs.getOrElseUpdate((shard, p.field, p.term), new RunBuf())
-              .add(p.docId, p.tf, p.dl, p.positions)
+            bufs.getOrElseUpdate((shard, p.field, p.term), new RunBuf(shard, p.field, p.term))
+              .add(p.docId, p.tf, p.dl, p.positions, 0)
             buffered += 1
           }
-          out = bufs.iterator.map { case ((shard, field, term), b) =>
-            val (d, t, l, ps) = b.result()
-            (shard, field, term, d(0), d, t, l, ps)
-          }
+          out = bufs.valuesIterator.flatMap(_.runs)
         }
         def hasNext: Boolean = {
           while (!out.hasNext && it.hasNext) refill()
           out.hasNext
         }
-        def next(): SegmentStore.MiniRun = out.next()
+        def next(): MiniRun = out.next()
       }
     }
   }
 
   /** The post-combine half of [[encodeSegments]]: shard-shuffle the
-    * mini-runs, merge each (shard, field, term)'s runs docId-ascending, and
+    * mini-runs, decode each (shard, field, term)'s run streams
+    * docId-ascending into one task's reusable [[Codec.RunBuffers]], and
     * block-encode. Callable directly with mini-runs built by the FUSED
     * tokenize pass ([[IndexBuilder.tokenizeMiniRuns]]), which skips the
     * per-posting object stream entirely.
@@ -570,47 +556,24 @@ object SegmentStore {
     * always do, and a sparser offset raises an IllegalArgumentException.
     */
   private[graft] def encodeRuns(
-      mini: Dataset[SegmentStore.MiniRun],
+      mini: Dataset[MiniRun],
       lineageAcc: Option[org.apache.spark.util.CollectionAccumulator[LineageRow]],
       markerAcc: Option[org.apache.spark.util.CollectionAccumulator[MarkerStat]],
       docsPerShard: Long): Dataset[SegmentRow] = {
     val spark = mini.sparkSession
     import spark.implicits._
     val sortedRuns = mini
-      .toDF("shard", "field", "term", "minDoc", "docIds", "tfs", "dls", "poss")
       .repartition(col("shard"))
       .sortWithinPartitions(col("shard"), col("field"), col("term"), col("minDoc"))
-      .as[SegmentStore.MiniRun]
 
-    val encodeFn = (pid: Int, it: Iterator[SegmentStore.MiniRun]) => {
+    val encodeFn = (pid: Int, it: Iterator[MiniRun]) => {
       val src = it.buffered
-      // reusable run buffers + encoder per task (VERDICT r3 #1b): no boxed
+      // reusable run buffers + encoder per task (VERDICT r3 #1b): no
       // per-posting objects in the build's widest stage — the allocation
       // bandwidth the N→4N scaling gate is sensitive to
+      val run = new Codec.RunBuffers
       val enc = new Codec.RunEncoder
       new Iterator[SegmentRow] {
-        private var cap = 1024
-        private var docIds = new Array[Long](cap)
-        private var tfs = new Array[Int](cap)
-        private var dls = new Array[Int](cap)
-        private var poss = new Array[Array[Int]](cap)
-        private def grow(): Unit = {
-          cap *= 2
-          docIds = java.util.Arrays.copyOf(docIds, cap)
-          tfs = java.util.Arrays.copyOf(tfs, cap)
-          dls = java.util.Arrays.copyOf(dls, cap)
-          poss = java.util.Arrays.copyOf(poss, cap)
-        }
-        /** Index-sort the first `n` buffered postings by docId (the rare
-          * overlapping-mini-run fallback — see the merge note above).
-          */
-        private def sortRun(n: Int): Unit = {
-          val (d2, t2, l2, p2) = sortedByDoc(docIds, tfs, dls, poss, n)
-          System.arraycopy(d2, 0, docIds, 0, n)
-          System.arraycopy(t2, 0, tfs, 0, n)
-          System.arraycopy(l2, 0, dls, 0, n)
-          System.arraycopy(p2, 0, poss, 0, n)
-        }
         // marker-reconstruction state: the current (shard, field) group's
         // distinct-doc bitset + stats. The bitset grows on demand: docIds
         // are dense (DocIds.assign), so it tops out at the shard's ACTUAL
@@ -633,9 +596,9 @@ object SegmentStore {
         def hasNext: Boolean = src.hasNext || mField != null
         def next(): SegmentRow = {
           if (!src.hasNext) return flushMarker() // tail group's marker
-          val shard = src.head._1
-          val field = src.head._2
-          val term = src.head._3
+          val shard = src.head.shard
+          val field = src.head.field
+          val term = src.head.term
           require(term != IndexBuilder.DlMarker,
             s"encode input carries a dl-marker run for ($shard, $field); markers are " +
               "reconstructed by the encode, never shipped")
@@ -643,29 +606,22 @@ object SegmentStore {
             return flushMarker() // group changed: emit previous marker first
           }
           if (mField == null) { mShard = shard; mField = field }
-          // merge the key's mini-runs into the reusable buffers; min/max and
-          // cf accumulate during the append (order-insensitive)
-          var n = 0
-          var cf = 0L
-          var minDoc = Long.MaxValue
-          var maxDoc = Long.MinValue
+          // decode the key's mini-runs into the reusable buffers; they arrive
+          // minDoc-ascending, so the merge is a concatenation unless two
+          // runs overlap
+          run.clear()
           var runSorted = true
-          while (src.hasNext && src.head._1 == shard &&
-            src.head._2 == field && src.head._3 == term) {
+          while (src.hasNext && src.head.shard == shard &&
+            src.head.field == field && src.head.term == term) {
             val r = src.next()
-            val (rd, rt, rl, rp) = (r._5, r._6, r._7, r._8)
-            if (n > 0 && rd(0) < docIds(n - 1)) runSorted = false
-            if (rd(0) < minDoc) minDoc = rd(0)
-            if (rd(rd.length - 1) > maxDoc) maxDoc = rd(rd.length - 1)
-            var i = 0
-            while (i < rd.length) {
-              if (n == cap) grow()
-              docIds(n) = rd(i); tfs(n) = rt(i); dls(n) = rl(i); poss(n) = rp(i)
-              n += 1
-              cf += rt(i)
-              i += 1
-            }
+            if (run.n > 0 && r.minDoc < run.docIds(run.n - 1)) runSorted = false
+            run.appendStream(r.postings, r.minDoc, r.count)
           }
+          if (!runSorted) run.sortByDoc()
+          val n = run.n
+          val docIds = run.docIds
+          val minDoc = docIds(0)
+          val maxDoc = docIds(n - 1)
           // marker fold: count each (field, doc) once across all its term
           // runs, in any order, by its offset inside the shard
           val base = shard.toLong * docsPerShard
@@ -674,21 +630,22 @@ object SegmentStore {
               s"(docsPerShard = $docsPerShard); a docId's offset inside its shard must be " +
               s"<= Int.MaxValue (${Int.MaxValue}) — assign dense docIds (DocIds.assign) " +
               "or use a smaller docsPerShard")
+          var cf = 0L
           var i = 0
           while (i < n) {
+            cf += run.tfs(i)
             val docId = docIds(i)
             val local = (docId - base).toInt
             if (!mBits.get(local)) {
               mBits.set(local)
               mCount += 1
-              mSum += dls(i)
+              mSum += run.dls(i)
               if (docId < mMin) mMin = docId
               if (docId > mMax) mMax = docId
             }
             i += 1
           }
-          if (!runSorted) sortRun(n)
-          val blocks = enc.encodeLocal(docIds, tfs, dls, poss, n)
+          val blocks = enc.encodeLocal(run)
           var bytes = 0L
           blocks.foreach(b => bytes +=
             b.docBytes.length + b.tfBytes.length + b.dlBytes.length + b.posBytes.length)

@@ -591,4 +591,53 @@ class SegmentSpec extends SparkSpec {
     val got = envelope(resumed)
     assert(got.nonEmpty && got === envelope(whole))
   }
+
+  /** Every SegmentRow field, blocks byte for byte, in key order. */
+  private def canonRows(rows: Seq[SegmentRow]) = rows.sortBy(r => (r.shard, r.field, r.term, r.minDoc))
+    .map(r => (r.shard, r.field, r.term, r.df, r.cf, r.minDoc, r.maxDoc, r.bytes,
+      r.blocks.map(b => (b.firstDoc, b.lastDoc, b.count, b.maxTf, b.maxTfNorm, b.encAvgdl,
+        b.minPos, b.maxPos, b.docBytes.toSeq, b.tfBytes.toSeq, b.dlBytes.toSeq, b.posBytes.toSeq))))
+
+  test("unordered postings: split and overlapping mini-runs encode like the fused path") {
+    val postings = IndexBuilder.tokenizePostings(docs, "docId", fields)
+    // 3 partitions holding interleaved docIds; inside each, docIds descend,
+    // or ascend in 5 interleaved sequences — no term's postings arrive in
+    // docId order, and its postings from the 3 partitions interleave
+    val scrambles = Seq(
+      "descending" -> Seq(col("docId").desc),
+      "5 ascending sequences" -> Seq(col("docId") % 5, col("docId")))
+    Seq(257L, 5000000000L).foreach { dps =>
+      val fused = canonRows(SegmentStore.encodeRuns(
+        IndexBuilder.tokenizeMiniRuns(docs, "docId", fields, dps), None, None, dps).collect().toSeq)
+      scrambles.foreach { case (name, order) =>
+        val scrambled = postings.repartition(3, col("docId") % 3).sortWithinPartitions(order: _*)
+        val mini = SegmentStore.combineRuns(scrambled, dps)
+        val keys = mini.toDF().select(mini.columns.take(3).map(col): _*) // (shard, field, term)
+        assert(mini.count() > keys.distinct().count(), name)
+        val rows = SegmentStore.encodeRuns(mini, None, None, dps).collect().toSeq
+        assert(canonRows(rows) === fused, s"$name, docsPerShard = $dps")
+      }
+    }
+  }
+
+  test("a build's mini-runs are byte streams and shuffle under half the array layout's bytes") {
+    import org.apache.spark.sql.types._
+    def nestsArrays(t: DataType): Boolean = t match {
+      case ArrayType(e, _) => e.isInstanceOf[ArrayType] || nestsArrays(e)
+      case StructType(fs) => fs.exists(f => nestsArrays(f.dataType))
+      case MapType(k, v, _) => nestsArrays(k) || nestsArrays(v)
+      case _ => false
+    }
+    val schema = IndexBuilder.tokenizeMiniRuns(docs, "docId", fields, 257).schema
+    assert(!schema.fields.exists(f => nestsArrays(f.dataType)), schema.treeString)
+    // an array column of a mini-run row would hold one entry per posting
+    assert(!schema.fields.exists(_.dataType.isInstanceOf[ArrayType]), schema.treeString)
+    val dir = Files.createTempDirectory("graft-seg-shuffle").toString
+    val shape = shapeOf(SegmentStore.build(docs, "docId", fields, dir, docsPerShard = 257))
+    info(s"build shuffle write: ${shape.shuffleBytes} bytes")
+    // the same build with one docId/tf/dl array per mini-run and one
+    // position array per posting
+    val arrayLayoutBytes = 1639666L
+    assert(shape.shuffleBytes < arrayLayoutBytes / 2, shape.toString)
+  }
 }
