@@ -99,12 +99,6 @@ object Codec {
     }
   }
 
-  /** Reads a VLong from `bytes` at `pos`; returns (value, newPos). */
-  def readVLong(bytes: Array[Byte], pos: Int): (Long, Int) = {
-    val r = new VByteReader(bytes, pos)
-    (r.next(), r.position)
-  }
-
   // ---- posting runs ---------------------------------------------------
 
   /** One docId-ascending posting run as ONE VByte stream — a build

@@ -245,11 +245,6 @@ object IndexBuilder {
     }
   }
 
-  def tokenizePostings(docs: DataFrame, docIdCol: String, fields: Seq[FieldDef]): Dataset[Posting] = {
-    import docs.sparkSession.implicits._
-    tokenizePostingsWithMarkers(docs, docIdCol, fields).filter(_.term != DlMarker)
-  }
-
   /** FUSED tokenize → map-side posting combine (round 6): one loop per
     * partition that tokenizes each document and appends its term runs
     * straight into per-term [[SegmentStore.RunBuf]]s, emitting
@@ -259,14 +254,14 @@ object IndexBuilder {
     * with no array in between: a mini-run row is its key, its first docId,
     * its posting count and one byte payload.
     *
-    * Semantically identical to `tokenizePostings |> encodeSegments`'s
-    * internal combine (same runs, same docId order — property-pinned by
-    * SegmentSpec's fused-≡-streamed case), but the per-posting `Posting`
-    * object, the `(shard, field, term)` tuple key allocated per map lookup,
-    * and the per-document output buffer are all gone: at bench scale that
-    * was ~36M short-lived objects per build riding the allocation/memory
-    * bandwidth the wide (4-core) scaling child is bounded by. Emits NO
-    * dl-marker rows: the encode tasks reconstruct them.
+    * The combine happens before the shuffle, as Lucene flushes in-RAM
+    * postings and merges the flushed segments: the exchange ships one row
+    * per term per flush window (vocab-sized, not corpus-sized), and the
+    * encode side sorts run keys, not postings (a shuffle of one row per
+    * posting, sorted per posting inside the encode, cost three quarters of
+    * the encode stage at 4 cores / 613k turns). No object per posting and
+    * no per-document output buffer are made. Emits NO dl-marker rows: the
+    * encode tasks reconstruct them.
     *
     * Flush granularity: a mini-run window closes at a shard boundary (docs
     * arrive docId-ascending from [[DocIds.assign]], so shards are monotonic

@@ -261,17 +261,20 @@ object SegmentStore {
     Files.move(tmp, path, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
-  /** One map-side-combined posting run (see the combine note in
-    * [[combineRuns]]): the `count` postings of (shard, field, term) from
-    * docId `minDoc` on, ascending, as one [[Codec.RunStreamWriter]] VByte
-    * stream. A mini-run is bytes from the tokenizer to the encoder: no
-    * column holds an array per posting.
+  /** One posting run of (shard, field, term), the input row of
+    * [[encodeRuns]]: its `count` postings from docId `minDoc` on,
+    * ascending, as one [[Codec.RunStreamWriter]] VByte stream. The build
+    * and the appender make them in the tokenize pass
+    * ([[IndexBuilder.tokenizeMiniRuns]]), [[optimize]] one per segment row
+    * from its live postings. A mini-run is bytes from its producer to the
+    * encoder: no column holds an array per posting.
     */
   private[graft] final case class MiniRun(
       shard: Int, field: String, term: String, minDoc: Long, count: Int, postings: Array[Byte])
 
   /** Postings buffered per map task before a mini-run flush — the Lucene
-    * flush-by-RAM bound: the window's run streams take about one byte per
+    * flush-by-RAM bound, so a giant input split cannot grow the tokenize
+    * pass without bound: the window's run streams take about one byte per
     * VByte value (4.2 bytes per posting on a 1,000-conversation
     * `TranscriptGen` corpus, so ~4 MB per window), plus one small writer
     * per distinct term. Several flush windows per task just
@@ -280,12 +283,13 @@ object SegmentStore {
     */
   private[index] val FlushPostings: Int = 1 << 20
 
-  /** The postings of (shard, field, term) in one map task's flush window,
-    * appended straight into a VByte run stream (shared with the fused
-    * tokenize-to-mini-run pass, [[IndexBuilder.tokenizeMiniRuns]]). A docId
-    * below the stream's last one closes the stream and opens the next, so
-    * unordered input yields several ascending mini-runs, which the encode
-    * merge sorts.
+  /** The postings of (shard, field, term) in one flush window of
+    * [[IndexBuilder.tokenizeMiniRuns]], appended straight into a VByte run
+    * stream. A docId below the stream's last one closes the stream and
+    * opens the next, so unordered input yields several ascending mini-runs.
+    * The encode merge concatenates a key's mini-runs in `minDoc` order —
+    * docId-disjoint runs, as dense ascending docIds give, need nothing
+    * more — and sorts a run only when two of its mini-runs overlap.
     */
   private[index] final class RunBuf(shard: Int, field: String, term: String) {
     private val stream = new Codec.RunStreamWriter
@@ -467,81 +471,12 @@ object SegmentStore {
   def writeSpec(spark: SparkSession, dir: String, fields: Seq[FieldDef]): Unit =
     writeCommit(dir, lastCommit(dir).getOrElse(Commit()).copy(fields = fields))
 
-  /** The encode pipeline over a posting stream: [[combineRuns]], then
-    * [[encodeRuns]] (shard shuffle, run merge, marker reconstruction, block
-    * encode). `postings` must not carry dl-marker rows.
-    */
-  def encodeSegments(postings: Dataset[Posting], docsPerShard: Long): Dataset[SegmentRow] =
-    encodeRuns(combineRuns(postings, docsPerShard), None, None, docsPerShard)
-
-  /** The map-side run combine of a posting stream into mini-runs. The
-    * build and the appender make mini-runs in the fused tokenize pass
-    * instead; this posting-level entry serves [[optimize]], whose decoded
-    * postings pass a tombstone anti-join first.
-    */
-  private[graft] def combineRuns(postings: Dataset[Posting], docsPerShard: Long): Dataset[MiniRun] = {
-    val spark = postings.sparkSession
-    import spark.implicits._
-    // ---- map-side run combine (round 6; guide §2.3 "aggregate before you
-    // shuffle"). The old shape shuffled ONE ROW PER POSTING and then
-    // Tungsten-sorted every posting row by (shard, field, term, docId)
-    // inside the encode partitions — measured at 4 cores / 613k turns that
-    // in-partition sort alone was HALF the whole encode stage (5.7 s of
-    // 11.8 s) and the posting-row shuffle another quarter. Postings are now
-    // combined into per-(shard, field, term) MINI-RUNS inside each map task
-    // first — the Lucene flush-then-merge shape: the exchange ships one row
-    // per term per flush window (~vocab-sized, not corpus-sized), its
-    // postings one VByte byte stream, and the reduce sort orders run KEYS
-    // instead of every posting. The encode tasks merge a term's mini-runs
-    // back into one docId-ordered run: mini-runs are docId-sorted and (build
-    // path) cover disjoint docId ranges, so the merge is a concatenation;
-    // overlapping ranges (unordered input) fall back to a sort of that run.
-    // The encoder then sees EXACTLY the posting sequence the old
-    // per-posting sort produced, so every SegmentRow — blocks, stats,
-    // min/max — is bit-identical (SegmentSpec/StreamingSpec/WandSpec +
-    // the seg_* oracle gates pin this end-to-end).
-    //
-    // Memory bound: a map task buffers at most FlushPostings postings
-    // before flushing its mini-runs downstream — Lucene's flush-by-RAM —
-    // so a giant input split cannot grow the combine without bound.
-    //
-    // Shard exchange notes (unchanged): hash-partition by shard (shard
-    // sizes are bounded by docsPerShard — balanced by construction); no
-    // explicit partition count, AQE coalesces from observed sizes, and
-    // coalescing merges whole post-shuffle partitions so the whole-shards-
-    // per-partition invariant the marker reconstruction needs is preserved.
-    postings.mapPartitions { it =>
-      new Iterator[MiniRun] {
-        private var out: Iterator[MiniRun] = Iterator.empty
-        private def refill(): Unit = {
-          val bufs = new scala.collection.mutable.HashMap[(Int, String, String), RunBuf]()
-          var buffered = 0
-          while (it.hasNext && buffered < FlushPostings) {
-            val p = it.next()
-            require(p.positions.length == p.tf,
-              s"posting (${p.field}, ${p.term}, ${p.docId}) carries ${p.positions.length} positions for tf ${p.tf}")
-            val shard = (p.docId / docsPerShard).toInt
-            bufs.getOrElseUpdate((shard, p.field, p.term), new RunBuf(shard, p.field, p.term))
-              .add(p.docId, p.tf, p.dl, p.positions, 0)
-            buffered += 1
-          }
-          out = bufs.valuesIterator.flatMap(_.runs)
-        }
-        def hasNext: Boolean = {
-          while (!out.hasNext && it.hasNext) refill()
-          out.hasNext
-        }
-        def next(): MiniRun = out.next()
-      }
-    }
-  }
-
-  /** The post-combine half of [[encodeSegments]]: shard-shuffle the
-    * mini-runs, decode each (shard, field, term)'s run streams
-    * docId-ascending into one task's reusable [[Codec.RunBuffers]], and
-    * block-encode. Callable directly with mini-runs built by the FUSED
-    * tokenize pass ([[IndexBuilder.tokenizeMiniRuns]]), which skips the
-    * per-posting object stream entirely.
+  /** The encode of every generation writer's mini-runs: shard-shuffle
+    * them, decode each (shard, field, term)'s run streams docId-ascending
+    * into one task's reusable [[Codec.RunBuffers]], and block-encode. The
+    * shuffle hash-partitions by shard with no explicit partition count:
+    * shards are bounded by docsPerShard, and AQE's coalescing merges whole
+    * post-shuffle partitions, so every partition still holds whole shards.
     *
     * dl markers are always reconstructed here, never read from the input
     * (a run with the [[IndexBuilder.DlMarker]] term is rejected — it would
@@ -727,40 +662,57 @@ object SegmentStore {
   }
 
   /** `_optimize` analog (reference DatabaseIndexer.java:274-279,
-    * forceMerge(1)): decode every run, drop tombstoned docs, and re-encode
-    * each (shard, field, term) as a single fresh run with tight blocks.
-    * Writes a full replacement index dir at `outDir` and commits it with
-    * the source's spec, shard width and appender position — a maintenance
-    * op never re-shards the corpus, and an appender resumes after it.
+    * forceMerge(1)): merge each (shard, field, term)'s runs into a single
+    * fresh run with tight blocks, dropping tombstoned docs. As a Lucene
+    * merge does, it reads the existing postings and never re-inverts a
+    * document: each segment row becomes one mini-run of its live postings,
+    * and [[encodeRuns]] merges a key's runs from every generation. Writes a
+    * full replacement index dir at `outDir` and commits it with the
+    * source's spec, shard width and appender position — a maintenance op
+    * never re-shards the corpus, and an appender resumes after it.
     *
-    * Single-pass like the build: decode → anti-join → ONE [[writeGeneration]]
-    * call; the encode tasks reconstruct each (shard, field)'s marker row
-    * from the postings they already see (marker segment rows are stats-only
-    * in EVERY index, so the decode never recovers marker postings), and
-    * term/field stats fold from the new segments' metadata.
+    * Single-pass like the build: a streaming map over the segment rows
+    * feeds ONE [[writeGeneration]] call. The stats-only marker rows are not
+    * read: the encode tasks reconstruct each (shard, field)'s marker row
+    * from the live postings, and term/field stats fold from the new
+    * segments' metadata.
     */
   def optimize(spark: SparkSession, dir: String, outDir: String): Unit = {
     import spark.implicits._
     val source = readCommit(dir)
     val dps = required(dir, "docsPerShard", source.docsPerShard)
-    // tombstones dropped via anti-join (never a driver-side Set — at scale
-    // deletes are normal state, potentially corpus-sized)
+    // each shard's deletes as one sorted array, bounded by the shard width:
+    // no driver-side set (at scale deletes are normal state, potentially
+    // corpus-sized) and no row per posting
     val deleted = deletedDocsDF(spark, dir)
-    val decoded: Dataset[Posting] = readSegments(spark, s"$dir/segments").as[SegmentRow]
-      .flatMap { row =>
-        row.blocks.iterator.flatMap(Codec.decode(_).iterator)
-          .map(d => Posting(row.field, row.term, d.docId, d.tf, d.positions, d.dl))
+    val shardDeletes = deleted
+      .groupBy((col("docId") / lit(dps)).cast("int").as("shard"))
+      .agg(array_sort(collect_set(col("docId"))).as("deleted"))
+    val rows = readSegments(spark, s"$dir/segments")
+      .filter(col("term") =!= IndexBuilder.DlMarker)
+      .join(shardDeletes, Seq("shard"), "left")
+      .select(struct(SegmentRowSchema.fieldNames.map(col): _*).as("_1"), col("deleted").as("_2"))
+      .as[(SegmentRow, Array[Long])]
+    val mini = rows.flatMap { case (row, dead) =>
+      val live = new Codec.RunStreamWriter
+      row.blocks.foreach { b =>
+        val d = Codec.decodeDocs(b)
+        val positions = Codec.decodePositions(b, d.tfs)
+        var i = 0
+        while (i < b.count) {
+          if (dead == null || java.util.Arrays.binarySearch(dead, d.docIds(i)) < 0)
+            live.add(d.docIds(i), d.tfs(i), d.dls(i), positions(i), 0)
+          i += 1
+        }
       }
-    // re-select in Posting declaration order: the using-join moves docId to
-    // the front, and combineRuns binds a positional tuple encoder
-    val postings = decoded.join(deleted, Seq("docId"), "left_anti")
-      .select("field", "term", "docId", "tf", "positions", "dl")
-      .as[Posting]
+      if (live.count == 0) None // every posting of the row is deleted
+      else Some(MiniRun(row.shard, row.field, row.term, live.firstDoc, live.count, live.result()))
+    }
     // stored sidecar: expunge tombstoned rows too — a doc-value-only query
     // (no posting conjunction) reads stored directly, so a row surviving
     // its postings would resurrect the deleted doc
     val stored = s"$dir/stored"
-    val g = writeGeneration(combineRuns(postings, dps), dps, outDir,
+    val g = writeGeneration(mini, dps, outDir,
       if (!Files.exists(Paths.get(stored))) Nil
       else Seq(storedSidecar(readInferred(spark, stored).join(deleted, Seq("docId"), "left_anti"), dps)))
     // one generation now: its field stats replace every generation's
@@ -858,9 +810,9 @@ object SegmentStore {
 
   /** Tombstoned docIds as a DataFrame — the scale-safe shape: the query
     * path routes these to their shards as doc-set rows, and [[optimize]]
-    * anti-joins them; nothing is collected to the driver. A docId deleted
-    * twice appears twice (both consumers tolerate it; no per-read
-    * shuffle). Empty when the dir has no tombstone log.
+    * joins them to their shards' segment rows; nothing is collected to the
+    * driver. A docId deleted twice appears twice (both consumers tolerate
+    * it; no per-read shuffle). Empty when the dir has no tombstone log.
     */
   def deletedDocsDF(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

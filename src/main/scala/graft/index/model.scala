@@ -90,9 +90,6 @@ trait SearchableIndex {
   */
 final case class FieldStats(field: String, docCount: Long, avgdl: Double, sumDl: Long)
 
-/** Per-(doc, field) length row. */
-final case class DocLength(docId: Long, field: String, dl: Int)
-
 /** How a source column is indexed — mirrors the reference's field types
   * (couchdb/FieldType.java): TEXT = analyzed with positions; STRING = single
   * untokenized term (exact match, sortable); numeric/date = doc-value only

@@ -75,7 +75,7 @@ object IncrementalDedup {
     // commit an empty generation in its place (caught by
     // IncrementalDedupSpec's crash test). Promotion deletes same-gen files
     // too, but that is after the history read — too late.
-    Seq("clean", "digests").foreach(sub => dropGeneration(s"$dir/$sub", s"gen$batchId"))
+    Seq("clean", "digests").foreach(sub => IncrementalIndexer.dropGeneration(s"$dir/$sub", s"gen$batchId"))
 
     val hashed = batch.withColumn("content_md5", md5(col(textCol)))
     // within-batch: ONE surviving row per digest, smallest id first
@@ -116,15 +116,6 @@ object IncrementalDedup {
     }
     SegmentStore.deleteRecursively(staging)
     SegmentStore.writeCommit(dir, SegmentStore.Commit(lastBatch = Some(batchId)))
-  }
-
-  /** Delete a (possibly partially) promoted generation's files. */
-  private def dropGeneration(liveDir: String, gen: String): Unit = {
-    val live = Paths.get(liveDir)
-    if (Files.isDirectory(live))
-      scala.util.Using.resource(Files.list(live))(_.forEach { p =>
-        if (p.getFileName.toString.startsWith(s"$gen-")) Files.delete(p)
-      })
   }
 
   private def hasParquet(dir: String): Boolean = {

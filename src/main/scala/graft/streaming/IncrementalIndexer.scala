@@ -180,19 +180,28 @@ object IncrementalIndexer {
     appendBatch(batch, batchId, dir, keyCols, fields, docsPerShard, storedColumns)
   }
 
+  /** Delete a (possibly partially) promoted generation's files from the
+    * live dir; a missing dir holds none.
+    */
+  private[streaming] def dropGeneration(liveDir: String, gen: String): Unit = {
+    val live = Paths.get(liveDir)
+    // close the directory streams (fd leak per micro-batch otherwise —
+    // exactly the long-running lifecycle this code serves; ADVICE r2)
+    if (Files.isDirectory(live))
+      scala.util.Using.resource(Files.list(live))(_.forEach { p =>
+        if (p.getFileName.toString.startsWith(s"$gen-")) Files.delete(p)
+      })
+  }
+
   /** Move a staged generation's parquet part files into the live dir under
     * deterministic names (`<gen>-00000.parquet`, …). Any live files of the
     * same generation (a previous partially-promoted attempt) are removed
-    * first, so promotion is idempotent under replay.
+    * first ([[dropGeneration]]), so promotion is idempotent under replay.
     */
   private[streaming] def promoteGeneration(stagedDir: String, liveDir: String, gen: String): Unit = {
+    dropGeneration(liveDir, gen)
     val live = Paths.get(liveDir)
     Files.createDirectories(live)
-    // close the directory streams (fd leak per micro-batch otherwise —
-    // exactly the long-running lifecycle this code serves; ADVICE r2)
-    scala.util.Using.resource(Files.list(live))(_.forEach { p =>
-      if (p.getFileName.toString.startsWith(s"$gen-")) Files.delete(p)
-    })
     val parts = scala.util.Using.resource(Files.list(Paths.get(stagedDir)))(
       _.toArray.map(_.asInstanceOf[java.nio.file.Path]))
       .filter(_.getFileName.toString.endsWith(".parquet")).sortBy(_.getFileName.toString)

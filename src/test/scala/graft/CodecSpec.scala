@@ -26,8 +26,8 @@ class CodecSpec extends AnyFunSuite with GenSamples {
     forAll(Gen.choose(0L, Long.MaxValue / 2)) { v =>
       val buf = new Codec.ByteWriter()
       Codec.writeVLong(buf, v)
-      val (got, n) = Codec.readVLong(buf.toArray, 0)
-      assert(got === v && n === buf.size)
+      val r = new Codec.VByteReader(buf.toArray)
+      assert(r.next() === v && r.position === buf.size)
     }
   }
 

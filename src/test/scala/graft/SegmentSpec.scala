@@ -246,33 +246,50 @@ class SegmentSpec extends SparkSpec {
     assert(lineage.forall(_.stage == "segments"))
     assert(lineage.forall(l => l.rowsIn > 0 && l.rowsOut > 0 && l.bytesOut > 0))
     // total postings in == total postings tokenized
-    val totalPostings = IndexBuilder.tokenizePostings(docs, "docId", fields).count()
+    val totalPostings = IndexBuilder.tokenizePostingsWithMarkers(docs, "docId", fields)
+      .filter(_.term != IndexBuilder.DlMarker).count()
     assert(lineage.map(_.rowsIn).sum === totalPostings)
   }
 
-  test("fused tokenize→mini-run path ≡ posting-stream combine, row for row (round 6)") {
+  test("a built index's runs re-encode to the same rows: optimize without deletes ≡ the build") {
     // exercise TEXT, scalar STRING, and multi-valued STRING sources
     val aug = docs
       .withColumn("words", split(col("text"), " "))
       .persist()
     val f2 = fields :+ FieldDef("word", "words", StringField)
-    def key(r: SegmentRow) = (r.shard, r.field, r.term, r.minDoc)
-    def canon(rows: Seq[SegmentRow]) = rows.sortBy(key).map(r =>
-      (r.shard, r.field, r.term, r.df, r.cf, r.minDoc, r.maxDoc, r.bytes,
-        r.blocks.map(b => (b.firstDoc, b.lastDoc, b.count, b.maxTf, b.maxTfNorm, b.encAvgdl,
-          b.minPos, b.maxPos,
-          b.docBytes.toSeq, b.tfBytes.toSeq, b.dlBytes.toSeq, b.posBytes.toSeq))))
     // a narrow shard spec, and one wider than Int.MaxValue (every doc in
     // shard 0, offsets still Int-sized)
     Seq(257L, 5000000000L).foreach { dps =>
-      val fused = SegmentStore.encodeRuns(
-        IndexBuilder.tokenizeMiniRuns(aug, "docId", f2, dps), None, None, dps).collect().toSeq
-      val streamed = SegmentStore.encodeSegments(
-        IndexBuilder.tokenizePostings(aug, "docId", f2), dps).collect().toSeq
-      assert(canon(fused) === canon(streamed), s"docsPerShard = $dps")
-      assert(fused.exists(_.term == IndexBuilder.DlMarker), s"no marker rows at docsPerShard = $dps")
+      val built = Files.createTempDirectory("graft-seg-reencode").toString
+      SegmentStore.build(aug, "docId", f2, built, docsPerShard = dps)
+      val optimized = Files.createTempDirectory("graft-seg-reencode-opt").toString
+      SegmentStore.optimize(spark, built, optimized)
+      val rows = segmentRows(optimized)
+      assert(canonRows(rows) === canonRows(segmentRows(built)), s"docsPerShard = $dps")
+      assert(SegmentStore.readFieldStatsGens(optimized) === SegmentStore.readFieldStatsGens(built),
+        s"docsPerShard = $dps")
+      assert(rows.exists(_.term == IndexBuilder.DlMarker), s"no marker rows at docsPerShard = $dps")
     }
     aug.unpersist()
+  }
+
+  test("optimize drops the runs whose every posting is deleted: ≡ a build of the surviving docs") {
+    val dps = 257L
+    val source = Files.createTempDirectory("graft-seg-drop-src").toString
+    SegmentStore.build(docs, "docId", fields, source, docsPerShard = dps)
+    // every doc of shard 1, and every doc holding tool:bash
+    val doomed = (col("docId") / lit(dps)).cast("int") === 1 || (col("tool") <=> "bash")
+    def dropped(r: SegmentRow) = r.shard == 1 || (r.field == "tool" && r.term == "bash")
+    assert(segmentRows(source).count(dropped) > 1)
+    SegmentStore.deleteDocs(docs.filter(doomed).select(col("docId")), source)
+    val optimized = Files.createTempDirectory("graft-seg-drop-opt").toString
+    SegmentStore.optimize(spark, source, optimized)
+    val survivors = Files.createTempDirectory("graft-seg-drop-live").toString
+    SegmentStore.build(docs.filter(!doomed), "docId", fields, survivors, docsPerShard = dps)
+    val rows = segmentRows(optimized)
+    assert(!rows.exists(dropped))
+    assert(canonRows(rows) === canonRows(segmentRows(survivors)))
+    assert(SegmentStore.readFieldStatsGens(optimized) === SegmentStore.readFieldStatsGens(survivors))
   }
 
   test("wide shard spec with a docId offset past Int.MaxValue inside its shard is rejected") {
@@ -592,6 +609,12 @@ class SegmentSpec extends SparkSpec {
     assert(got.nonEmpty && got === envelope(whole))
   }
 
+  /** The segment rows of an index dir, marker rows included. */
+  private def segmentRows(dir: String): Seq[SegmentRow] = {
+    import spark.implicits._
+    SegmentStore.readSegments(spark, s"$dir/segments").as[SegmentRow].collect().toSeq
+  }
+
   /** Every SegmentRow field, blocks byte for byte, in key order. */
   private def canonRows(rows: Seq[SegmentRow]) = rows.sortBy(r => (r.shard, r.field, r.term, r.minDoc))
     .map(r => (r.shard, r.field, r.term, r.df, r.cf, r.minDoc, r.maxDoc, r.bytes,
@@ -599,7 +622,6 @@ class SegmentSpec extends SparkSpec {
         b.minPos, b.maxPos, b.docBytes.toSeq, b.tfBytes.toSeq, b.dlBytes.toSeq, b.posBytes.toSeq))))
 
   test("unordered postings: split and overlapping mini-runs encode like the fused path") {
-    val postings = IndexBuilder.tokenizePostings(docs, "docId", fields)
     // 3 partitions holding interleaved docIds; inside each, docIds descend,
     // or ascend in 5 interleaved sequences — no term's postings arrive in
     // docId order, and its postings from the 3 partitions interleave
@@ -610,8 +632,8 @@ class SegmentSpec extends SparkSpec {
       val fused = canonRows(SegmentStore.encodeRuns(
         IndexBuilder.tokenizeMiniRuns(docs, "docId", fields, dps), None, None, dps).collect().toSeq)
       scrambles.foreach { case (name, order) =>
-        val scrambled = postings.repartition(3, col("docId") % 3).sortWithinPartitions(order: _*)
-        val mini = SegmentStore.combineRuns(scrambled, dps)
+        val scrambled = docs.repartition(3, col("docId") % 3).sortWithinPartitions(order: _*)
+        val mini = IndexBuilder.tokenizeMiniRuns(scrambled, "docId", fields, dps)
         val keys = mini.toDF().select(mini.columns.take(3).map(col): _*) // (shard, field, term)
         assert(mini.count() > keys.distinct().count(), name)
         val rows = SegmentStore.encodeRuns(mini, None, None, dps).collect().toSeq
